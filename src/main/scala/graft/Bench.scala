@@ -168,7 +168,7 @@ object Bench {
     // the com.sun interface is HotSpot-specific — degrade to cpu=-1
     // rather than crashing Bench on a JVM whose bean doesn't carry it.
     // One shared probe (core.PhaseLog.cpuNanos) serves Bench, PhaseLog
-    // and DegradeProbe so the sentinel handling can't drift.
+    // and the perfbench harness so the sentinel handling can't drift.
     def cpuNow(): Long = graft.core.PhaseLog.cpuNanos()
     if (cpuNow() < 0)
       System.err.println("[bench] process CPU time unavailable on this JVM")

@@ -8,24 +8,30 @@ object Verify {
       case Array(s, o)    => (s, o, None)
       // optional 3rd arg: comma-separated query names — dump ONLY those
       // (builder-side iteration aid; the driver always passes two args)
-      case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case Array(s, o, f) => (s, o, Some(f.split(",").toSeq))
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    def dump(name: String): Boolean = {
+      val t0 = System.nanoTime()
+      val ok =
+        try {
+          SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+            .mode("overwrite").parquet(s"$outDir/$name")
+          println(f"[verify] dumped $name in ${(System.nanoTime() - t0) / 1e9}%.2fs")
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
+        }
       // let the ContextCleaner release finished queries' shuffle state —
       // without a GC tick a 74-query session accumulates driver
       // bookkeeping that slows the late queries (see Bench.scala)
       System.gc()
+      ok
     }
+    val failed = only.getOrElse(SparkEntry.queries.keys.toSeq).filterNot(dump)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -42,5 +48,10 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    // a named dump checks just those queries: any failure exits non-zero
+    if (only.isDefined && failed.nonEmpty) {
+      System.err.println(s"[verify] FAILED: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

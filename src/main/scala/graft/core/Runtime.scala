@@ -65,7 +65,7 @@ object PhaseLog {
   /** Process CPU time in ns, or −1 when the JVM's bean doesn't carry it
     * (the HotSpot-specific com.sun interface; getProcessCpuTime itself
     * may also return −1 on unsupported platforms). THE one copy of this
-    * probe — Bench and DegradeProbe call it too. */
+    * probe — Bench and the perfbench harness call it too. */
   def cpuNanos(): Long =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime

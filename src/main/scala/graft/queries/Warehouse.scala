@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{PrefixSum, Tables}
 import graft.ext.Dedup
 
 /** Warehouse-side analytics the reference's batch pipeline implies but
@@ -149,52 +149,24 @@ object Warehouse {
     * where a double cumsum would be at the mercy of each engine's
     * window-sum association.
     *
-    * The global running sum is the DISTRIBUTED two-phase prefix sum of
-    * [[Ext.textPackSequences]] (r13, guide §2.4): range-partition the
-    * per-part rollup on (rev_cents desc, l_partkey), per-partition
-    * window cumsum (the window's partition key IS the physical
-    * partition — fully parallel), then |partitions|-row totals collected
-    * and broadcast back as offsets. The old
-    * `Window.orderBy(rev_cents.desc)` with no partition key planned an
-    * unpartitioned WindowExec — the whole rollup through ONE task, the
-    * canonical scale-killer at a 100 M-part catalog. localCheckpoint
-    * pins one partitioning for the offsets pass and the cumsum pass
-    * (repartitionByRange samples boundaries per job); the checkpointed
-    * relation is the DIMENSION-sized rollup, never the corpus. The
-    * grand total rides the same |partitions|-row collect. Cent sums are
-    * exact longs, (rev_cents desc, l_partkey) is a strict total order,
-    * and partition ranges are contiguous in it — the two-phase cumsum
-    * is value-identical to the global window it replaces. */
+    * The global running sum is [[graft.core.PrefixSum]] over (rev_cents
+    * desc, l_partkey), a strict total order. The tagged relation is the
+    * dimension-sized per-part rollup, never the corpus, so it is pinned
+    * with `localCheckpoint` rather than staged. */
   def winParetoAbc(s: SparkSession, dir: String): DataFrame = {
     val rev = t(s, dir, "lineitem")
       .select(col("l_partkey"),
         expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("cents"))
       .groupBy(col("l_partkey")).agg(sum(col("cents")).as("rev_cents"))
-    // no sortWithinPartitions: the offsets pass is order-free (per-pid
-    // sums) and the cumsum window sorts its pid partition itself
-    val local = rev
-      .repartitionByRange(32, col("rev_cents").desc, col("l_partkey").asc)
-      .withColumn("pid", spark_partition_id())
+    val local = PrefixSum
+      .rangeTag(rev, col("rev_cents").desc, col("l_partkey").asc)
       .localCheckpoint()
-    // pid → revenue of all EARLIER partitions (pids are ordered by the
-    // range sort, so this is the global prefix offset); total rides along
-    val (offsets, total) = {
-      var acc = 0L
-      val offs = local.groupBy(col("pid")).agg(sum(col("rev_cents")).as("t"))
-        .orderBy(col("pid"))
-        .collect().map { r =>
-          val o = (r.getInt(0), acc); acc += r.getLong(1); o
-        }.toSeq
-      (offs, acc)
-    }
-    import s.implicits._
-    val offDf = offsets.toDF("pid", "poff")
+    val (withOffset, total) = PrefixSum.offsets(local, col("rev_cents"))
     val wLocal = Window.partitionBy(col("pid"))
       .orderBy(col("rev_cents").desc, col("l_partkey"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    local
-      .withColumn("local_cum", sum(col("rev_cents")).over(wLocal))
-      .join(broadcast(offDf), "pid")
+    withOffset(local
+      .withColumn("local_cum", sum(col("rev_cents")).over(wLocal)))
       .withColumn("cum_cents", col("poff") + col("local_cum"))
       // parts-per-100k, not ppm: cum·10⁵ stays under 2⁶³ up to ~$920 B
       // of cumulative cents (ppm would overflow at sf1's ~$180 B)
@@ -600,37 +572,20 @@ object Warehouse {
     * (groupCols, orderCols) WITHOUT `Window.partitionBy(group)`'s
     * one-task-per-group sort funnel: with 5 event types, the naive
     * window hands each task 20% of the corpus at any scale. Instead the
-    * grouped generalization of [[Ext.textPackSequences]]'s two-phase
-    * prefix machinery: range-partition on (group ++ order) — a huge
-    * group SPANS many partitions — per-(pid, group) `row_number` (the
-    * window key includes the physical partition id, fully parallel),
-    * and a |pids × groups|-row count table whose per-group running sum
-    * over pid order gives each (pid, group) its global rank offset,
-    * broadcast back. The staged relation pins one range partitioning
-    * for both passes (repartitionByRange samples boundaries per job).
+    * grouped [[graft.core.PrefixSum]] over (group ++ order): a huge group
+    * SPANS many range partitions, each ranks its slice per (pid, group),
+    * and the per-group offsets of earlier pids complete the rank.
     * Adds `rn` (1-based rank within group) and `n` (group size). */
   private[queries] def groupedRank(name: String, s: SparkSession, dir: String,
       df: DataFrame, groupCols: Seq[String], orderCols: Seq[Column]): DataFrame = {
     val g = groupCols.map(col)
     val local = Ext.stage(name, s, dir)(
-      df.repartitionByRange(32, (g.map(_.asc) ++ orderCols): _*)
-        .sortWithinPartitions((g ++ orderCols): _*)
-        .withColumn("pid", spark_partition_id()))
-    val counts = local.groupBy((col("pid") +: g): _*)
-      .agg(count(lit(1)).as("c"))
-    // tiny (|pids|·|groups| rows): per-group offset of each pid = rows of
-    // the same group in EARLIER pids; per-group total rides along
-    val offs = counts
-      .withColumn("goff", coalesce(sum(col("c")).over(
-        Window.partitionBy(g: _*).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("c")).over(Window.partitionBy(g: _*)))
-      .select((col("pid") +: g) ++ Seq(col("goff"), col("n")): _*)
+      PrefixSum.rangeTag(df, (g.map(_.asc) ++ orderCols): _*))
+    val withOffset = PrefixSum.groupedOffsets(local, groupCols, lit(1L))
     val wLocal = Window.partitionBy((col("pid") +: g): _*).orderBy(orderCols: _*)
-    local
-      .withColumn("lr", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offs), "pid" +: groupCols)
+    withOffset(local.withColumn("lr", row_number().over(wLocal).cast("long")))
       .withColumn("rn", col("goff") + col("lr"))
+      .withColumnRenamed("gtotal", "n")
       .drop("pid", "lr", "goff")
   }
 
@@ -1340,79 +1295,35 @@ object Warehouse {
     * statistic AT that position — an actual data value, so the
     * transform is hash-exact with no interpolation anywhere.
     *
-    * The GLOBAL ranking is the distributed two-phase prefix machinery
-    * of [[Ext.textPackSequences]] (range-partition on (value, event_id),
-    * per-partition `row_number` — the window's partition key IS the
-    * physical partition, fully parallel — plus a |partitions|-row
-    * offset table broadcast back), NOT a `Window.orderBy` with no
-    * partition key: that shape funnels the whole corpus through one
-    * task, the canonical 100 TB scale-killer. The staged relation pins
-    * one range partitioning for both the offset pass and the rank pass
-    * (repartitionByRange samples boundaries per job). The WITHIN-group
-    * rank is [[groupedRank]]'s two-phase per-group selection — with 5
-    * event types at ~20% of the corpus each, a
-    * `Window.partitionBy(event_type)` would be the one-task-per-group
-    * funnel; now both passes rank inside (pid, group). */
+    * Both rankings are [[graft.core.PrefixSum]] row numbers on ONE
+    * staged range partitioning over (value, event_id) (r9): the global
+    * rank per pid, and the within-group rank per (pid, event_type) — for
+    * any event type, rows in an earlier range partition order strictly
+    * before rows in a later one, so the grouped offsets need no second
+    * range shuffle. No `Window.orderBy` without a partition key (the
+    * corpus through one task), and no `Window.partitionBy(event_type)`
+    * (with 5 event types at ~20% of the corpus each, one task per
+    * group). */
   def mixQuantileNormalize(s: SparkSession, dir: String): DataFrame = {
     val ev = events(s, dir).select(col("event_type"), col("value"), col("event_id"))
-    // ONE staged range partitioning serves BOTH rank passes (r9): the
-    // within-group rank does not need its own range shuffle — for any
-    // event type, rows in an earlier range partition order strictly
-    // before rows in a later one (range partitioning over all rows holds
-    // over every subset), so a per-(pid, etype) local rank plus tiny
-    // per-(pid, etype) offsets IS the groupedRank decomposition, on the
-    // global pass's partitioning. Saves a corpus range-shuffle and a
-    // second staged parquet write/read vs the r8 two-helper shape.
     val local = Ext.stage("qn_global", s, dir)(
-      ev.repartitionByRange(32, col("value").asc, col("event_id").asc)
-        .sortWithinPartitions(col("value"), col("event_id"))
-        .withColumn("pid", spark_partition_id()))
-    val counts = local.groupBy(col("pid"), col("event_type"))
-      .agg(count(lit(1)).as("c"))
-    // pid → count of all rows in EARLIER partitions (pids are ordered by
-    // the range sort, so this is the global rank offset); total = N.
-    val (offsets, n) = {
-      var acc = 0L
-      val offs = counts.groupBy(col("pid")).agg(sum(col("c")).as("c"))
-        .orderBy(col("pid"))
-        .collect().map { r =>
-          val o = (r.getInt(0), acc); acc += r.getLong(1); o
-        }.toSeq
-      (offs, acc)
-    }
-    import s.implicits._
-    val offDf = offsets.toDF("pid", "poff")
-    // tiny (≤ |pids|·|types| rows): within-pid start of each group in
-    // the pid's (etype, value, eid) sort, cross-pid per-group offset,
-    // and the group size — groupedRank's offset table, derived from the
-    // SHARED staged relation instead of a second range shuffle
-    val gOffs = counts
-      .withColumn("wstart", coalesce(sum(col("c")).over(
-        Window.partitionBy(col("pid")).orderBy(col("event_type"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("goff", coalesce(sum(col("c")).over(
-        Window.partitionBy(col("event_type")).orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("n", sum(col("c")).over(
-        Window.partitionBy(col("event_type"))))
-      .select(col("pid"), col("event_type"), col("wstart"), col("goff"),
-        col("n"))
+      PrefixSum.rangeTag(ev, col("value").asc, col("event_id").asc))
+    val (withOffset, n) = PrefixSum.offsets(local, lit(1L))
+    val withGroupOffset = PrefixSum.groupedOffsets(local, Seq("event_type"), lit(1L))
     val wA = Window.partitionBy(col("pid"))
       .orderBy(col("value").asc, col("event_id").asc)
-    val wB = Window.partitionBy(col("pid"))
-      .orderBy(col("event_type").asc, col("value").asc, col("event_id").asc)
-    val globalOrder = local
-      .withColumn("lr", row_number().over(wA).cast("long"))
-      .join(broadcast(offDf), "pid")
+    val wB = Window.partitionBy(col("pid"), col("event_type"))
+      .orderBy(col("value").asc, col("event_id").asc)
+    val globalOrder = withOffset(
+        local.withColumn("lr", row_number().over(wA).cast("long")))
       .select((col("poff") + col("lr")).as("pos"),
         col("value").as("norm_value"))
-    // within-group rank rn = local rank in the pid's group block
-    // (lrB − wstart) + the group's rows in earlier pids (goff)
-    val ranked = local
-      .withColumn("lrB", row_number().over(wB).cast("long"))
-      .join(broadcast(gOffs), Seq("pid", "event_type"))
+    // within-group rank r = lrB + goff of group size gtotal maps to the
+    // global position ⌈r·N/gtotal⌉
+    val ranked = withGroupOffset(
+        local.withColumn("lrB", row_number().over(wB).cast("long")))
       .withColumn("pos",
-        expr(s"((lrB - wstart + goff) * ${n}L + n - 1) div n"))
+        expr(s"((lrB + goff) * ${n}L + gtotal - 1) div gtotal"))
     ranked.join(globalOrder, Seq("pos"))
       .select(col("event_id"), col("event_type"), col("value"),
         col("norm_value"))
@@ -2163,11 +2074,9 @@ object Warehouse {
     * "how many sessions at once"). Boundaries are (+1 at start, −1 at
     * end) with ends ordered BEFORE starts at equal t (half-open
     * intervals — touching never double-counts), and the running sum is
-    * the DISTRIBUTED two-phase prefix sum ([[Ext]]'s `pack_local`
-    * machinery: range-partition on the total boundary order, per-pid
-    * cumsum, driver-collected 32-row pid offsets broadcast back) — the
-    * global ordered sweep WITHOUT the corpus-sized single-partition
-    * window the naive form plans.
+    * [[graft.core.PrefixSum]] over the total boundary order (t, d,
+    * event_id) — the global ordered sweep WITHOUT the corpus-sized
+    * single-partition window the naive form plans.
     *
     * Scale: one range shuffle of 2×|events| boundary rows; every window
     * is per-pid; the offset table is |pids|-sized. */
@@ -2179,25 +2088,12 @@ object Warehouse {
       .unionByName(ev.select(col("event_id"), (col("ts_us") + pad).as("t"),
         lit(-1L).as("d")))
     val local = Ext.stage("concpeak", s, dir)(
-      bounds.repartitionByRange(32, col("t"), col("d"), col("event_id"))
-        .sortWithinPartitions(col("t"), col("d"), col("event_id"))
-        .withColumn("pid", spark_partition_id()))
-    val offsets = {
-      var acc = 0L
-      local.groupBy(col("pid")).agg(sum(col("d")).as("s"))
-        .orderBy(col("pid"))
-        .collect().map { r =>
-          val o = (r.getInt(0), acc); acc += r.getLong(1); o
-        }.toSeq
-    }
-    import s.implicits._
-    val offDf = offsets.toDF("pid", "poff")
+      PrefixSum.rangeTag(bounds, col("t"), col("d"), col("event_id")))
+    val (withOffset, _) = PrefixSum.offsets(local, col("d"))
     val wPid = Window.partitionBy(col("pid"))
       .orderBy(col("t"), col("d"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val running = local
-      .withColumn("lc", sum(col("d")).over(wPid))
-      .join(broadcast(offDf), "pid")
+    val running = withOffset(local.withColumn("lc", sum(col("d")).over(wPid)))
       .withColumn("c", col("poff") + col("lc"))
     val peakRow = running.agg(max(col("c"))).head()
     // empty slice: the oracle's `max(c)` over zero boundaries is NULL —
