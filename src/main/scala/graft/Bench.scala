@@ -144,6 +144,11 @@ object Bench {
       .filter { case (n, _) =>
         included.isEmpty || included.exists(n.startsWith)
       }
+    // codegen compiles per pass (pass 1 counts the warm-up too: it is one
+    // of the pass's queries). With a class cache that holds a whole pass
+    // (Sessions.codegenReuse), pass 2 compiles only the classes that are
+    // fresh on every pass (the streaming sinks', NOTES.md).
+    val compiles0 = graft.core.PhaseLog.codegenCompiles()
     // untimed warmup: the flagship aggregate touches parquet scan, shuffle,
     // codegen, and AQE once before anything is timed. Fallback to the first
     // query if the flagship was ever renamed (a swallowed NoSuchElement
@@ -255,6 +260,7 @@ object Bench {
     // pass-2 twin reads as one-time/environmental, while an entry slow
     // in BOTH passes is a plan problem.
     val results = runPass()
+    val compilesP1 = graft.core.PhaseLog.codegenCompiles() - compiles0
     // thread count after EACH pass: equal counts prove the streaming
     // pools don't accumulate per pass (the r5 leak was +32/sink/pass;
     // what remains is Spark's keep-alive-cached block-manager pools,
@@ -263,6 +269,7 @@ object Bench {
     val threadsP1 = Thread.activeCount()
     val results2 = runPass()
     val threadsP2 = Thread.activeCount()
+    val compilesP2 = graft.core.PhaseLog.codegenCompiles() - compiles0 - compilesP1
     // second calibration AFTER both passes: the host's speed has been
     // observed to move ~2× WITHIN a session, so a start-only sample can
     // misattribute mid-run contention. start≈end ⇒ the totals were
@@ -307,6 +314,7 @@ object Bench {
     println(f"GRAFT_BENCH_SUMMARY: total=$total%.2f s pass2=$total2%.2f s " +
       f"entries=${results.size} cpu=${cpuSum(results)}%.2f s load_end=$loadAvg%.2f " +
       f"threads=${Thread.activeCount()} threads_p1=$threadsP1 threads_p2=$threadsP2 " +
+      f"compiles_p1=$compilesP1 compiles_p2=$compilesP2 " +
       f"calib_st=$calibSt%.3f calib_mt=$calibMt%.3f " +
       f"calib_end_st=$calibSt2%.3f calib_end_mt=$calibMt2%.3f " +
       f"calib_mem_st=$calibMemSt%.3f calib_mem_mt=$calibMemMt%.3f " +

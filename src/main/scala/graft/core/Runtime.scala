@@ -14,6 +14,46 @@ import org.apache.spark.storage.StorageLevel
   * to coalesce the deliberately-partitioned staged caches and can add
   * an extra shuffle to read them — measured no gain here, reverted). */
 object Sessions {
+  /** Settings that let a repeated plan reuse its generated classes
+    * instead of recompiling them on every run (the paper's batch pipeline
+    * runs the same plan shapes again and again).
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's JVM-wide LRU
+    * cache of generated classes (default 100). An entry is hit only if
+    * fewer than `maxEntries` other classes are touched between two uses
+    * of it, so a query set run cyclically with a working set above the
+    * bound never hits: one `pipeline_blindzone` pass needs about 170
+    * classes, and at the default every warm pass recompiled all of them
+    * (3.2 s of compiles in a 12 s pass on the dense fleet; a recompiled
+    * class also loses its JIT output). Measured with a non-evicting cache
+    * over two full registry passes at sf0.01 (`graft.Bench`, all 282
+    * entries, both settings here): the first pass compiles R = 3,458
+    * distinct classes, the second compiles F = 357 fresh ones again (the
+    * streaming sinks', NOTES.md). Between two uses of a reusable class at
+    * most R + F = 3,815 others are touched, so a bound above that never
+    * evicts one; 8,192 is the power of two above R + F with 2× headroom.
+    * An entry (class, loader and bytecode) holds about 20–25 KB of heap:
+    * about 85 MB after two registry passes and 180 MB for a full cache;
+    * perfbench's retained heap rose 1.4 MB on the fleet pipeline and
+    * 4.6 MB on its registry slice.
+    *
+    * `spark.sql.codegen.useIdInClassName = false` drops the codegen stage
+    * id from whole-stage class names. AQE numbers the stages it re-plans
+    * in the order earlier stages finish, so with the id in the name a
+    * warm `pipeline_blindzone` run recompiled 2–4 classes whose source
+    * differed only in that number, in 6 of 21 runs on a loaded host
+    * (none in 21 without it). Classes are cached by their full source,
+    * so only identical code is shared.
+    *
+    * The cache is sized ONCE per JVM, in `CodeGenerator`'s static
+    * initialiser at the first codegen, from the session active then. The
+    * bound therefore only counts on a session built before any codegen
+    * runs: [[local]] is that session in every `main` and in the perfbench
+    * harness, and the test session applies this same map. */
+  val codegenReuse: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
   def local(cpus: String): org.apache.spark.sql.SparkSession = {
     val s = org.apache.spark.sql.SparkSession.builder()
       .master(s"local[$cpus]")
@@ -46,6 +86,7 @@ object Sessions {
       .config("spark.sql.resultQueryStage.maxThreadThreshold", cpus)
       .config("spark.sql.broadcastExchange.maxThreadThreshold", cpus)
       .config("spark.ui.enabled", "false")
+      .config(codegenReuse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
@@ -60,7 +101,10 @@ object Sessions {
   * previous line (round-4 verdict #1a): wall-only phases could not
   * distinguish GC thrash from shuffle recompute when a phase inflated —
   * cpu ≫ wall×cores means spin/GC, gc ≈ the inflation means heap
-  * pressure, cpu ≈ flat means host contention. */
+  * pressure, cpu ≈ flat means host contention. It also carries the
+  * codegen compile count and compile seconds since the previous line: a
+  * warm pass that still compiles is a pass whose generated classes fell
+  * out of the class cache ([[Sessions.codegenReuse]]). */
 object PhaseLog {
   /** Process CPU time in ns, or −1 when the JVM's bean doesn't carry it
     * (the HotSpot-specific com.sun interface; getProcessCpuTime itself
@@ -77,20 +121,33 @@ object PhaseLog {
       .asScala.map(_.getCollectionTime.max(0L)).sum
   }
 
+  /** Generated classes compiled in this JVM so far (each cache miss of
+    * Spark's class cache compiles one). */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** Nanoseconds spent compiling generated classes since the last
+    * `CodeGenerator.resetCompileTime` (this log never resets it). */
+  private def codegenNanos(): Long =
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime
+
   /** Returns a logger stamping wall since start plus per-phase
-    * wall/cpu/gc deltas since the previous log call. */
+    * wall/cpu/gc and codegen deltas since the previous log call. */
   def start(prefix: String): String => Unit = {
     val t0 = System.nanoTime()
     var lastT = t0
     var lastC = cpuNanos()
     var lastG = gcMillis()
+    var lastK = codegenCompiles()
+    var lastKt = codegenNanos()
     tag => {
       val (t, c, g) = (System.nanoTime(), cpuNanos(), gcMillis())
+      val (k, kt) = (codegenCompiles(), codegenNanos())
       val dCpu = if (c < 0 || lastC < 0) -1.0 else (c - lastC) / 1e9
       println(f"[graft] $prefix $tag at ${(t - t0) / 1e9}%.2f s " +
         f"(phase wall=${(t - lastT) / 1e9}%.2f cpu=$dCpu%.2f " +
-        f"gc=${(g - lastG) / 1e3}%.2f s)")
-      lastT = t; lastC = c; lastG = g
+        f"gc=${(g - lastG) / 1e3}%.2f s, compiles=${k - lastK} " +
+        f"codegen=${(kt - lastKt) / 1e9}%.2f s)")
+      lastT = t; lastC = c; lastG = g; lastK = k; lastKt = kt
     }
   }
 }

@@ -4631,7 +4631,16 @@ object Ext {
     * file per input partition keeps read parallelism at file
     * granularity (the standard practice); a splittable codec or
     * parquet is the real scale path, and this query is the
-    * compatibility surface for feeds that arrive .gz. */
+    * compatibility surface for feeds that arrive .gz.
+    *
+    * The timestamp digest is split so no per-bucket long sum can wrap
+    * at any corpus this repo builds: a plain `sum(ts_us)` (≈1.7e15 per
+    * row) overflows past about 5,400 rows a bucket, and the 10× corpus
+    * failed with ARITHMETIC_OVERFLOW. A row's (day, µs-of-day) pair is
+    * its timestamp, so a changed timestamp still moves `sum_day` or
+    * `sum_us_of_day`, and the digest still proves the round trip
+    * lossless. Beside each sum is the row count a bucket may hold
+    * before it overflows (ANSI mode then fails the query, never wraps). */
   def srcGzipRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val staged = events(s, dir).filter(col("event_type") === "view")
       .select(col("event_id"), col("user_id"), col("ts_us"), col("value"))
@@ -4643,8 +4652,14 @@ object Ext {
       .csv(out)
       .groupBy((col("user_id") % 16).as("bucket"))
       .agg(count(lit(1)).as("n"),
+        // event ids < 1e9: safe up to 9.2e9 rows
         sum(col("event_id")).as("sum_event"),
-        sum(col("ts_us")).as("sum_ts"),
+        // day number since 1970 < 1e5 (past year 2200): 9.2e13 rows
+        sum(expr("ts_us div 86400000000")).as("sum_day"),
+        // µs within the day < 8.64e10: 1.07e8 rows (the 10× corpus
+        // holds about 12,500 a bucket)
+        sum(expr("ts_us % 86400000000")).as("sum_us_of_day"),
+        // value < 1e7 (sf0.1 max 464), so cents < 1e9: 9.2e9 rows
         sum(floor(col("value") * 100).cast("long")).as("sum_cents"))
       .orderBy(col("bucket"))
   }

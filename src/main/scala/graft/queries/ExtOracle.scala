@@ -2128,7 +2128,9 @@ object ExtOracle {
     "src_gzip_roundtrip" ->
       """SELECT user_id % 16 AS bucket, count(*) AS n,
            CAST(sum(event_id) AS BIGINT) AS sum_event,
-           CAST(sum(epoch_us(ts)) AS BIGINT) AS sum_ts,
+           CAST(sum(epoch_us(ts) // 86400000000) AS BIGINT) AS sum_day,
+           CAST(sum(epoch_us(ts) % 86400000000) AS BIGINT)
+             AS sum_us_of_day,
            CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
              AS sum_cents
          FROM events WHERE event_type = 'view'

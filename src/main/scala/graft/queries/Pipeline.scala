@@ -84,9 +84,11 @@ object Pipeline {
     // one Params row per line, like the reference's per-line parameter
     // CSV (driver-sized by contract: |lines| rows — the line keyspace
     // scales with the corpus since r12, so the map is derived from the
-    // fleet instead of a hardcoded 0-until-8)
-    val params = syntheticFleet(s, dir)
-      .select(col("linenumber")).distinct().collect()
+    // data instead of a hardcoded 0-until-8). Read from the materialized
+    // patterns, not a second fleet scan: with qualify = false stage-1
+    // dedup keeps at least one row per vehicle, so every fleet line has
+    // patterns, and a line without trajectories clusters nothing anyway.
+    val params = pats.select(col("linenumber")).distinct().collect()
       .map(r => r.getString(0) ->
         TrajectoryClustering.Params(eps = 5.0, minSamples = 2))
       .toMap

@@ -17,6 +17,9 @@ object SparkTestSession {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      // the entrypoints' class-reuse settings (CodegenCacheSpec); the
+      // JVM's first session sizes the class cache
+      .config(graft.core.Sessions.codegenReuse)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
