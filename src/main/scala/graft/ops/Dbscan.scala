@@ -79,7 +79,20 @@ object Dbscan {
   /** [[fitAdjacency]] over primitive [[graft.core.IntVec]] neighbor lists —
     * the form the distributed cogroup builds directly (no boxed copies;
     * the BFS queue is a primitive head-indexed vector, so the whole pass
-    * stays at 4 B per edge-end). Semantics identical to [[fit]]. */
+    * stays at 4 B per edge-end). Semantics identical to [[fit]].
+    *
+    * The labels depend only on each point's neighborhood SET, never on
+    * the order of a list (the cogroup fills lists in whatever order the
+    * pair cells arrive). Each cluster is finished before the next starts,
+    * and seeds are taken in index order, so it suffices that one BFS
+    * reaches an order-free set. A BFS from core point i labels exactly
+    * the points still at −2 or −1 that are reachable from i through core
+    * points: it expands every core point it labels, a border point is
+    * labelled without expansion, and a point already in an earlier
+    * cluster is never core (a core point's earlier cluster would have
+    * expanded through it to i, labelling i first). That set is fixed by
+    * the neighborhood sets and the labels before the BFS, whatever the
+    * queue order. `DbscanSpec` checks it under permuted lists. */
   def fitNeighborhoods(
       adj: Array[graft.core.IntVec], minSamples: Int): Array[Int] = {
     val n = adj.length

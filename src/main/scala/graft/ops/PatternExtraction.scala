@@ -143,11 +143,15 @@ object PatternExtraction {
       last(when(col("direction") =!= 0, col("direction")), ignoreNulls = true)
         .over(byVehicle.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
 
-    // per-vehicle signal-gap threshold (Parallel:124–126) — computed in
-    // the same plan; the window shuffle on id is reused by the agg
-    val thresholds = filled.groupBy("id")
-      .agg(expr(s"percentile_approx(time_diff, ${cfg.gapPercentile})").as("threshold"))
-    filled.join(thresholds, Seq("id"), "left")
+    // per-vehicle signal-gap threshold (Parallel:124–126) as a window
+    // aggregate on the id partitioning the windows above already have:
+    // one scan, one exchange. Not a groupBy joined back onto `filled`:
+    // the join's inferred isnotnull(id) filter makes the two sides'
+    // exchanges differ, so the fleet is scanned and shuffled twice
+    // (NOTES.md). A null id gets no threshold, as under such a join.
+    filled.withColumn("threshold", when(col("id").isNotNull,
+      expr(s"percentile_approx(time_diff, ${cfg.gapPercentile})")
+        .over(Window.partitionBy("id"))))
   }
 
   /** Stage 1b: segment each vehicle's day into numbered trajectory
@@ -177,23 +181,21 @@ object PatternExtraction {
 
     // vehicle qualification (Standalone:104–121): keep vehicles seen at
     // both travel directions' termini or mid-route during a gap —
-    // EXISTS-aggregation + semi join, not inner-join-on-distinct.
-    // `cfg.qualify = false` skips the gate for feeds without terminus
-    // geography (the reference's Standalone variant substitutes a
-    // hardcoded vehicle allowlist here, Standalone:11–16).
-    val qualified = if (!cfg.qualify) guarded else guarded.join(
-      guarded.groupBy("id").agg(
-        max(when(
-          (col("direction") === 1 && col("position") === 1) ||
-            (col("direction") === 1 && col("position") === 0 && col("gap_flag") === 1),
-          1).otherwise(0)).as("c1"),
-        max(when(
-          (col("direction") === 2 && col("position") === 2) ||
-            (col("direction") === 2 && col("position") === 0 && col("gap_flag") === 1),
-          1).otherwise(0)).as("c2"))
-        .filter(col("c1") === 1 && col("c2") === 1)
-        .select("id"),
-      Seq("id"), "left_semi")
+    // per-id EXISTS flags as window aggregates on the id partitioning, so
+    // the gate adds no scan or exchange (a null id never qualifies, as in
+    // the reference's id-keyed join). `cfg.qualify = false` skips the
+    // gate for feeds without terminus geography (the reference's
+    // Standalone variant substitutes a hardcoded vehicle allowlist here,
+    // Standalone:11–16).
+    val byId = Window.partitionBy("id")
+    def seen(dir: Int, pos: Int): Column = max(when(
+      (col("direction") === dir && col("position") === pos) ||
+        (col("direction") === dir && col("position") === 0 && col("gap_flag") === 1),
+      1).otherwise(0)).over(byId)
+    val qualified = if (!cfg.qualify) guarded else guarded
+      .withColumn("_c1", seen(1, 1)).withColumn("_c2", seen(2, 2))
+      .filter(col("id").isNotNull && col("_c1") === 1 && col("_c2") === 1)
+      .drop("_c1", "_c2")
 
     // bug-compatible mode (Standalone:123–172 AS COMMITTED): the bound
     // machinery branches on a lag-state of 2 that the flag computation

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Stage 2 — per-line trajectory clustering, re-expressed Spark-first.
@@ -16,15 +15,19 @@ import org.apache.spark.sql.functions._
   *  - assembly sorts the collected points by time (`array_sort` on a
   *    (t,lng,lat) struct) — the reference silently depends on read order,
   *    a latent nondeterminism fixed, not copied (SURVEY.md §7.4);
-  *  - per-line grouping is `groupByKey(...).flatMapGroups` with the
-  *    distance matrix + [[Dbscan]] computed in-JVM;
+  *  - the TRACLUS distance reads only a trajectory's chord endpoints and
+  *    polyline length ([[TrajectoryDistance.totalKm]]), so each line
+  *    becomes ONE row: its roster and a primitive summary array. Pairs
+  *    are scored by a primitive loop over that array inside (line, salt)
+  *    cells, never as Spark rows, and DBSCAN runs in-JVM per line;
   *  - per-line (eps, minSamples) parameters ride a broadcast map instead
   *    of a driver dict captured in Python closures.
   *
-  * Scale: the O(T²) matrix is per line (T = trajectories of ONE bus line
-  * on one day — hundreds, not millions). Lines differ wildly in T, so at
-  * cluster scale pair this with [[Balance.costBalancedRepartition]] keyed
-  * on T² so one executor doesn't serialize all heavy lines.
+  * Scale: the O(T²) pair work is per line (T = trajectories of ONE bus
+  * line on one day — hundreds to thousands, not millions) and is split
+  * over `pairSalts` cells per line; the DBSCAN cogroup places lines by
+  * their T² cost ([[Balance.plan]]), so one heavy line does not queue
+  * behind the others.
   */
 object TrajectoryClustering {
 
@@ -99,6 +102,22 @@ object TrajectoryClustering {
           p.getField("lat").cast("double").as("lat"))))
       .drop("_tpts")
 
+  /** One line with parameters: its roster (`id`, `patternID`) in tid
+    * order and its summaries, 5 doubles per tid (head lng/lat, last
+    * lng/lat, polyline km). */
+  private type LineRow = (String, Array[String], Array[String], Array[Double])
+
+  /** One cell's output: edge pairs (i, j) with finite d ≤ eps, NaN pairs,
+    * both packed two ints a pair, and the cell's max-finite witness. */
+  private type CellRow = (String, Array[Int], Array[Int], Double)
+
+  /** A cell starts a new output row once its packed pairs reach this many
+    * ints (4 MiB). A row is one contiguous buffer on both sides of the
+    * shuffle, so an uncapped row would grow with T²/`pairSalts` toward
+    * the 2 GiB array limit; at the cap the per-row cost is amortized over
+    * half a million pairs. */
+  private val CellRowInts = 1 << 20
+
   /** Cluster each line's trajectories; returns
     * `(linenumber, id, patternID, cluster)` with −1 = noise.
     *
@@ -108,47 +127,38 @@ object TrajectoryClustering {
     * (TC-P:309–312); non-finite pair distances are clamped to 2× the max
     * finite distance (TC-P:298–303).
     *
-    * Scale design (round-2 rework — parallelism used to be capped at
-    * #lines by a single `groupByKey(line).flatMapGroups`):
+    * Both paths start from [[lineRows]]: one row per line, its tid = the
+    * position in UTF-8-binary (id, patternID) order (the reference relies
+    * on pandas groupby order; this pins it). The distributed path:
     *
-    *  1. The TRACLUS total distance reads only each trajectory's chord
-    *     endpoints and polyline length ([[TrajectoryDistance]] — endpoint
-    *     projection + angular term), so each trajectory reduces to a
-    *     7-field summary before any pairing. Point arrays never enter the
-    *     pair stage.
-    *  2. The O(T²) pair grid is a SALTED equi-join over those summaries
-    *     (probe keyed by `tid % pairSalts`, build side replicated
-    *     `pairSalts` ways): one giant line's pair work spreads over
-    *     `pairSalts` tasks instead of serializing in one — the "sub-split
-    *     oversized lines" the reference's driver-side bin-packing
-    *     (TC-P:60–136) could not do. Replication is of 56-byte summary
-    *     rows, not data.
-    *  3. Only the DBSCAN scan itself — irreducibly whole-line state under
-    *     the reference's semantics — runs per line, fed by a cogroup.
-    *     Round 3: the cogroup is keyed by COST-BALANCED BIN, not raw
-    *     line — per-line pair counts (T²) feed [[Balance.plan]] and the
-    *     bins map to hash-distinct labels
-    *     ([[Balance.hashDistinctLabels]]), so a hot line gets a dedicated
-    *     shuffle partition instead of hash-colliding behind other heavy
-    *     lines. Round 7: the cogroup receives the eps-NEIGHBORHOOD GRAPH,
-    *     not the full T×T matrix — the pair scan drops finite d > eps
-    *     before the shuffle (plus NaN pairs and per-partition max-finite
-    *     sentinels so the non-finite clamp rule is decided exactly), and
-    *     [[Dbscan.fitAdjacency]] consumes adjacency lists with semantics
-    *     identical to the matrix scan. At 10× trajectories the old
-    *     matrix path moved and scanned 100× the bytes through ≤#lines
-    *     tasks; the graph path moves only real edges.
+    *  1. The line row fans out to `pairSalts` (line, salt) cells on an
+    *     EXPLICIT user-numbered repartition (r9): the line rows are
+    *     byte-tiny while the work in them is quadratic, so AQE's byte-based
+    *     coalescing would fold the cell grid into one or two tasks and
+    *     serialize the scan (measured on the earlier pair join at 10×
+    *     data: 37 s at parallelism ~1.5 → 10.6 s at ~9 once the shuffle
+    *     kept its width).
+    *     REPARTITION_BY_NUM is the one shuffle origin AQE never coalesces.
+    *  2. Cell s scores i ∈ {s, s+S, …} against every j ∈ (i, T) — each
+    *     pair exactly once — in a primitive loop ([[CellScan]]) and emits
+    *     packed rows: only pairs that can be edges leave the cell, plus
+    *     its max-finite witness for the clamp rule.
+    *  3. DBSCAN, irreducibly whole-line state, runs in a cogroup of line
+    *     rosters and cell rows keyed by COST-BALANCED BIN: per-line pair
+    *     counts (T²) feed [[Balance.plan]] and the bins map to
+    *     hash-distinct labels ([[Balance.hashDistinctLabels]]), so a hot
+    *     line gets its own shuffle partition. The cogroup builds the
+    *     eps-neighborhood graph, never the T×T matrix, and
+    *     [[Dbscan.fitNeighborhoods]] labels it.
     *
     * Small-input hybrid (same reasoning as
     * `Dedup.connectedComponents`'s union-find branch): when the total
     * pair count — known from a cheap per-line count over the (cached,
-    * per the class contract) input — is at most `maxLocalPairs`, the
-    * salted join + cogroup machinery would spend ~4 shuffle barriers
-    * orchestrating work that fits comfortably in one task per line, so
-    * a direct `groupByKey(line).flatMapGroups` computes the identical
-    * summaries/distances/DBSCAN in-JVM. Same tid order (UTF8 binary,
-    * matching the window sort), same 2-point-summary distances —
-    * `TrajectoryClusteringSpec` asserts both paths bit-equal.
+    * per the class contract) input — is at most `maxLocalPairs`, the cell
+    * and cogroup shuffles would orchestrate work that fits in one task
+    * per line, so [[clusterLocal]] fills the line's distance matrix and
+    * runs [[Dbscan.fit]]. Same line rows, same [[TrajectoryDistance.totalKm]]
+    * — `PipelineSpec` asserts both paths bit-equal.
     */
   def cluster(patterns: DataFrame, params: Map[String, Params],
               pairSalts: Int = 16,
@@ -173,170 +183,40 @@ object TrajectoryClustering {
       .sortBy(_._1)
     val totalPairs = lineCounts.map { case (_, t) => t * t }.sum
 
+    // not persisted: both branches below read it, and the plan reuses the
+    // line shuffle's exchange. A Dataset-level persist inside a library
+    // operator would pin CacheManager entries the caller can never
+    // release; callers running the stage repeatedly persist the PATTERNS
+    // input (as queries.Pipeline does).
+    val lines = lineRows(assembled, bc)
     if (totalPairs <= maxLocalPairs) {
       lastStats = None
-      return clusterLocal(assembled, bc)
+      return clusterLocal(lines, bc)
     }
     val stats = new PairScanStats(spark.sparkContext)
     lastStats = Some(stats)
 
-    // dense per-line trajectory index in deterministic (id, patternID)
-    // order — the reference relies on pandas groupby order; this pins it
-    val byLine = Window.partitionBy(col("line")).orderBy(col("id"), col("patternID"))
-    // roster branches twice (summaries + the DBSCAN-side roster) and
-    // summaries branches twice more (probe + build), so the assemble +
-    // window lineage is scanned up to 4×. Deliberately NOT persisted here:
-    // a Dataset-level persist inside a library operator pins CacheManager
-    // entries the caller can never release (every call would leak cached
-    // blocks). Callers running the stage repeatedly should persist the
-    // PATTERNS input (as queries.Pipeline does), which bounds the rescans
-    // to the cheap assemble+summarize projections.
-    val roster = assembled.select(
-        col("linenumber").cast("string").as("line"),
-        col("id").cast("string").as("id"),
-        col("patternID"), col("points"))
-      .withColumn("tid", (row_number().over(byLine) - 1).cast("int"))
-
-    // O(1)-per-pair summary: chord endpoints + polyline length; lines
-    // without parameters drop out before any pair is formed (TC-S:153)
-    val summaries = roster
-      .select(col("line"), col("tid"),
-        transform(col("points"), p => p.getField("lng")).as("lngs"),
-        transform(col("points"), p => p.getField("lat")).as("lats"))
-      .as[(String, Int, Seq[Double], Seq[Double])]
-      .flatMap { case (line, tid, lngs, lats) =>
-        if (!bc.value.contains(line)) None
-        else {
-          val pts = lngs.lazyZip(lats).map { (g, a) =>
-            TrajectoryDistance.P(g, a) }.toIndexedSeq
-          stats.summaries.add(1L)
-          Some((line, tid, pts.head.lng, pts.head.lat,
-            pts.last.lng, pts.last.lat, TrajectoryDistance.lengthKm(pts)))
-        }
-      }
-      .toDF("line", "tid", "hlng", "hlat", "llng", "llat", "len")
-
-    def packed(side: String) = array(
-      col(s"$side.hlng"), col(s"$side.hlat"),
-      col(s"$side.llng"), col(s"$side.llat"), col(s"$side.len"))
-    // EXPLICIT user-numbered repartition on the pair-join key (r9): the
-    // summaries relation is byte-TINY while the join's output is
-    // QUADRATIC in it, so AQE's byte-based partition coalescing folds
-    // the (line × salt) cells into one or two tasks and serializes the
-    // whole pair scan (measured at 10× data: stage wall 37 s at
-    // parallelism ~1.5 → 10.6 s at ~9 once the shuffle keeps its
-    // width). REPARTITION_BY_NUM is the one shuffle origin AQE never
-    // coalesces — the salt fan-out keeps its task grid, and the join
-    // needs no further exchange since both sides arrive partitioned on
-    // exactly the join key.
     val numParts = spark.sessionState.conf.numShufflePartitions
-    val probe = summaries.withColumn("salt", pmod(col("tid"), lit(pairSalts)))
+    val cells = lines
+      .flatMap { case (line, ids, _, sums) =>
+        stats.summaries.add(ids.length.toLong)
+        (0 until math.min(pairSalts, ids.length)).map(salt => (line, salt, sums))
+      }
+      .toDF("line", "salt", "sums")
       .repartition(numParts, col("line"), col("salt"))
-    val build = summaries.withColumn("salt",
-      explode(sequence(lit(0), lit(pairSalts - 1))))
-      .repartition(numParts, col("line"), col("salt"))
-    // DBSCAN's output depends only on each point's eps-NEIGHBORHOOD set
-    // (see Dbscan.fitAdjacency), so only pairs that can be edges cross
-    // the wire: the pair scan keeps (i) finite d <= eps — real edges —
-    // (ii) non-finite pairs (whose edge-ness is the clamp rule, decided
-    // per line downstream), and (iii) one per-partition max-finite-d
-    // sentinel row per line (i = -1), from which the cogroup task
-    // reconstructs the line's global maxFinite for that clamp. Dropping
-    // the d > eps majority here is what turns the cogroup's O(T²) matrix
-    // feed into an O(edges) graph feed.
-    // SHUFFLED-HASH, not sort-merge (r10, found by StageProbe): every
-    // (line, salt) cell is ONE duplicate-heavy join key, and SMJ buffers
-    // the whole build group per key in an ExternalAppendOnlyUnsafeRowArray
-    // that it re-scans once per probe row — if the buffer tips into a
-    // disk spill (execution memory still held by a previous query's
-    // blocks — nondeterministic in a warm JVM), every one of the T·T/salt
-    // rescans deserializes from disk and the stage's CPU explodes ~20×
-    // on IDENTICAL work (measured 48 vs 965 CPU-s rep to rep at 10×
-    // data, same accumulator counts). The hash build holds the cell's
-    // tiny summary rows in one per-task map, probes stream — no per-key
-    // buffer, no rescan, no spill cliff.
-    val triples = probe.as("a")
-      .join(build.as("b").hint("shuffle_hash"),
-        col("a.line") === col("b.line") && col("a.salt") === col("b.salt") &&
-          col("a.tid") < col("b.tid"))
-      .select(col("a.line").as("line"), col("a.tid").as("i"),
-        col("b.tid").as("j"), packed("a").as("sa"), packed("b").as("sb"))
-      .as[(String, Int, Int, Seq[Double], Seq[Double])]
-      .mapPartitions { it =>
-        // HAND-ROLLED iterator, not flatMap/Option/++ (r10): this is the
-        // hottest loop in the pipeline (one call per grid pair), and the
-        // Scala Iterator combinators route every element through
-        // dispatch sites a many-query JVM has made megamorphic — plus an
-        // Option allocation per pair. One while-loop advance keeps the
-        // body monomorphic and allocation-free on the (majority) pruned
-        // and dropped paths. Semantics identical: kept pairs in input
-        // order, then one max-finite sentinel per line (emitted only
-        // after the input is exhausted, as the old by-name `++` did).
-        new scala.collection.AbstractIterator[(String, Int, Int, Double)] {
-          private val maxFin =
-            scala.collection.mutable.HashMap.empty[String, Double]
-          private var sentinels: Iterator[(String, Int, Int, Double)] = null
-          private var nxt: (String, Int, Int, Double) = null
-          private def advance(): Unit = {
-            nxt = null
-            while (nxt == null && it.hasNext) {
-              val (line, i, j, sa, sb) = it.next()
-              stats.pairs.add(1L)
-              val eps = bc.value(line).eps
-              // trig-free sound lower bound first (r9): a pair that
-              // provably exceeds eps skips the full trig evaluation. Its
-              // lb still feeds the max-finite tracker — lb ≤ d, and the
-              // only consumer is the `2·maxFinite ≤ eps` clamp test,
-              // where ANY witness > eps pins the same (false) outcome as
-              // the true maximum; with zero pruned pairs the tracker is
-              // exactly the old one. NaN coords make lb NaN → never
-              // pruned → the clamp path sees them unchanged.
-              val lb = TrajectoryDistance.lowerBoundKm(
-                sa(0), sa(1), sa(2), sa(3), sb(0), sb(1), sb(2), sb(3))
-              if (lb > eps) {
-                stats.pruned.add(1L)
-                if (lb > maxFin.getOrElse(line, 0.0)) maxFin(line) = lb
-              } else {
-                stats.evaluated.add(1L)
-                // 2-point summary trajectories reproduce the full
-                // distance bit-for-bit: every term reads head/last/length
-                val tr1 = IndexedSeq(
-                  TrajectoryDistance.P(sa(0), sa(1)),
-                  TrajectoryDistance.P(sa(2), sa(3)))
-                val tr2 = IndexedSeq(
-                  TrajectoryDistance.P(sb(0), sb(1)),
-                  TrajectoryDistance.P(sb(2), sb(3)))
-                val d = TrajectoryDistance.totalWithLengths(
-                  tr1, tr2, sa(4), sb(4))
-                if (java.lang.Double.isFinite(d)) {
-                  if (d > maxFin.getOrElse(line, 0.0)) maxFin(line) = d
-                  if (d <= eps) { stats.edges.add(1L); nxt = (line, i, j, d) }
-                } else { stats.nans.add(1L); nxt = (line, i, j, Double.NaN) }
-              }
-            }
-            if (nxt == null) {
-              if (sentinels == null)
-                sentinels = maxFin.iterator
-                  .map { case (l, m) => (l, -1, -1, m) }
-              if (sentinels.hasNext) nxt = sentinels.next()
-            }
-          }
-          advance()
-          def hasNext: Boolean = nxt != null
-          def next(): (String, Int, Int, Double) = {
-            val r = nxt; advance(); r
-          }
-        }
+      .as[(String, Int, Array[Double])]
+      .flatMap { case (line, salt, sums) =>
+        new CellScan(line, salt, pairSalts, sums, bc.value(line).eps, stats)
       }
 
     // cost-balanced DBSCAN placement: per-line pair cost T² bin-packed
     // (outlier lines get dedicated bins), bins mapped to hash-distinct
     // labels so the cogroup's ordinary hash shuffle realizes the exact
     // placement. AQE may still coalesce byte-SMALL bins' partitions —
-    // acceptable by construction: this operator's compute is the matrix
-    // scan, O(triple rows), so cost is proportional to shuffle bytes and
-    // partitions merged under the advisory size are cheap ones; bins
-    // whose work matters exceed it and keep their dedicated task.
+    // acceptable by construction: the cogroup's work is proportional to
+    // the edges it receives, so partitions merged under the advisory size
+    // are cheap ones; bins whose work matters exceed it and keep their
+    // dedicated task.
     val costs = lineCounts.map { case (l, t) => l -> (t.toDouble * t) }
       .sortBy { case (l, c) => (-c, l) }.toSeq // deterministic plan input
     // Balance.plan adds dedicated outlier bins ON TOP of targetBins, so
@@ -358,139 +238,200 @@ object TrajectoryClustering {
       assignment.map { case (l, b) => l -> labels(b) }
     val bcLabel = spark.sparkContext.broadcast(labelOf)
 
-    // lines without parameters are dropped BEFORE the shuffle (the old
-    // per-line keying at least spread them; a shared "skip" key would
-    // funnel every dropped row through one task just to discard it)
-    val rosterLite = roster.select(col("line"), col("tid"), col("id"), col("patternID"))
-      .as[(String, Int, String, String)]
-      .filter(r => bcLabel.value.contains(r._1))
-    rosterLite.groupByKey(r => bcLabel.value(r._1))
-      .cogroup(triples.groupByKey(t => bcLabel.value(t._1))) {
-        (bin, rs, ds) =>
-          {
-            // a bin holds whole lines (one, or several small ones packed
-            // together). Roster rows are tiny; adjacency buffers are
-            // preallocated per line so the edge stream fills them without
-            // buffering — O(edges) memory, never the T×T matrix. The
-            // buffers are PRIMITIVE (r11): boxed ArrayBuffer[Int] cost
-            // ~20 B/edge-end and OOM'd the 32 g heap at the 100× probe's
-            // ~700 M edge-ends; IntVec keeps the bound at 4 B/end
-            // (nanPairs packs (i, j) as two adjacent entries).
-            val byLine = rs.toArray.groupBy(_._1)
-            final class LineBuf(val rows: Array[(String, Int, String, String)]) {
-              val adj: Array[graft.core.IntVec] =
-                Array.fill(rows.length)(new graft.core.IntVec(4))
-              val nanPairs = new graft.core.IntVec(8)
-              var maxFinite = 0.0
-            }
-            val bufs = byLine.map { case (line, rows) =>
-              line -> new LineBuf(rows.sortBy(_._2))
-            }
-            ds.foreach { case (line, i, j, d) =>
-              val b = bufs(line)
-              if (i < 0) { // per-partition max-finite sentinel
-                if (d > b.maxFinite) b.maxFinite = d
-              } else if (d.isNaN) { b.nanPairs.add(i); b.nanPairs.add(j) }
-              else { b.adj(i).add(j); b.adj(j).add(i) } // finite d <= eps
-            }
-            bufs.toArray.sortBy(_._1).iterator.flatMap { case (line, b) =>
-              val p = bc.value(line)
-              val n = b.rows.length
-              // non-finite pairs clamp to 2×max finite (TC-P:298–303):
-              // an edge exactly when the clamped value clears eps
-              if (2 * b.maxFinite <= p.eps) {
-                var k = 0
-                while (k < b.nanPairs.size) {
-                  val i = b.nanPairs(k); val j = b.nanPairs(k + 1)
-                  b.adj(i).add(j); b.adj(j).add(i)
-                  k += 2
-                }
-              }
-              val labels =
-                try Dbscan.fitNeighborhoods(b.adj, p.minSamples)
-                catch { case _: Exception => Array.fill(n)(0) } // TC-P:309–312
-              b.rows.iterator.map { case (_, tid, id, pid) =>
-                (line, id, pid, labels(tid))
-              }
+    lines.map { case (line, ids, pids, _) => (line, ids, pids) }
+      .groupByKey(r => bcLabel.value(r._1))
+      .cogroup(cells.groupByKey(c => bcLabel.value(c._1))) { (_, rs, cs) =>
+        // a bin holds whole lines (one, or several small ones packed
+        // together). Adjacency lists are PRIMITIVE (r11): boxed
+        // ArrayBuffer[Int] cost ~20 B/edge-end and OOM'd the 32 g heap at
+        // the 100× probe's ~700 M edge-ends; IntVec keeps 4 B/end.
+        final class LineBuf(val ids: Array[String], val pids: Array[String]) {
+          val adj: Array[graft.core.IntVec] =
+            Array.fill(ids.length)(new graft.core.IntVec(4))
+          val nanPairs = new graft.core.IntVec(8)
+          var maxFinite = 0.0
+        }
+        val bufs = rs.map { case (line, ids, pids) =>
+          line -> new LineBuf(ids, pids) }.toMap
+        cs.foreach { case (line, edges, nans, maxFinite) =>
+          val b = bufs(line)
+          if (maxFinite > b.maxFinite) b.maxFinite = maxFinite
+          var k = 0
+          while (k < edges.length) {
+            b.adj(edges(k)).add(edges(k + 1)); b.adj(edges(k + 1)).add(edges(k))
+            k += 2
+          }
+          k = 0
+          while (k < nans.length) { b.nanPairs.add(nans(k)); k += 1 }
+        }
+        bufs.toArray.sortBy(_._1).iterator.flatMap { case (line, b) =>
+          val p = bc.value(line)
+          // non-finite pairs clamp to 2×max finite (TC-P:298–303):
+          // an edge exactly when the clamped value clears eps
+          if (2 * b.maxFinite <= p.eps) {
+            var k = 0
+            while (k < b.nanPairs.size) {
+              val i = b.nanPairs(k); val j = b.nanPairs(k + 1)
+              b.adj(i).add(j); b.adj(j).add(i)
+              k += 2
             }
           }
+          val labels =
+            try Dbscan.fitNeighborhoods(b.adj, p.minSamples)
+            catch { case _: Exception => Array.fill(b.ids.length)(0) } // TC-P:309–312
+          b.ids.indices.iterator.map(t => (line, b.ids(t), b.pids(t), labels(t)))
+        }
       }
       .toDF("linenumber", "id", "patternID", "cluster")
   }
 
-  /** Small-input path: whole-line clustering in one task per line —
-    * identical summaries (chord endpoints + polyline length), identical
-    * 2-point-summary distances, identical tid order (UTF8 binary, the
-    * window sort's collation) as the distributed path. */
-  private def clusterLocal(
+  /** [[LineRow]]s of `assembled`: each trajectory reduced to its summary
+    * map-side, lines without parameters dropped before the shuffle
+    * (TC-S:153), then one group per line sorted into tid order. */
+  private def lineRows(
       assembled: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[Map[String, Params]]): DataFrame = {
+      bc: org.apache.spark.broadcast.Broadcast[Map[String, Params]])
+      : Dataset[LineRow] = {
     val spark = assembled.sparkSession
     import spark.implicits._
-    import org.apache.spark.unsafe.types.UTF8String
     assembled
-      .select(col("linenumber").cast("string").as("line"),
-        col("id").cast("string").as("id"), col("patternID"), col("points"))
-      .groupByKey(_.getString(0))
-      .flatMapGroups { (line, it) =>
-        bc.value.get(line) match {
-          case None => Iterator.empty // no params → skip line (TC-S:153)
-          case Some(p) =>
-            val rows = it.map { r =>
-              val pts = r.getSeq[org.apache.spark.sql.Row](3)
-                .map(pr => TrajectoryDistance.P(pr.getDouble(0), pr.getDouble(1)))
-                .toIndexedSeq
-              (r.getString(1), r.getString(2), pts)
-            }.toArray
-            // (id, patternID) in UTF8-binary order = the window's sort
-            java.util.Arrays.sort(rows,
-              new java.util.Comparator[(String, String, IndexedSeq[TrajectoryDistance.P])] {
-                def compare(a: (String, String, IndexedSeq[TrajectoryDistance.P]),
-                            b: (String, String, IndexedSeq[TrajectoryDistance.P])): Int = {
-                  val c = UTF8String.fromString(a._1)
-                    .compareTo(UTF8String.fromString(b._1))
-                  if (c != 0) c
-                  else UTF8String.fromString(a._2)
-                    .compareTo(UTF8String.fromString(b._2))
-                }
-              })
-            val n = rows.length
-            val sums = rows.map { case (_, _, pts) =>
-              (pts.head, pts.last, TrajectoryDistance.lengthKm(pts))
-            }
-            val dist = Array.ofDim[Double](n, n)
-            var maxFinite = 0.0
-            var i = 0
-            while (i < n) {
-              var j = i + 1
-              while (j < n) {
-                val (h1, l1, len1) = sums(i)
-                val (h2, l2, len2) = sums(j)
-                val d = TrajectoryDistance.totalWithLengths(
-                  IndexedSeq(h1, l1), IndexedSeq(h2, l2), len1, len2)
-                val dd = if (java.lang.Double.isFinite(d)) d else Double.NaN
-                dist(i)(j) = dd; dist(j)(i) = dd
-                if (!dd.isNaN && dd > maxFinite) maxFinite = dd
-                j += 1
-              }
-              i += 1
-            }
-            i = 0
-            while (i < n) {
-              var j = 0
-              while (j < n) {
-                if (dist(i)(j).isNaN) dist(i)(j) = 2 * maxFinite
-                j += 1
-              }
-              i += 1
-            }
-            val labels =
-              try Dbscan.fit(dist, p.eps, p.minSamples)
-              catch { case _: Exception => Array.fill(n)(0) } // TC-P:309–312
-            rows.iterator.zipWithIndex.map { case ((id, pid, _), tid) =>
-              (line, id, pid, labels(tid))
-            }
+      .select(col("linenumber").cast("string"), col("id").cast("string"),
+        col("patternID"),
+        transform(col("points"), p => p.getField("lng")),
+        transform(col("points"), p => p.getField("lat")))
+      .as[(String, String, String, Array[Double], Array[Double])]
+      .filter(r => bc.value.contains(r._1))
+      .map { case (line, id, pid, lngs, lats) =>
+        val pts = lngs.indices.map(k => TrajectoryDistance.P(lngs(k), lats(k)))
+        (line, id, pid, Array(pts.head.lng, pts.head.lat,
+          pts.last.lng, pts.last.lat, TrajectoryDistance.lengthKm(pts)))
+      }
+      .groupByKey(_._1)
+      .mapGroups { (line, it) =>
+        val rows = it.toArray
+        java.util.Arrays.sort(rows, byRoster)
+        (line, rows.map(_._2), rows.map(_._3), rows.flatMap(_._4))
+      }
+  }
+
+  private type Summary = (String, String, String, Array[Double])
+
+  /** (id, patternID) ascending in Spark's order: UTF-8 binary, nulls first. */
+  private val byRoster = new java.util.Comparator[Summary] {
+    import org.apache.spark.unsafe.types.UTF8String
+    private def utf8(x: String, y: String): Int =
+      if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null)
+      else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    def compare(a: Summary, b: Summary): Int = {
+      val c = utf8(a._2, b._2)
+      if (c != 0) c else utf8(a._3, b._3)
+    }
+  }
+
+  /** The pair kernel of one (line, salt) cell over the line's summaries
+    * `s` (5 doubles per tid): rows i ∈ {salt, salt+S, …} against every
+    * j ∈ (i, T). Per pair, the trig-free sound [[TrajectoryDistance.lowerBoundKm]]
+    * gate first (r9): a pair that provably exceeds eps skips the full
+    * [[TrajectoryDistance.totalKm]]. Its bound still feeds the max-finite
+    * witness — lb ≤ d, and the only consumer is the `2·maxFinite ≤ eps`
+    * clamp test, where ANY witness > eps pins the same (false) outcome as
+    * the true maximum; with zero pruned pairs the witness is exactly the
+    * true maximum. NaN coordinates make lb NaN, never pruned, so NaN pairs
+    * reach the clamp rule unchanged. Finite d ≤ eps is an edge; finite
+    * d > eps is dropped here, which turns the cogroup's O(T²) feed into
+    * an O(edges) one. Counts go to `stats` once, when the cell is done. */
+  private final class CellScan(line: String, salt: Int, salts: Int,
+      s: Array[Double], eps: Double, stats: PairScanStats)
+      extends scala.collection.AbstractIterator[CellRow] {
+    private val t = s.length / 5
+    private var i = salt
+    private var j = salt + 1
+    private var done = false
+    private var pairs, pruned, evaluated, edges, nans = 0L
+    private var maxFinite = 0.0
+
+    def hasNext: Boolean = !done
+
+    def next(): CellRow = {
+      if (done) throw new NoSuchElementException("cell scanned")
+      val edgeBuf = new graft.core.IntVec(1024)
+      val nanBuf = new graft.core.IntVec(8)
+      while (i < t && edgeBuf.size + nanBuf.size < CellRowInts) {
+        val a = 5 * i
+        while (j < t && edgeBuf.size + nanBuf.size < CellRowInts) {
+          val b = 5 * j
+          pairs += 1
+          val lb = TrajectoryDistance.lowerBoundKm(
+            s(a), s(a + 1), s(a + 2), s(a + 3), s(b), s(b + 1), s(b + 2), s(b + 3))
+          if (lb > eps) {
+            pruned += 1
+            if (lb > maxFinite) maxFinite = lb
+          } else {
+            evaluated += 1
+            val d = TrajectoryDistance.totalKm(s(a), s(a + 1), s(a + 2), s(a + 3),
+              s(a + 4), s(b), s(b + 1), s(b + 2), s(b + 3), s(b + 4))
+            if (java.lang.Double.isFinite(d)) {
+              if (d > maxFinite) maxFinite = d
+              if (d <= eps) { edges += 1; edgeBuf.add(i); edgeBuf.add(j) }
+            } else { nans += 1; nanBuf.add(i); nanBuf.add(j) }
+          }
+          j += 1
         }
+        if (j >= t) { i += salts; j = i + 1 }
+      }
+      if (i >= t) {
+        done = true
+        stats.pairs.add(pairs); stats.pruned.add(pruned)
+        stats.evaluated.add(evaluated); stats.edges.add(edges)
+        stats.nans.add(nans)
+      }
+      (line, edgeBuf.toArray, nanBuf.toArray, maxFinite)
+    }
+  }
+
+  /** Small-input path: one task per line fills the line's distance matrix
+    * from the same [[LineRow]] summaries with the same
+    * [[TrajectoryDistance.totalKm]] as the distributed path, then runs
+    * [[Dbscan.fit]]. */
+  private def clusterLocal(
+      lines: Dataset[LineRow],
+      bc: org.apache.spark.broadcast.Broadcast[Map[String, Params]]): DataFrame = {
+    val spark = lines.sparkSession
+    import spark.implicits._
+    lines
+      .flatMap { case (line, ids, pids, s) =>
+        val p = bc.value(line)
+        val n = ids.length
+        val dist = Array.ofDim[Double](n, n)
+        var maxFinite = 0.0
+        var i = 0
+        while (i < n) {
+          val a = 5 * i
+          var j = i + 1
+          while (j < n) {
+            val b = 5 * j
+            val d = TrajectoryDistance.totalKm(s(a), s(a + 1), s(a + 2), s(a + 3),
+              s(a + 4), s(b), s(b + 1), s(b + 2), s(b + 3), s(b + 4))
+            val dd = if (java.lang.Double.isFinite(d)) d else Double.NaN
+            dist(i)(j) = dd; dist(j)(i) = dd
+            if (!dd.isNaN && dd > maxFinite) maxFinite = dd
+            j += 1
+          }
+          i += 1
+        }
+        i = 0
+        while (i < n) {
+          var j = 0
+          while (j < n) {
+            if (dist(i)(j).isNaN) dist(i)(j) = 2 * maxFinite
+            j += 1
+          }
+          i += 1
+        }
+        val labels =
+          try Dbscan.fit(dist, p.eps, p.minSamples)
+          catch { case _: Exception => Array.fill(n)(0) } // TC-P:309–312
+        (0 until n).iterator.map(t => (line, ids(t), pids(t), labels(t)))
       }
       .toDF("linenumber", "id", "patternID", "cluster")
   }

@@ -28,17 +28,22 @@ object TrajectoryDistance {
   final case class P(lng: Double, lat: Double)
 
   /** Great-circle distance in km (TC-S:58–61). */
-  def greatCircleKm(a: P, b: P): Double = {
-    val dLat = math.toRadians(b.lat - a.lat)
-    val dLng = math.toRadians(b.lng - a.lng)
+  def greatCircleKm(a: P, b: P): Double = greatCircleKm(a.lng, a.lat, b.lng, b.lat)
+
+  /** [[greatCircleKm]] on raw coordinates — the one copy of the formula. */
+  def greatCircleKm(alng: Double, alat: Double, blng: Double, blat: Double): Double = {
+    val dLat = math.toRadians(blat - alat)
+    val dLng = math.toRadians(blng - alng)
     val h = math.pow(math.sin(dLat / 2), 2) +
-      math.cos(math.toRadians(a.lat)) * math.cos(math.toRadians(b.lat)) *
+      math.cos(math.toRadians(alat)) * math.cos(math.toRadians(blat)) *
         math.pow(math.sin(dLng / 2), 2)
     2 * EarthRadiusKm * math.asin(math.min(1.0, math.sqrt(h)))
   }
 
   /** Project `p` onto segment `s→e` in raw-degree space, clamped to the
-    * endpoints (TC-S:64–87). */
+    * endpoints (TC-S:64–87). The P form of the projection inside
+    * [[totalKm]], kept as the reference `TrajectoryDistanceSpec` checks
+    * that kernel against. */
   def projectOnSegment(p: P, s: P, e: P): P = {
     if (s == e) return s
     val (vx, vy) = (e.lng - s.lng, e.lat - s.lat)
@@ -49,14 +54,16 @@ object TrajectoryDistance {
     else P(s.lng + t * vx, s.lat + t * vy)
   }
 
-  /** Mean distance of tr1's endpoints to their projections on tr2's
-    * chord — the reference's horizontal ≡ vertical component
-    * (TC-S:90–107). */
-  def endpointProjectionKm(tr1: IndexedSeq[P], tr2: IndexedSeq[P]): Double = {
-    val (s2, e2) = (tr2.head, tr2.last)
-    val d1 = greatCircleKm(tr1.head, projectOnSegment(tr1.head, s2, e2))
-    val d2 = greatCircleKm(tr1.last, projectOnSegment(tr1.last, s2, e2))
-    (d1 + d2) / 2.0
+  /** Great-circle km from p to [[projectOnSegment]]`(p, s, e)`, on raw
+    * coordinates: the same comparisons and arithmetic, no allocation. */
+  private def toChordKm(plng: Double, plat: Double, slng: Double, slat: Double,
+                        elng: Double, elat: Double): Double = {
+    if (slng == elng && slat == elat) return greatCircleKm(plng, plat, slng, slat)
+    val vx = elng - slng; val vy = elat - slat
+    val t = ((plng - slng) * vx + (plat - slat) * vy) / (vx * vx + vy * vy)
+    if (t < 0) greatCircleKm(plng, plat, slng, slat)
+    else if (t > 1) greatCircleKm(plng, plat, elng, elat)
+    else greatCircleKm(plng, plat, slng + t * vx, slat + t * vy)
   }
 
   /** Polyline length in km. */
@@ -66,16 +73,15 @@ object TrajectoryDistance {
   /** Angular component (TC-S:110–132): angle between the two chords in
     * raw-degree space; degenerate chords count as 90°. */
   def angularKm(tr1: IndexedSeq[P], tr2: IndexedSeq[P]): Double =
-    angularKmWithLengths(tr1, tr2, lengthKm(tr1), lengthKm(tr2))
+    angularKm(tr1.head.lng, tr1.head.lat, tr1.last.lng, tr1.last.lat, lengthKm(tr1),
+      tr2.head.lng, tr2.head.lat, tr2.last.lng, tr2.last.lat, lengthKm(tr2))
 
-  /** [[angularKm]] with the polyline lengths precomputed by the caller —
-    * inside an O(T²) pair loop this turns the distance from
-    * O(points-per-trajectory) to O(1) per pair. */
-  def angularKmWithLengths(
-      tr1: IndexedSeq[P], tr2: IndexedSeq[P],
-      len1: Double, len2: Double): Double = {
-    val (v1x, v1y) = (tr1.last.lng - tr1.head.lng, tr1.last.lat - tr1.head.lat)
-    val (v2x, v2y) = (tr2.last.lng - tr2.head.lng, tr2.last.lat - tr2.head.lat)
+  private def angularKm(
+      h1lng: Double, h1lat: Double, l1lng: Double, l1lat: Double, len1: Double,
+      h2lng: Double, h2lat: Double, l2lng: Double, l2lat: Double,
+      len2: Double): Double = {
+    val v1x = l1lng - h1lng; val v1y = l1lat - h1lat
+    val v2x = l2lng - h2lng; val v2y = l2lat - h2lat
     val n1 = math.sqrt(v1x * v1x + v1y * v1y)
     val n2 = math.sqrt(v2x * v2x + v2y * v2y)
     val thetaDeg =
@@ -94,14 +100,31 @@ object TrajectoryDistance {
   /** Total trajectory distance in km (TC-S:135–141): the duplicated
     * horizontal/vertical term counted twice, plus the angular term. */
   def total(tr1: IndexedSeq[P], tr2: IndexedSeq[P]): Double =
-    2.0 * endpointProjectionKm(tr1, tr2) + angularKm(tr1, tr2)
+    totalWithLengths(tr1, tr2, lengthKm(tr1), lengthKm(tr2))
 
-  /** [[total]] with caller-precomputed polyline lengths (pair-loop form). */
+  /** [[total]] with caller-precomputed polyline lengths — inside an O(T²)
+    * pair loop this turns the distance from O(points-per-trajectory) to
+    * O(1) per pair. */
   def totalWithLengths(
       tr1: IndexedSeq[P], tr2: IndexedSeq[P],
       len1: Double, len2: Double): Double =
-    2.0 * endpointProjectionKm(tr1, tr2) +
-      angularKmWithLengths(tr1, tr2, len1, len2)
+    totalKm(tr1.head.lng, tr1.head.lat, tr1.last.lng, tr1.last.lat, len1,
+      tr2.head.lng, tr2.head.lat, tr2.last.lng, tr2.last.lat, len2)
+
+  /** [[totalWithLengths]] on primitive chord summaries (head, last,
+    * polyline length) — the pair kernel's form and the one copy of the
+    * arithmetic: the total reads nothing of a trajectory but its chord
+    * endpoints and its length, so every caller reduces to this. */
+  def totalKm(
+      h1lng: Double, h1lat: Double, l1lng: Double, l1lat: Double, len1: Double,
+      h2lng: Double, h2lat: Double, l2lng: Double, l2lat: Double,
+      len2: Double): Double =
+    // mean distance of tr1's endpoints to their projections on tr2's
+    // chord, counted twice: the reference's horizontal ≡ vertical term
+    // (TC-S:90–107)
+    2.0 * ((toChordKm(h1lng, h1lat, h2lng, h2lat, l2lng, l2lat) +
+      toChordKm(l1lng, l1lat, h2lng, h2lat, l2lng, l2lat)) / 2.0) +
+      angularKm(h1lng, h1lat, l1lng, l1lat, len1, h2lng, h2lat, l2lng, l2lat, len2)
 
   /** PROVABLE cheap lower bound on [[totalWithLengths]] — the trig-free
     * prune gate of the O(T²) pair scan. Soundness chain, every step an

@@ -127,7 +127,7 @@ object Pipeline {
     logPhase("signals graded")
     // prune-hit-rate audit of the distributed pair scan (r9 verdict #1):
     // read after the action so the accumulators are final; `pairs` above
-    // the ~Σ T²/2 grid floor flags lineage recompute of the pair join
+    // the ~Σ T²/2 grid floor flags lineage recompute of the pair cells
     TrajectoryClustering.lastStats.foreach(st =>
       logPhase(s"pair scan ${st.line}"))
     patsStore.unpersist(false)

@@ -103,4 +103,24 @@ class DbscanSpec extends AnyFunSuite {
     assert(Dbscan.fitAdjacency(Array.fill(3)(Array.empty[Int]), 2).toSeq ==
       Seq(-1, -1, -1))
   }
+
+  test("fitNeighborhoods: labels unchanged under permuted adjacency lists") {
+    // the distributed path fills each list in the order the pair cells
+    // arrive; only the neighborhood SETS may decide the labels
+    for (seed <- 1 to 50) {
+      val rnd = new scala.util.Random(seed)
+      val n = 1 + rnd.nextInt(60)
+      val pts = Seq.fill(n)(rnd.nextDouble() * 4)
+      val eps = 0.1 + rnd.nextDouble() * 0.6
+      val min = 1 + rnd.nextInt(5)
+      val adj = Array.tabulate(n)(i =>
+        (0 until n).filter(j => j != i && math.abs(pts(i) - pts(j)) <= eps).toArray)
+      val want = Dbscan.fitAdjacency(adj, min).toSeq
+      for (_ <- 1 to 5) {
+        val shuffled = adj.map(a => rnd.shuffle(a.toSeq).toArray)
+        assert(Dbscan.fitAdjacency(shuffled, min).toSeq == want,
+          s"seed=$seed n=$n eps=$eps min=$min")
+      }
+    }
+  }
 }

@@ -44,6 +44,22 @@ class PatternExtractionSpec extends SparkSpec {
     assert(thr == 600.0, s"threshold=$thr")
   }
 
+  test("prepare: window threshold == the groupBy + join threshold for every id") {
+    // the threshold was a groupBy("id") percentile joined back onto the
+    // prepared rows; the window aggregate must give every id the same value
+    val fleet = graft.queries.Fleets.synthetic(spark, sf001)
+    for ((gps, busLine) <- Seq((gpsFixture, Some(busLineFixture)), (fleet, None))) {
+      val prep = PatternExtraction.prepare(gps, busLine)
+      val got = prep.select($"id", $"threshold").distinct().as[(String, Double)]
+        .collect()
+      val want = prep.groupBy($"id")
+        .agg(expr("percentile_approx(time_diff, 0.95)")).as[(String, Double)]
+        .collect().toMap
+      assert(got.length == want.size && got.forall { case (id, t) => want(id) == t },
+        s"${got.count { case (id, t) => want.get(id) != Some(t) }} of ${want.size} ids differ")
+    }
+  }
+
   test("prepare: terminus proximity marks direction/position") {
     val prep = PatternExtraction.prepare(gpsFixture, Some(busLineFixture))
     val first = prep.filter($"id" === "V1").orderBy($"t").select($"direction", $"position")

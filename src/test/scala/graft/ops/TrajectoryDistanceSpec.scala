@@ -72,4 +72,55 @@ class TrajectoryDistanceSpec extends AnyFunSuite {
     val d = greatCircleKm(P(114.0, 22.0), P(114.0, 23.0))
     assert(math.abs(d - math.Pi * EarthRadiusKm / 180.0) < 1e-6)
   }
+
+  /** `totalWithLengths` as composed before the primitive kernel: the P-form
+    * projection, great-circle and angular terms, in the same order. */
+  private def refTotal(tr1: IndexedSeq[P], tr2: IndexedSeq[P],
+                       len1: Double, len2: Double): Double = {
+    val (s2, e2) = (tr2.head, tr2.last)
+    val d1 = greatCircleKm(tr1.head, projectOnSegment(tr1.head, s2, e2))
+    val d2 = greatCircleKm(tr1.last, projectOnSegment(tr1.last, s2, e2))
+    val (v1x, v1y) = (tr1.last.lng - tr1.head.lng, tr1.last.lat - tr1.head.lat)
+    val (v2x, v2y) = (tr2.last.lng - tr2.head.lng, tr2.last.lat - tr2.head.lat)
+    val n1 = math.sqrt(v1x * v1x + v1y * v1y)
+    val n2 = math.sqrt(v2x * v2x + v2y * v2y)
+    val thetaDeg =
+      if (n1 == 0.0 || n2 == 0.0) 90.0
+      else math.toDegrees(math.acos(
+        math.max(-1.0, math.min(1.0, (v1x * v2x + v1y * v2y) / (n1 * n2)))))
+    val ang =
+      if (thetaDeg > 0 && thetaDeg <= 90) math.min(len1, len2) * math.sin(math.toRadians(thetaDeg))
+      else if (thetaDeg > 90 && thetaDeg <= 180) math.max(len1, len2)
+      else 0.0
+    2.0 * ((d1 + d2) / 2.0) + ang
+  }
+
+  test("totalKm == totalWithLengths bit for bit (random, degenerate, NaN, antimeridian)") {
+    val rnd = new scala.util.Random(11)
+    def near(c: Double, w: Double) = c + (rnd.nextDouble() - 0.5) * w
+    val random = Seq.fill(2000) {
+      val w = if (rnd.nextBoolean()) 0.05 else 40.0
+      (tr((near(114, w), near(22.5, w)), (near(114, w), near(22.5, w))),
+        tr((near(114, w), near(22.5, w)), (near(114, w), near(22.5, w))))
+    }
+    val special = Seq(
+      (tr((114.0, 22.5), (114.0, 22.5)), tr((114.0, 22.5), (114.02, 22.5))), // equal endpoints
+      (tr((114.0, 22.5), (114.02, 22.5)), tr((114.01, 22.6), (114.01, 22.6))),
+      (tr((114.0, 22.5), (114.0, 22.5)), tr((114.0, 22.5), (114.0, 22.5))),
+      (tr((Double.NaN, 22.5), (114.02, 22.5)), tr((114.0, 22.5), (114.02, 22.5))),
+      (tr((114.0, 22.5), (114.02, 22.5)), tr((114.0, Double.NaN), (114.02, 22.5))),
+      (tr((114.0, 22.5), (114.02, 22.5)), tr((114.0, 22.51), (114.02, 22.51))), // parallel
+      (tr((114.0, 22.5), (114.02, 22.5)), tr((114.04, 22.5), (114.0, 22.5))), // anti-parallel
+      (tr((114.0, 22.5), (114.02, 22.5)), tr((114.0, 22.5), (114.0, 22.52))), // perpendicular
+      (tr((179.99, 10.0), (-179.99, 10.01)), tr((-179.98, 10.0), (179.98, 10.02)))) // antimeridian
+    for ((a, b) <- random ++ special) {
+      val (la, lb) = (lengthKm(a), lengthKm(b))
+      val want = java.lang.Double.doubleToRawLongBits(refTotal(a, b, la, lb))
+      val k = totalKm(a.head.lng, a.head.lat, a.last.lng, a.last.lat, la,
+        b.head.lng, b.head.lat, b.last.lng, b.last.lat, lb)
+      assert(java.lang.Double.doubleToRawLongBits(k) == want, s"totalKm $a $b")
+      assert(java.lang.Double.doubleToRawLongBits(totalWithLengths(a, b, la, lb)) == want,
+        s"totalWithLengths $a $b")
+    }
+  }
 }

@@ -570,24 +570,53 @@ class PlanSpec extends SparkSpec {
       s"the corpus must never shuffle to meet the fence dim:\n$p")
   }
 
-  test("blindzone pair join: shuffled-hash, never sort-merge (the warm-spill cliff)") {
-    // the (line, salt) cells are single duplicate-heavy keys; SMJ buffers
-    // the build group per key and re-scans it per probe row — a disk
-    // spill of that buffer cost 20x CPU on identical work (r10). The
-    // shuffle_hash hint must hold.
-    val pats = graft.ops.PatternExtraction.run(
+  /** The sf0.01 synthetic fleet's stage-1 patterns and 8-line params. */
+  private lazy val fleetStage1 = (
+    graft.ops.PatternExtraction.run(
       Pipeline.syntheticFleet(spark, sf001), busLine = None,
-      cfg = graft.ops.PatternExtraction.Config(qualify = false))
-    val params = (0 until 8)
-      .map(i => s"L$i" -> graft.ops.TrajectoryClustering.Params(5.0, 2)).toMap
-    // force the distributed path (the sf0.001 corpus takes the local one)
-    val p = graft.ops.TrajectoryClustering
-      .cluster(pats, params, maxLocalPairs = 0L)
-      .queryExecution.executedPlan.toString
-    assert(p.contains("ShuffledHashJoin"),
-      s"pair join lost the shuffle_hash hint:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"pair join regressed to sort-merge:\n$p")
+      cfg = graft.ops.PatternExtraction.Config(qualify = false)),
+    (0 until 8).map(i => s"L$i" -> graft.ops.TrajectoryClustering.Params(5.0, 2)).toMap)
+
+  /** The distributed stage-2 plan, forced (the corpus takes the local one). */
+  private lazy val pairScanPlan = graft.ops.TrajectoryClustering
+    .cluster(fleetStage1._1, fleetStage1._2, maxLocalPairs = 0L)
+    .queryExecution.executedPlan.toString
+
+  test("blindzone pair scan: the distributed cluster plan has no join node") {
+    // pairs are scored by a primitive loop inside (line, salt) cells; a
+    // join here would turn every pair back into a Spark row
+    assert(!pairScanPlan.contains("Join"), s"pair scan plans a join:\n$pairScanPlan")
+  }
+
+  test("blindzone pair scan: the cell fan-out keeps its REPARTITION_BY_NUM exchange") {
+    // the line rows are byte-tiny and their work quadratic: any other
+    // shuffle origin lets AQE coalesce the cell grid into one task (r9)
+    assert(pairScanPlan.linesIterator.exists(l =>
+        l.contains("Exchange hashpartitioning(line") && l.contains("REPARTITION_BY_NUM")),
+      s"cell exchange lost its user-numbered origin:\n$pairScanPlan")
+  }
+
+  test("stage 1: one parquet scan and one id exchange serve every window") {
+    // the threshold and the qualify flags are window aggregates on the
+    // windows' id partitioning; a groupBy joined back onto its own input
+    // scanned and shuffled the fleet twice (no ReusedExchange: the join's
+    // inferred isnotnull(id) filter made the two subtrees differ)
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val pats = fleetStage1._1
+    pats.collect(): Unit
+    val plan = pats.queryExecution.executedPlan
+    object H extends AdaptiveSparkPlanHelper
+    val scans = H.collect(plan) { case s: FileSourceScanExec => s }
+    val idExchanges = H.collect(plan) {
+      case e @ ShuffleExchangeExec(HashPartitioning(Seq(a: AttributeReference), _), _, _, _)
+          if a.name == "id" => e
+    }
+    assert(scans.size == 1 && idExchanges.size == 1,
+      s"${scans.size} scans, ${idExchanges.size} id exchanges:\n$plan")
   }
 
   // ---- round-11 additions ----
