@@ -38,7 +38,10 @@ object TrajectoryClustering {
     * the trig-free bound actually fire at sf1g?" must be answerable from
     * a log line, not a guess). Accumulators double-count recomputed or
     * retried tasks BY DESIGN — `pairs` drifting above the Σ T²/2 floor is
-    * itself the diagnostic for lineage recompute of the pair grid. */
+    * itself the diagnostic for lineage recompute of the pair grid.
+    * `summaries` counts each trajectory of a scanned line once (before
+    * the per-cell kernel, the summaries relation fed both sides of the
+    * pair join and counted about twice that). */
   final class PairScanStats(sc: org.apache.spark.SparkContext)
       extends Serializable {
     val summaries = sc.longAccumulator("bz_summaries")

@@ -33,7 +33,7 @@ object Pipeline {
     * 100× the buses on route 7). On every driver corpus (user ids far
     * below 100M) the derivation is bit-identical to `user_id % 8`, so
     * the pinned sf0.01 oracle literal is untouched. */
-  private[queries] def syntheticFleet(s: SparkSession, dir: String): DataFrame =
+  private[graft] def syntheticFleet(s: SparkSession, dir: String): DataFrame =
     Tables.eventsTsUs(s, dir)
       .filter(col("event_type") === "click")
       .select(

@@ -47,7 +47,7 @@ class PatternExtractionSpec extends SparkSpec {
   test("prepare: window threshold == the groupBy + join threshold for every id") {
     // the threshold was a groupBy("id") percentile joined back onto the
     // prepared rows; the window aggregate must give every id the same value
-    val fleet = graft.queries.Fleets.synthetic(spark, sf001)
+    val fleet = graft.queries.Pipeline.syntheticFleet(spark, sf001)
     for ((gps, busLine) <- Seq((gpsFixture, Some(busLineFixture)), (fleet, None))) {
       val prep = PatternExtraction.prepare(gps, busLine)
       val got = prep.select($"id", $"threshold").distinct().as[(String, Double)]

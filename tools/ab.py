@@ -5,10 +5,11 @@ Runs `python3 perfbench/run.py` alternately in a parent checkout and a
 change checkout (the side that runs first alternates from pair to pair),
 one pair per seed, and prints per metric each side's median and quartiles,
 how many pairs the change won (ties count for neither side) and whether
-the gain rule holds: the change wins at least nine tenths of the pairs and
+the gain rule holds: the change wins at least nine tenths of the pairs,
 the medians differ, in the metric's better direction, by more than the
-parent's interquartile range. Directions come from the change checkout's
-BENCHMARK.json. Nothing under either checkout's perfbench/ is changed; the
+parent's interquartile range, and the change has no more incorrect, failed
+or non-zero-exit runs than the parent. Directions and the run length come
+from the change checkout's BENCHMARK.json. Nothing under either checkout's perfbench/ is changed; the
 benchmark builds into each checkout's own build directory.
 
     python3 tools/ab.py PARENT CHANGE --workload fleet_dense8 --seeds 61-70
@@ -61,6 +62,8 @@ def summarize(runs, better):
              if "parent" in s and "change" in s]
     bad = [r for r in runs if not r["correct"] or r["failed"] or r["exit"]]
     print(f"{len(pairs)} pairs; {len(bad)} runs incorrect, failed or exited non-zero")
+    # a gain does not count when the change fails runs the parent passes
+    worse = sum(r["side"] == "change" for r in bad) > sum(r["side"] == "parent" for r in bad)
     for r in bad:
         print(f"  {r['side']} seed {r['seed']}: correct={r['correct']} "
               f"failed={r['failed']} exit={r['exit']}")
@@ -76,7 +79,7 @@ def summarize(runs, better):
         wins = sum(1 for x, y in zip(a, b) if sign * (x - y) > 0)
         gap = sign * (quantile(a, 0.5) - quantile(b, 0.5))
         iqr = quantile(a, 0.75) - quantile(a, 0.25)
-        holds = wins * 10 >= 9 * len(a) and gap > iqr
+        holds = wins * 10 >= 9 * len(a) and gap > iqr and not worse
         side = lambda xs: (f"{quantile(xs, .5):.4g} [{quantile(xs, .25):.4g}, "
                            f"{quantile(xs, .75):.4g}]")
         print(f"{m:28s} {side(a):>30s} {side(b):>30s} {wins:>3d}/{len(a):<3d}"
@@ -89,7 +92,6 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", help="e.g. 61-70 or 1,5,9")
-    ap.add_argument("--seconds", type=int, default=5)
     ap.add_argument("--trace", type=int, default=0)
     ap.add_argument("--out", help="append every parsed run to this JSON-lines file")
     ap.add_argument("--from", dest="src", help="summarize runs from a JSON-lines file")
@@ -108,7 +110,8 @@ def main():
         order = ["parent", "change"] if k % 2 == 0 else ["change", "parent"]
         for side in order:
             r = {"workload": args.workload, "seed": seed, "side": side, "trace": args.trace,
-                 **run_once(getattr(args, side), args.workload, seed, args.seconds, args.trace)}
+                 **run_once(getattr(args, side), args.workload, seed, spec["run_seconds"],
+                            args.trace)}
             runs.append(r)
             print(f"seed {seed} {side}: " + " ".join(
                 f"{m['name']}={r['metrics'][m['name']]:.4g}"
