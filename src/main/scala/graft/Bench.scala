@@ -1,7 +1,8 @@
 package graft
 
 /** Driver-run benchmark: every SparkEntry query timed at
-  * SPARK_GRAFT_SF_DIR, one JSON line to stdout AND to a known file.
+  * SPARK_GRAFT_SF_DIR, a JSON digest as the last stdout line and the
+  * full JSON to a known file.
   *
   * Measurement discipline (round-2/3 verdict items):
   *  - queries run in SORTED name order — per-query numbers are comparable
@@ -20,12 +21,70 @@ package graft
   *    `cpu_total` / `load_avg_end`): wall inflating while CPU stays flat
   *    is machine contention, not a plan regression — the r3 drift
   *    question becomes answerable from the artifact alone;
-  *  - the JSON line is also written to `SPARK_GRAFT_BENCH_OUT` (default
-  *    /tmp/graft_bench.json) and printed with a `GRAFT_BENCH_JSON:`
-  *    prefix — round 1/2 artifacts show the bare stdout line drowned in
-  *    sbt noise and the driver recorded `"parsed": null`.
+  *  - the full JSON (every entry's wall and CPU for both passes) goes to
+  *    `SPARK_GRAFT_BENCH_OUT` (default /tmp/graft_bench.json) and to
+  *    `BENCH_FULL_LAST_RUN.json`; the last stdout line is a bare JSON
+  *    digest of at most 1.5 KB ([[lastLine]]).
   */
 object Bench {
+
+  /** One timed entry: a registry query or a staging step. */
+  private[graft] final case class Timing(
+    name: String, wallSec: Double, cpuSec: Double, ok: Boolean)
+
+  /** The last stdout line: a bare JSON object of at most 1.5 KB with the
+    * registry's names (`BenchSpec` checks the worst case), so that a
+    * consumer keeping only a 2,000-char tail of the output still parses
+    * it. It holds the two pass totals, the calibration (`calib` keys, in
+    * seconds), the error counts with the first 10 failed names, each
+    * pass's top 10 entries by wall, the codegen compiles per pass and the
+    * number of persistent indexes built and reused. The per-entry maps
+    * are in the full JSON file only. */
+  private[graft] def lastLine(
+      pass1: Seq[Timing], pass2: Seq[Timing], calib: Seq[(String, Double)],
+      compilesP1: Long, compilesP2: Long,
+      indexBuilt: Int, indexReused: Int): String = {
+    def num(x: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, x)
+    def top(rs: Seq[Timing]): String =
+      obj(rs.sortBy(-_.wallSec).take(10).map(t => t.name -> num(t.wallSec)))
+    obj(Seq(
+      "metric" -> str("total"),
+      "value" -> num(pass1.map(_.wallSec).sum),
+      "unit" -> str("sec"),
+      "total_2nd" -> num(pass2.map(_.wallSec).sum),
+      "calib_sec" -> obj(calib.map { case (k, v) => k -> num(v) }),
+      "n_entries" -> pass1.size.toString,
+      "n_errors" -> pass1.count(!_.ok).toString,
+      "n_errors_2nd" -> pass2.count(!_.ok).toString,
+      "first_errors" -> list(failed(pass1 ++ pass2).distinct.take(10)),
+      "top_wall" -> top(pass1),
+      "top_wall_2nd" -> top(pass2),
+      "compiles_p1" -> compilesP1.toString,
+      "compiles_p2" -> compilesP2.toString,
+      "n_index_built" -> indexBuilt.toString,
+      "n_index_reused" -> indexReused.toString))
+  }
+
+  // JSON building blocks; names and paths here carry no quote, backslash
+  // or control character
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => s"${str(k)}:$v" }.mkString("{", ",", "}")
+  private def str(s: String): String = "\"" + s + "\""
+  private def list(xs: Seq[String]): String = xs.map(str).mkString("[", ",", "]")
+  private def failed(rs: Seq[Timing]): Seq[String] = rs.filterNot(_.ok).map(_.name)
+
+  /** Live threads by name, digits folded to `#`: the bench-end audit that
+    * names the pools behind a thread-count drift. */
+  private def printThreads(tag: String): Unit = {
+    val t = new Array[Thread](Thread.activeCount() * 2 + 16)
+    val h = t.take(Thread.enumerate(t))
+      .groupBy(_.getName.replaceAll("[0-9]+", "#"))
+      .view.mapValues(_.length).toMap
+    println(s"[probe] $tag total=${h.values.sum}")
+    h.toSeq.sortBy(-_._2).take(12).foreach { case (k, v) =>
+      println(f"[probe]   $v%4d  $k")
+    }
+  }
 
   private val calibSink = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -103,7 +162,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = graft.core.Sessions.cpus
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // calibrate BEFORE the Spark session exists: nothing else is running
     // in the JVM, so the numbers are machine speed, not contention
@@ -114,7 +173,7 @@ object Bench {
     val spark = graft.core.Sessions.local(cpus)
 
     // opt-out list for corpus shapes that invalidate a query's cost model
-    // (e.g. ScaleUp DENSIFIES the co-purchase graph — same nodes, 10×
+    // (e.g. `Cli scaleup` DENSIFIES the co-purchase graph — same nodes, 10×
     // degree — which grows triangle wedge work quadratically by
     // construction; a true larger corpus grows the node set instead).
     // Exclusions are recorded in the JSON artifact, never silent.
@@ -177,8 +236,6 @@ object Bench {
     def cpuNow(): Long = graft.core.PhaseLog.cpuNanos()
     if (cpuNow() < 0)
       System.err.println("[bench] process CPU time unavailable on this JVM")
-
-    case class Timing(name: String, wallSec: Double, cpuSec: Double, ok: Boolean)
 
     def timed(name: String)(body: => Unit): Timing = {
       val c0 = cpuNow()
@@ -265,7 +322,7 @@ object Bench {
     // pools don't accumulate per pass (the r5 leak was +32/sink/pass;
     // what remains is Spark's keep-alive-cached block-manager pools,
     // whose idle threads die after 60s — a high-water mark, not growth;
-    // ThreadProbe prints the name histogram when this drifts)
+    // the bench-end name histogram shows when this drifts)
     val threadsP1 = Thread.activeCount()
     val results2 = runPass()
     val threadsP2 = Thread.activeCount()
@@ -278,14 +335,6 @@ object Bench {
     val (calibSt2, calibMt2) = calibrate(math.max(1, cpus.toInt))
     val (calibMemSt2, calibMemMt2) = calibrateMem(math.max(1, cpus.toInt))
 
-    def dict(rs: Seq[Timing], f: Timing => Double): String =
-      rs.map(t => s"\"" + t.name + "\":" + f(t)).mkString("{", ",", "}")
-    // per-pass error arrays: merging them hid whether a failure was
-    // pass-2-only (warm-state problem) or pass-1 (cold-plan problem)
-    def errList(rs: Seq[Timing]): String =
-      rs.collect { case t if !t.ok => "\"" + t.name + "\"" }.mkString("[", ",", "]")
-    val errs = errList(results)
-    val errs2 = errList(results2)
     val total = results.map(_.wallSec).sum
     val total2 = results2.map(_.wallSec).sum
     // keep the single -1 "unavailable" sentinel — summing the per-query
@@ -298,34 +347,24 @@ object Bench {
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
 
-    // COMPACT summary lines first, then the JSON line LAST in stdout
-    // (round-7 verdict #3, third attempt at r6 #3). r10 contract update:
-    // the line now appears TWICE — once in normal flow below and once
-    // re-emitted by a JVM shutdown hook so the LAST occurrence survives
-    // any teardown logging; consumers must take the last complete
-    // occurrence (both copies are identical and ≤ ~1.5 KB):
-    // the driver keeps a bounded END-anchored tail of stdout, and r7's
-    // tail still started mid-JSON because the line was printed twice with
-    // summary lines AFTER it. Last + small (top-5 dicts, ≤ ~1.5 KB)
-    // means the complete JSON always survives the tail bound.
-    def top(rs: Seq[Timing], f: Timing => Double, n: Int): String =
-      rs.sortBy(t => -f(t)).take(n)
-        .map(t => f"${t.name}=${f(t)}%.2f").mkString(",")
+    // readable summary lines first; the JSON digest is the LAST stdout
+    // line (see the shutdown hook below)
+    val calib = Seq(
+      "st" -> calibSt, "mt" -> calibMt, "end_st" -> calibSt2, "end_mt" -> calibMt2,
+      "mem_st" -> calibMemSt, "mem_mt" -> calibMemMt,
+      "mem_end_st" -> calibMemSt2, "mem_end_mt" -> calibMemMt2)
     println(f"GRAFT_BENCH_SUMMARY: total=$total%.2f s pass2=$total2%.2f s " +
       f"entries=${results.size} cpu=${cpuSum(results)}%.2f s load_end=$loadAvg%.2f " +
       f"threads=${Thread.activeCount()} threads_p1=$threadsP1 threads_p2=$threadsP2 " +
       f"compiles_p1=$compilesP1 compiles_p2=$compilesP2 " +
-      f"calib_st=$calibSt%.3f calib_mt=$calibMt%.3f " +
-      f"calib_end_st=$calibSt2%.3f calib_end_mt=$calibMt2%.3f " +
-      f"calib_mem_st=$calibMemSt%.3f calib_mem_mt=$calibMemMt%.3f " +
-      f"calib_mem_end_st=$calibMemSt2%.3f calib_mem_end_mt=$calibMemMt2%.3f")
-    println(s"GRAFT_BENCH_TOP_WALL: ${top(results, _.wallSec, 10)}")
-    println(s"GRAFT_BENCH_TOP_CPU: ${top(results, _.cpuSec, 10)}")
-    println(s"GRAFT_BENCH_TOP_WALL_2ND: ${top(results2, _.wallSec, 10)}")
+      calib.map { case (k, v) => f"calib_$k=$v%.3f" }.mkString(" "))
+    // the top 10 by wall of each pass are in the JSON digest
+    println("GRAFT_BENCH_TOP_CPU: " + results.sortBy(-_.cpuSec).take(10)
+      .map(t => f"${t.name}=${t.cpuSec}%.2f").mkString(","))
     // end-of-run thread-name histogram (round-6 verdict #4): the absolute
     // high-water is Spark pool sizing, not growth — the histogram in the
     // bench tail names the pools so a drift is diagnosable from artifacts
-    ThreadProbe.printTop("bench_end")
+    printThreads("bench_end")
 
     // "action" stamps the timing convention into the artifact: r1–r11
     // records were count()-actioned (Catalyst could prune work), r11+
@@ -334,24 +373,31 @@ object Bench {
     // which persistent graft_index_* generations THIS process built vs
     // found published (r12 verdict What's-wrong #5): pass-1 totals
     // depend on it, so the artifact must say whether pass-1 was cold
-    def strList(xs: Seq[String]): String =
-      xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val shared =
-      s""""action":"noop","cpu_total":${cpuSum(results)},"total_2nd":$total2,"cpu_total_2nd":${cpuSum(results2)},"n_entries":${results.size},"load_avg_end":$loadAvg,"calib_st_sec":$calibSt,"calib_mt_sec":$calibMt,"calib_end_st_sec":$calibSt2,"calib_end_mt_sec":$calibMt2,"calib_mem_st_sec":$calibMemSt,"calib_mem_mt_sec":$calibMemMt,"calib_mem_end_st_sec":$calibMemSt2,"calib_mem_end_mt_sec":$calibMemMt2,"errors":$errs,"errors_2nd":$errs2,"excluded":${strList(excluded.toSeq.sorted)},"index_built":${strList(graft.core.IndexEvents.built)},"index_reused":${strList(graft.core.IndexEvents.reused)},"sf":"$sfDir""""
-    // the stdout line carries the FULL per-query wall + CPU maps for both
-    // passes (r12 verdict Next #1): the ≤1.5 KB top-5 digest left every
-    // consumer of the stdout artifact per-query-blind for twelve rounds —
-    // the full maps are a few tens of KB, still one line, and the
-    // once-and-last contract below is unchanged. The same JSON goes to
-    // the artifact file.
-    val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${dict(results, _.wallSec)},"cpu_queries":${dict(results, _.cpuSec)},"queries_2nd":${dict(results2, _.wallSec)},"cpu_queries_2nd":${dict(results2, _.cpuSec)},$shared,"full":"$outPath"}"""
-    val json = fullJson
+    def perEntry(rs: Seq[Timing], f: Timing => Double): String =
+      obj(rs.map(t => t.name -> f(t).toString))
+    // the full per-entry wall + CPU maps of both passes, a few tens of KB;
+    // per-pass error arrays: merging them hid whether a failure was
+    // pass-2-only (warm-state problem) or pass-1 (cold-plan problem)
+    val fullJson = obj(Seq(
+      "metric" -> str("total"), "value" -> total.toString, "unit" -> str("sec"),
+      "queries" -> perEntry(results, _.wallSec),
+      "cpu_queries" -> perEntry(results, _.cpuSec),
+      "queries_2nd" -> perEntry(results2, _.wallSec),
+      "cpu_queries_2nd" -> perEntry(results2, _.cpuSec),
+      "action" -> str("noop"), "cpu_total" -> cpuSum(results).toString,
+      "total_2nd" -> total2.toString, "cpu_total_2nd" -> cpuSum(results2).toString,
+      "n_entries" -> results.size.toString, "load_avg_end" -> loadAvg.toString) ++
+      calib.map { case (k, v) => s"calib_${k}_sec" -> v.toString } ++ Seq(
+      "errors" -> list(failed(results)), "errors_2nd" -> list(failed(results2)),
+      "excluded" -> list(excluded.toSeq.sorted),
+      "index_built" -> list(graft.core.IndexEvents.built),
+      "index_reused" -> list(graft.core.IndexEvents.reused),
+      "sf" -> str(sfDir), "full" -> str(outPath)))
+    val json = lastLine(results, results2, calib, compilesP1, compilesP2,
+      graft.core.IndexEvents.built.size, graft.core.IndexEvents.reused.size)
     // the full JSON goes to BOTH the configured artifact path and a
-    // REPO-ROOT file (r12 verdict Next #1's second half): /tmp is not
-    // retained by the driver, and its bounded stdout tail (2,000 chars
-    // in every BENCH_r*.json artifact) cannot hold the full maps — the
-    // working-directory copy survives with the workspace either way.
+    // working-directory file: /tmp may not be kept, and a 2,000-char
+    // stdout tail cannot hold the full maps.
     for (p <- Seq(outPath, "BENCH_FULL_LAST_RUN.json"))
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), fullJson + "\n")
       catch { case e: Throwable =>
@@ -365,7 +411,7 @@ object Bench {
       System.err.println(s"[bench] spark.stop() failed: ${e.getMessage}")
     }
     // NOTHING may print after this line. Contract (aligned with
-    // build.sbt): GRAFT_BENCH_JSON appears on stdout exactly ONCE and
+    // build.sbt): the JSON digest appears on stdout exactly ONCE and
     // LAST — unless some library's shutdown logging trails it, in which
     // case a guarded JVM shutdown hook re-emits it so the LAST complete
     // occurrence is still the JSON line (r9 verdict missing #1; ADVICE
@@ -374,7 +420,7 @@ object Bench {
     // println, System.out is swapped for a tripwire stream; the hook
     // re-prints only if any bytes were written through it since.
     val trailed = new java.util.concurrent.atomic.AtomicBoolean(false)
-    println(s"GRAFT_BENCH_JSON: $json")
+    println(json)
     System.out.flush()
     val realOut = System.out
     System.setOut(new java.io.PrintStream(new java.io.OutputStream {
@@ -386,7 +432,7 @@ object Bench {
     }, true))
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       if (trailed.get()) {
-        realOut.println(s"GRAFT_BENCH_JSON: $json")
+        realOut.println(json)
         realOut.flush()
       }
     }))

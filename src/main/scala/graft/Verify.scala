@@ -10,8 +10,7 @@ object Verify {
       // (builder-side iteration aid; the driver always passes two args)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSeq))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Sessions.local(cpus)
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus)
     new java.io.File(outDir).mkdirs()
     def dump(name: String): Boolean = {
       val t0 = System.nanoTime()

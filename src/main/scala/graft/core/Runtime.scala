@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
 /** The one SparkSession recipe for every entrypoint (Bench / Verify /
-  * Explain / RunOne) — the four mains used to copy-paste this block and
-  * drifted (cpu defaults, and briefly a cache-partitioning conf whose
+  * Cli) — separate mains used to copy-paste this block and drifted (cpu
+  * defaults, and briefly a cache-partitioning conf whose
   * rationale turned out backwards for this Spark version: with AQE the
   * default already constrains cached plans to keep their partitioning,
   * while enabling `canChangeCachedPlanOutputPartitioning` licenses AQE
@@ -53,6 +53,10 @@ object Sessions {
   val codegenReuse: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "8192",
     "spark.sql.codegen.useIdInClassName" -> "false")
+
+  /** Local task threads (and shuffle partitions) of every entrypoint's
+    * session: `SPARK_GRAFT_CPUS`, default 4. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
 
   def local(cpus: String): org.apache.spark.sql.SparkSession = {
     val s = org.apache.spark.sql.SparkSession.builder()

@@ -49,7 +49,7 @@ object Tables {
     *    timezone is pinned to UTC ([[Sessions.local]]), matching DuckDB's
     *    `epoch_us(ts)` on the same naive value;
     *  - raw nanosecond BIGINT (TIMESTAMP(NANOS) sources Spark surfaces as
-    *    LongType, and the [[graft.ScaleUp]] probe corpora): `div 1000`
+    *    LongType, and the `graft.Cli scaleup` probe corpora): `div 1000`
     *    truncates ns→µs exactly as DuckDB's `epoch_us` does.
     * Every µs is representable in both paths, so the two generations hash
     * identically through the oracle gate. */

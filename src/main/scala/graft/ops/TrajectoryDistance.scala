@@ -66,9 +66,12 @@ object TrajectoryDistance {
     else greatCircleKm(plng, plat, slng + t * vx, slat + t * vy)
   }
 
-  /** Polyline length in km. */
+  /** Polyline length in km: consecutive-pair distances summed left to
+    * right from 0.0 (an iterator's `sum` is that fold); 0.0 for fewer
+    * than two points, where `sliding(2)` would yield a one-point window. */
   def lengthKm(tr: IndexedSeq[P]): Double =
-    tr.sliding(2).map { case Seq(a, b) => greatCircleKm(a, b) }.sum
+    if (tr.length < 2) 0.0
+    else tr.sliding(2).map { case Seq(a, b) => greatCircleKm(a, b) }.sum
 
   /** Angular component (TC-S:110–132): angle between the two chords in
     * raw-degree space; degenerate chords count as 90°. */

@@ -473,7 +473,7 @@ object Ext {
     * counts (c1 = Σ_w2 c12, exact integers) instead of a second
     * stream-wide shuffle (r13, guide §2.3: the r12 shape evaluated the
     * tokenize+explode stream three times — big, uni, probe — plus a
-    * construction-time driver countDistinct for V; StageProbe showed
+    * construction-time driver countDistinct for V; per-stage CPU showed
     * three ~7 CPU-s 32-task stages on identical work). Scoring joins
     * the stream back to the counts on the bigram key — the model side
     * is |distinct bigrams| ≪ stream and AQE broadcasts it when small;
@@ -1087,7 +1087,7 @@ object Ext {
         // HAND-ROLLED hot loop (the blindzone r10 lesson applied up
         // front): the encode makes |docs|·|units|·|ladder| replace
         // calls — hundreds of millions at 10× bench scale — and an
-        // early RunOne sweep showed the same warm-JVM CPU bimodality
+        // early single-query sweep showed the same warm-JVM CPU bimodality
         // the pair scan had (rep walls 14.6/40.8/12.6/7.8 s at
         // 45/265/48/36 executor-CPU on identical work) with the
         // JDK `String.replace` + Scala combinator chain as the hot

@@ -23,7 +23,7 @@ object Pipeline {
     *
     * LINE KEYSPACE SCALES WITH THE CORPUS (r11 verdict missing #1): the
     * old `user_id % 8` derivation kept 8 lines at every scale, so a
-    * grow-parts probe corpus (ScaleUp: replicas get user ids offset by
+    * grow-parts probe corpus (`Cli scaleup`: replicas get user ids offset by
     * 100 000 000, a multiple of 8) multiplied per-line fleet size by the
     * factor and per-line DBSCAN pair work by factor² — a corpus
     * artifact, not an operator cost. Deriving the line from the replica

@@ -5,11 +5,17 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Narrow bridge to `private[sql]` constructors needed when building
-  * DataFrames from custom logical plans (`graft.plans.AsOfJoin`). Lives
+  * DataFrames from custom logical plans (`graft.plans.AsOfJoin`), and to
+  * the `private[spark]` listener bus that `graft.Cli run` drains. Lives
   * under `org.apache.spark.sql` for package-private access — the same
   * technique every third-party Spark extension library uses; nothing else
   * belongs in this package. */
 object Bridge {
+
+  /** Blocks until every event posted so far has reached the listeners,
+    * so a listener's view of a finished action is complete. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(

@@ -7,7 +7,7 @@ import graft.SparkSpec
 /** [[Tables.tsMicros]] — the event-time loader must yield the SAME exact
   * integer microseconds whichever physical type a corpus generation
   * stored: TIMESTAMP(µs)/NTZ (current testdata) or raw nanosecond BIGINT
-  * (TIMESTAMP(NANOS) sources surfaced as LongType; ScaleUp-derived
+  * (TIMESTAMP(NANOS) sources surfaced as LongType; `Cli scaleup`-derived
   * probe corpora of that era). The BIGINT branch has no live corpus in
   * this container anymore, so this spec keeps it honest. */
 class TablesSpec extends SparkSpec {

@@ -38,6 +38,11 @@ class PipelineSpec extends SparkSpec {
     ("L2", 1, 1, 22.60, 114.0), ("L2", 2, 1, 22.60, endLng)
   ).toDF("existLine_id", "direction", "position", "x", "y")
 
+  // (linenumber, id, patternID, cluster) rows of a clustering, sorted
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
+      r.getInt(3))).sortBy(t => (t._1, t._2, t._3)).toSeq
+
   private val params = Map(
     "L1" -> TrajectoryClustering.Params(eps = 2.0, minSamples = 2),
     "L2" -> TrajectoryClustering.Params(eps = 2.0, minSamples = 2))
@@ -108,13 +113,10 @@ class PipelineSpec extends SparkSpec {
     val prm = Map(
       "LH" -> TrajectoryClustering.Params(5.0, 2),
       "LS" -> TrajectoryClustering.Params(5.0, 2))
-    def sortedRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getInt(3))).sortBy(t => (t._1, t._2, t._3))
     val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
     val dist = sortedRows(
       TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
-    assert(local.nonEmpty && local.toSeq == dist.toSeq)
+    assert(local.nonEmpty && local == dist)
     // and the hot line's cost really is bin-isolated in the plan
     val plan = Balance.plan(Seq("LH" -> 1600.0, "LS" -> 16.0), targetBins = 2)
     assert(plan("LH") != plan("LS"))
@@ -134,16 +136,13 @@ class PipelineSpec extends SparkSpec {
     val pats = rows.toDF("id", "linenumber", "lng", "lat", "t", "patternID")
       .withColumn("t", to_timestamp($"t", "yy-MM-dd HH:mm:ss"))
     val prm = Map("LP" -> TrajectoryClustering.Params(5.0, 2))
-    def sortedRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getInt(3))).sortBy(t => (t._1, t._2, t._3))
     // sanity: the cross-group bound really is above eps (prune active)
     assert(TrajectoryDistance.lowerBoundKm(
       114.0, 22.5, 114.003, 22.5, 114.1, 22.5, 114.103, 22.5) > 5.0)
     val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
     val dist = sortedRows(
       TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
-    assert(local.nonEmpty && local.toSeq == dist.toSeq)
+    assert(local.nonEmpty && local == dist)
     // both groups cluster internally (distinct clusters), so the pruned
     // relation still carried every within-group edge
     assert(local.map(_._4).toSet.size >= 2)
@@ -159,6 +158,24 @@ class PipelineSpec extends SparkSpec {
     val out = TrajectoryClustering.cluster(lone,
       Map("L9" -> TrajectoryClustering.Params(5.0, 2)), maxLocalPairs = 0)
     assert(out.select($"cluster").as[Int].collect().toSeq == Seq(-1))
+  }
+
+  test("stage 2: a one-point trajectory clusters, same labels on both paths") {
+    // a vehicle's last ping after a signal-loss episode starts a pattern
+    // of its own: one point, polyline length 0
+    val rows = (for {
+      v <- 1 to 4
+      n <- 0 to 2
+    } yield (s"V$v", "L1", 114.0 + n * 0.001 + v * 1e-5, 22.5,
+      f"19-02-01 08:00:${n * 10}%02d", 1L)) :+
+      (("V1", "L1", 114.05, 22.5, "19-02-01 08:30:00", 2L))
+    val pats = rows.toDF("id", "linenumber", "lng", "lat", "t", "patternID")
+      .withColumn("t", to_timestamp($"t", "yy-MM-dd HH:mm:ss"))
+    val prm = Map("L1" -> TrajectoryClustering.Params(5.0, 2))
+    val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
+    val dist = sortedRows(
+      TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
+    assert(local.length == 5 && local == dist)
   }
 
   test("paramsFrom: reference param-table shapes load; null rows dropped") {

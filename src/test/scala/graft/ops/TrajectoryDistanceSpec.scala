@@ -123,4 +123,21 @@ class TrajectoryDistanceSpec extends AnyFunSuite {
         s"totalWithLengths $a $b")
     }
   }
+
+  test("lengthKm of fewer than two points is 0.0") {
+    assert(lengthKm(tr()) == 0.0)
+    assert(lengthKm(tr((114.0, 22.5))) == 0.0)
+  }
+
+  test("lengthKm sums pair distances left to right from 0.0, bit for bit") {
+    val rnd = new scala.util.Random(11)
+    for (_ <- 1 to 500) {
+      val pts = tr(Seq.fill(2 + rnd.nextInt(30))(
+        (114.0 + rnd.nextDouble() * 0.3, 22.4 + rnd.nextDouble() * 0.3)): _*)
+      val ref = (1 until pts.length)
+        .foldLeft(0.0)((s, i) => s + greatCircleKm(pts(i - 1), pts(i)))
+      assert(java.lang.Double.doubleToRawLongBits(lengthKm(pts)) ==
+        java.lang.Double.doubleToRawLongBits(ref), s"lengthKm $pts")
+    }
+  }
 }
