@@ -5,7 +5,8 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
@@ -74,33 +75,41 @@ object Cli {
     * cold cost (codegen, JIT), later reps the warm cost. Each rep writes
     * to the noop sink, as [[Bench]] does (a `count()` lets Catalyst prune
     * the work being timed), then prints its [[PhaseLog]] line (wall, cpu,
-    * gc, compiles) and its top 8 stages by executor CPU. */
+    * gc, compiles), its process CPU split by thread group
+    * ([[ThreadCpu]]), its job and stage counts and its top 8 stages by
+    * executor CPU. */
   def run(spark: SparkSession, sfDir: String, name: String, reps: Int): Unit = {
     val query = SparkEntry.queries(name)
     val sc = spark.sparkContext
     val stages = new ConcurrentLinkedQueue[StageInfo]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
+      override def onJobStart(ev: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
       override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
         stages.add(ev.stageInfo): Unit
     }
     sc.addSparkListener(listener)
     try (1 to reps).foreach { i =>
       val log = PhaseLog.start(s"run $i:")
+      val threads0 = ThreadCpu.sample()
       query(spark, sfDir).write.format("noop").mode("overwrite").save()
       log(name)
+      ThreadCpu.sample().foreach(t1 => threads0.foreach(t0 =>
+        println(s"[threads] run $i: ${ThreadCpu.split(t0, t1)}")))
       // stage events arrive on Spark's asynchronous listener bus: the
       // last stage's may still be queued when the action returns
       org.apache.spark.sql.graft.Bridge.drainListeners(sc)
-      printStages(s"run $i", stages.asScala.toVector)
+      printStages(s"run $i", jobs.getAndSet(0), stages.asScala.toVector)
       stages.clear()
       System.gc()
     } finally sc.removeSparkListener(listener)
   }
 
-  private def printStages(tag: String, all: Seq[StageInfo]): Unit = {
+  private def printStages(tag: String, jobs: Int, all: Seq[StageInfo]): Unit = {
     val cpuNs = (s: StageInfo) => s.taskMetrics.executorCpuTime
     val runMs = (s: StageInfo) => s.taskMetrics.executorRunTime
-    println(f"[stages] $tag: stages=${all.size} " +
+    println(f"[stages] $tag: jobs=$jobs stages=${all.size} " +
       f"executor_cpu=${all.map(cpuNs).sum / 1e9}%.1f s " +
       f"executor_run=${all.map(runMs).sum / 1e3}%.1f s")
     all.sortBy(s => -cpuNs(s)).take(8).foreach { s =>
@@ -112,6 +121,55 @@ object Cli {
       println(f"[stages]   stage ${s.stageId}%4d cpu=${cpuNs(s) / 1e9}%7.1f s " +
         f"run=${runMs(s) / 1e3}%7.1f s tasks=${s.numTasks}%3d  " +
         s.name.takeWhile(_ != '\n').take(110) + spill)
+    }
+  }
+
+  /** CPU seconds of this process by thread, read from
+    * `/proc/self/task/<tid>/stat` (Linux; `sample` is None where the
+    * directory is absent). A thread that exits between two samples takes
+    * its CPU with it, so the split covers the threads alive at the end. */
+  private object ThreadCpu {
+    private val task = Paths.get("/proc/self/task")
+    private val Hz = 100.0 // USER_HZ, the unit of utime/stime on Linux
+
+    /** tid → (thread name, user + system CPU seconds). */
+    def sample(): Option[Map[String, (String, Double)]] =
+      if (!Files.isDirectory(task)) None
+      else {
+        val dirs = Files.list(task)
+        try Some(dirs.iterator().asScala.flatMap { dir =>
+          // the thread may exit between the listing and the read
+          try {
+            val stat = Files.readString(dir.resolve("stat"))
+            val open = stat.indexOf('('); val close = stat.lastIndexOf(')')
+            // after the name: state (field 3), then fields 4 on; utime and
+            // stime are fields 14 and 15
+            val f = stat.substring(close + 2).split(' ')
+            Some(dir.getFileName.toString ->
+              (stat.substring(open + 1, close), (f(11).toLong + f(12).toLong) / Hz))
+          } catch { case _: java.io.IOException => None }
+        }.toMap)
+        finally dirs.close()
+      }
+
+    /** The group of a thread, by the name the JVM and Spark give it (the
+      * kernel keeps its first 15 bytes). The launcher's `main` thread
+      * keeps the process name, `java`. */
+    def group(name: String): String =
+      if (name.contains("CompilerThre")) "jit"
+      else if (name.startsWith("GC ") || name.startsWith("G1 ")) "gc"
+      else if (name.startsWith("Executor task")) "task"
+      else if (name == "java" || name == "main") "main"
+      else "other"
+
+    /** CPU seconds per group between two samples, in a fixed order. */
+    def split(before: Map[String, (String, Double)],
+              after: Map[String, (String, Double)]): String = {
+      val by = after.toSeq.map { case (tid, (name, cpu)) =>
+        group(name) -> (cpu - before.get(tid).fold(0.0)(_._2))
+      }.groupMapReduce(_._1)(_._2)(_ + _)
+      Seq("jit", "gc", "task", "main", "other")
+        .map(g => f"$g=${by.getOrElse(g, 0.0)}%.2f").mkString("cpu s: ", " ", "")
     }
   }
 

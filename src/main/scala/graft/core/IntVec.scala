@@ -6,7 +6,7 @@ package graft.core
   * `Array[AnyRef]` (~20 B per element: 16 B box + 4–8 B slot); at the 100×
   * trajectory probe the eps-graph's ~700 M adjacency edge-ends blew the
   * shared 32 g local heap on boxing alone. This class keeps 4 B per
-  * element, which is the O(edges) memory bound the cogroup design
+  * element, which is the O(edges) memory bound the binned DBSCAN design
   * promises (`ops/TrajectoryClustering.scala`).
   */
 final class IntVec(initialCapacity: Int) {

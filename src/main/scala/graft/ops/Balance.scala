@@ -50,41 +50,6 @@ object Balance {
     assignment.toMap
   }
 
-  /** Int labels whose hash-shuffle slots (`pmod(murmur3(label), P)`) are
-    * pairwise distinct: keying a `groupByKey`/`cogroup` by `labels(bin)`
-    * instead of the natural key realizes an EXACT bin placement through
-    * the ordinary hash-partitioned Tungsten shuffle — no RDD
-    * `partitionBy` round-trip, no custom exchange. (Hash-mod placement
-    * of raw bin ids is not a bijection, so two heavy bins could land on
-    * one task; scanning for hash-distinct representatives restores the
-    * bijection.) Greedy scan, deterministic. When `nBins >
-    * numPartitions`, bins beyond the partition count reuse earlier
-    * labels round-robin — those bins co-locate, the graceful degradation
-    * of any placement with more bins than slots.
-    *
-    * The slot formula mirrors Spark's `HashPartitioning` for an int key
-    * (`Murmur3Hash(seed=42)` then `pmod`); `BalanceSpec` cross-checks it
-    * against the SQL `hash()` function so a Spark-internal change would
-    * fail loudly. */
-  def hashDistinctLabels(nBins: Int, numPartitions: Int): Array[Int] = {
-    require(nBins >= 1 && numPartitions >= 1, "need nBins, numPartitions >= 1")
-    val out = new Array[Int](nBins)
-    val used = new Array[Boolean](numPartitions)
-    var candidate = 0
-    var i = 0
-    while (i < nBins) {
-      if (i >= numPartitions) { out(i) = out(i % numPartitions); i += 1 }
-      else {
-        val h = org.apache.spark.unsafe.hash.Murmur3_x86_32
-          .hashInt(candidate, 42)
-        val slot = ((h % numPartitions) + numPartitions) % numPartitions
-        if (!used(slot)) { used(slot) = true; out(i) = candidate; i += 1 }
-        candidate += 1
-      }
-    }
-    out
-  }
-
   /** Attach a `_bin` column from a per-key cost frame `(key, cost)` and
     * place each bin on its own partition. Cost frame is collected (per-key
     * aggregate — small); the key→bin map rides a broadcast join.

@@ -30,7 +30,8 @@ import graft.core.{Geo, Quantifiers, TimeOps}
   *  step 2  if EVERY vehicle in a cluster has a 0.5 ping faster than
   *          10 m/s, upgrade those pings to 0.75 (∀∃ quantifier);
   *  step 3  if EVERY (vehicle, pattern) in the cluster then carries a
-  *          0.75, upgrade to 1.0;
+  *          0.75, upgrade to 1.0 (always the case once step 2 fired:
+  *          [[gradeSignal]] proves it and grades in closed form);
   *  step 4  one-step propagation: a null-signal ping directly after a
   *          graded ping inherits its grade. (As committed this fills
   *          exactly one row per graded ping — a single `lag` on the
@@ -85,48 +86,55 @@ object BlindZone {
       .drop("_dt", "_dist")
   }
 
-  /** Signal grading steps 1–4 (BZ-S:103–165). */
+  /** Signal grading steps 1–4 (BZ-S:103–165), in closed form.
+    *
+    * Let a group be one (cluster key, id, patternID) partition and
+    * `_all_valid` step 2's per-key flag (every vehicle of the key has a
+    * 0.5 ping faster than the threshold). Step 1's `row_number` gives
+    * every group EXACTLY one 0.5 ping (rn = 1). Step 2 turns it into 0.75
+    * iff its key's `_all_valid` = 1, and that flag is the same for every
+    * group of the key. So within a key either every group carries its
+    * 0.75 (`_all_valid` = 1) or none does, which makes step 3's "every
+    * (vehicle, pattern) carries a 0.75" the same flag as `_all_valid`,
+    * and step 3 upgrades every 0.75 it sees. After step 3 the rn = 1 ping
+    * holds 1.0 if `_all_valid` = 1 and 0.5 otherwise; every other ping is
+    * null. Step 4 fills a null ping from the pre-fill grade one row back
+    * in time. Hence
+    * {{{
+    * signal = rn = 1 ? (_all_valid = 1 ? 1.0 : 0.5) : lag(grade, 1) by t
+    * }}}
+    * and two facts follow: 0.75 never reaches the output, and a ping
+    * whose cluster key has a null column stays at 0.5 (the reference's
+    * per-key joins never match a null key, so such a key never
+    * upgrades). `BlindZoneSpec` keeps the four steps as written as a test
+    * reference and compares the two.
+    *
+    * Every window here partitions by the cluster key plus a suffix, so
+    * one exchange on the key serves all four (steps 1 and 4 share their
+    * partition spec); `_all_valid` is a window minimum over the
+    * per-vehicle window maximum, not an aggregate joined back. The key
+    * bounds the parallelism: lines × clusters when line-scoped, the
+    * cluster ids alone otherwise. Output columns: the key, the other
+    * input columns, then `signal`. */
   def gradeSignal(df: DataFrame, cfg: Config = Config()): DataFrame = {
     val key = clusterKey(cfg)
     val keyCols = key.map(col)
-
-    // step 1: argmax-speed ping per (cluster, vehicle, pattern) → 0.5
-    val wSpeed = Window.partitionBy((key ++ Seq("id", "patternID")).map(col): _*)
-      .orderBy(col("speed").desc, col("t"))
-    val s1 = df
-      .withColumn("_rn", row_number().over(wSpeed))
-      .withColumn("signal", when(col("_rn") === 1, 0.5))
-      .drop("_rn")
-
-    // step 2: ∀ vehicle ∃ (0.5 ∧ speed > threshold) per cluster → 0.75
-    val c1 = s1.groupBy((key :+ "id").map(col): _*)
-      .agg(Quantifiers.existsFlag(
-        col("signal") === 0.5 && col("speed") > cfg.upgradeSpeedMps).as("_has"))
-      .groupBy(keyCols: _*).agg(min(col("_has")).as("_all_valid"))
-    val s2 = s1.join(broadcast(c1), key, "left")
-      .withColumn("signal",
-        when(col("signal") === 0.5 && col("_all_valid") === 1, 0.75)
-          .otherwise(col("signal")))
-      .drop("_all_valid")
-
-    // step 3: ∀ (vehicle, pattern) ∃ 0.75 per cluster → 1.0
-    val c2 = s2.groupBy((key ++ Seq("id", "patternID")).map(col): _*)
-      .agg(Quantifiers.existsFlag(col("signal") === 0.75).as("_has"))
-      .groupBy(keyCols: _*).agg(min(col("_has")).as("_all_075"))
-    val s3 = s2.join(broadcast(c2), key, "left")
-      .withColumn("signal",
-        when(col("signal") === 0.75 && col("_all_075") === 1, 1.0)
-          .otherwise(col("signal")))
-      .drop("_all_075")
-
-    // step 4: one-step propagation (see class doc)
-    val wTime = Window.partitionBy((key ++ Seq("id", "patternID")).map(col): _*)
-      .orderBy("t")
-    s3.withColumn("_prev", lag(col("signal"), 1).over(wTime))
-      .withColumn("signal",
-        when(col("signal").isNull && col("_prev").isNotNull, col("_prev"))
-          .otherwise(col("signal")))
-      .drop("_prev")
+    val group = Window.partitionBy(keyCols ++ Seq(col("id"), col("patternID")): _*)
+    val byVehicle = Window.partitionBy(keyCols :+ col("id"): _*)
+    df.repartition(keyCols: _*)
+      // step 1: argmax-speed ping per (cluster, vehicle, pattern)
+      .withColumn("_rn", row_number().over(group.orderBy(col("speed").desc, col("t"))))
+      // step 2: ∀ vehicle ∃ (argmax ping ∧ speed > threshold) per cluster
+      .withColumn("_has", Quantifiers.existsFlag(
+        col("_rn") === 1 && col("speed") > cfg.upgradeSpeedMps).over(byVehicle))
+      .withColumn("_all_valid", min(col("_has")).over(Window.partitionBy(keyCols: _*)))
+      // steps 1–3 as one grade, then step 4's one-step propagation
+      .withColumn("_grade", when(col("_rn") === 1,
+        when(keyCols.map(_.isNotNull).reduce(_ && _) && col("_all_valid") === 1, 1.0)
+          .otherwise(0.5)))
+      .withColumn("signal", coalesce(col("_grade"),
+        lag(col("_grade"), 1).over(group.orderBy("t"))))
+      .select((keyCols ++ df.columns.filterNot(key.contains).map(col)) :+ col("signal"): _*)
   }
 
   /** Full stage 3. */

@@ -69,7 +69,7 @@ object Dbscan {
     * on random matrices.
     *
     * Exists for the distributed cluster path: a T×T matrix forces O(T²)
-    * rows through the per-line cogroup task, while the eps-graph is only
+    * rows through the per-line DBSCAN task, while the eps-graph is only
     * the pairs that can ever matter — the asymptotic difference between
     * shuffling every pair and shuffling the (typically sparse) neighbor
     * graph. */
@@ -77,12 +77,12 @@ object Dbscan {
     fitNeighborhoods(adj.map(graft.core.IntVec.wrap), minSamples)
 
   /** [[fitAdjacency]] over primitive [[graft.core.IntVec]] neighbor lists —
-    * the form the distributed cogroup builds directly (no boxed copies;
+    * the form the distributed path builds directly (no boxed copies;
     * the BFS queue is a primitive head-indexed vector, so the whole pass
     * stays at 4 B per edge-end). Semantics identical to [[fit]].
     *
     * The labels depend only on each point's neighborhood SET, never on
-    * the order of a list (the cogroup fills lists in whatever order the
+    * the order of a list (the DBSCAN task fills lists in whatever order the
     * pair cells arrive). Each cluster is finished before the next starts,
     * and seeds are taken in index order, so it suffices that one BFS
     * reaches an order-free set. A BFS from core point i labels exactly

@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Stage 2 — per-line trajectory clustering, re-expressed Spark-first.
   *
@@ -12,20 +19,23 @@ import org.apache.spark.sql.functions._
   * (`Standalone/Trajectory Clustering.py:143–191`) — every row crossing
   * JVM↔Python. Here the whole stage is native:
   *
-  *  - assembly sorts the collected points by time (`array_sort` on a
-  *    (t,lng,lat) struct) — the reference silently depends on read order,
-  *    a latent nondeterminism fixed, not copied (SURVEY.md §7.4);
+  *  - assembly sorts each trajectory's points by (t, lng, lat) — the
+  *    reference silently depends on read order, a latent nondeterminism
+  *    fixed, not copied (SURVEY.md §7.4);
   *  - the TRACLUS distance reads only a trajectory's chord endpoints and
   *    polyline length ([[TrajectoryDistance.totalKm]]), so each line
   *    becomes ONE row: its roster and a primitive summary array. Pairs
   *    are scored by a primitive loop over that array inside (line, salt)
-  *    cells, never as Spark rows, and DBSCAN runs in-JVM per line;
+  *    cells, never as Spark rows, and DBSCAN runs in-JVM per line; past
+  *    the line shuffle the stage is RDD code, since plan machinery
+  *    (encoders, generated classes, AQE jobs) costs more than the
+  *    driver-sized data it moves;
   *  - per-line (eps, minSamples) parameters ride a broadcast map instead
   *    of a driver dict captured in Python closures.
   *
   * Scale: the O(T²) pair work is per line (T = trajectories of ONE bus
   * line on one day — hundreds to thousands, not millions) and is split
-  * over `pairSalts` cells per line; the DBSCAN cogroup places lines by
+  * over `pairSalts` cells per line; the DBSCAN step places lines by
   * their T² cost ([[Balance.plan]]), so one heavy line does not queue
   * behind the others.
   */
@@ -93,22 +103,10 @@ object TrajectoryClustering {
       StructField("min_samples", IntegerType)))))
   }
 
-  /** Assemble time-ordered trajectories:
-    * (linenumber, id, patternID) → array<struct<lng,lat>>. */
-  def assemble(patterns: DataFrame): DataFrame =
-    patterns
-      .groupBy(col("linenumber"), col("id"), col("patternID").cast("string").as("patternID"))
-      .agg(array_sort(collect_list(struct(col("t"), col("lng"), col("lat")))).as("_tpts"))
-      .withColumn("points",
-        transform(col("_tpts"), p => struct(
-          p.getField("lng").cast("double").as("lng"),
-          p.getField("lat").cast("double").as("lat"))))
-      .drop("_tpts")
-
   /** One line with parameters: its roster (`id`, `patternID`) in tid
     * order and its summaries, 5 doubles per tid (head lng/lat, last
     * lng/lat, polyline km). */
-  private type LineRow = (String, Array[String], Array[String], Array[Double])
+  private[ops] type LineRow = (String, Array[String], Array[String], Array[Double])
 
   /** One cell's output: edge pairs (i, j) with finite d ≤ eps, NaN pairs,
     * both packed two ints a pair, and the cell's max-finite witness. */
@@ -121,6 +119,15 @@ object TrajectoryClustering {
     * half a million pairs. */
   private val CellRowInts = 1 << 20
 
+  /** Name of the cell fan-out RDD, the shuffle that spreads each line's
+    * pair work over (line, salt) cells; `PlanSpec` finds it by name. */
+  private[graft] val CellShuffleName = "stage2 cells"
+
+  private val labelSchema = StructType(Seq(
+    StructField("linenumber", StringType), StructField("id", StringType),
+    StructField("patternID", StringType),
+    StructField("cluster", IntegerType, nullable = false)))
+
   /** Cluster each line's trajectories; returns
     * `(linenumber, id, patternID, cluster)` with −1 = noise.
     *
@@ -130,104 +137,95 @@ object TrajectoryClustering {
     * (TC-P:309–312); non-finite pair distances are clamped to 2× the max
     * finite distance (TC-P:298–303).
     *
-    * Both paths start from [[lineRows]]: one row per line, its tid = the
-    * position in UTF-8-binary (id, patternID) order (the reference relies
-    * on pandas groupby order; this pins it). The distributed path:
+    * The stage's plan machinery costs more than the driver-sized data it
+    * moves, so past the line shuffle it runs on RDDs: no encoders, no
+    * generated classes, one job per action. Both paths start from
+    * [[lineRows]]: one row per line, its tid = the position in
+    * UTF-8-binary (id, patternID) order (the reference relies on pandas
+    * groupby order; this pins it). The line shuffle runs once, when the
+    * line rows are built, and every later action reads its output, so
+    * nothing is persisted. The per-line trajectory counts collected from
+    * the rows drive the small-input branch and the DBSCAN bin placement.
+    * The distributed path:
     *
-    *  1. The line row fans out to `pairSalts` (line, salt) cells on an
-    *     EXPLICIT user-numbered repartition (r9): the line rows are
-    *     byte-tiny while the work in them is quadratic, so AQE's byte-based
-    *     coalescing would fold the cell grid into one or two tasks and
-    *     serialize the scan (measured on the earlier pair join at 10×
-    *     data: 37 s at parallelism ~1.5 → 10.6 s at ~9 once the shuffle
-    *     kept its width).
-    *     REPARTITION_BY_NUM is the one shuffle origin AQE never coalesces.
+    *  1. The line row fans out to `pairSalts` (line, salt) cells through
+    *     an RDD `HashPartitioner(numShufflePartitions)`: the line rows
+    *     are byte-tiny while the work in them is quadratic, so AQE's
+    *     byte-based coalescing would fold the cell grid into one or two
+    *     tasks and serialize the scan (measured on the earlier pair join
+    *     at 10× data: 37 s at parallelism ~1.5 → 10.6 s at ~9 once the
+    *     shuffle kept its width). An RDD shuffle is outside AQE.
     *  2. Cell s scores i ∈ {s, s+S, …} against every j ∈ (i, T) — each
     *     pair exactly once — in a primitive loop ([[CellScan]]) and emits
     *     packed rows: only pairs that can be edges leave the cell, plus
     *     its max-finite witness for the clamp rule.
-    *  3. DBSCAN, irreducibly whole-line state, runs in a cogroup of line
-    *     rosters and cell rows keyed by COST-BALANCED BIN: per-line pair
-    *     counts (T²) feed [[Balance.plan]] and the bins map to
-    *     hash-distinct labels ([[Balance.hashDistinctLabels]]), so a hot
-    *     line gets its own shuffle partition. The cogroup builds the
-    *     eps-neighborhood graph, never the T×T matrix, and
-    *     [[Dbscan.fitNeighborhoods]] labels it.
+    *  3. DBSCAN, irreducibly whole-line state, runs per COST-BALANCED
+    *     BIN: per-line pair counts (T²) feed [[Balance.plan]], and the
+    *     rosters and the cell rows are both partitioned by bin index (one
+    *     partition per bin), so a hot line gets its own task. The zipped
+    *     partitions stream the cell rows into the eps-neighborhood graph,
+    *     never the T×T matrix, and [[Dbscan.fitNeighborhoods]] labels it.
     *
     * Small-input hybrid (same reasoning as
     * `Dedup.connectedComponents`'s union-find branch): when the total
-    * pair count — known from a cheap per-line count over the (cached,
-    * per the class contract) input — is at most `maxLocalPairs`, the cell
-    * and cogroup shuffles would orchestrate work that fits in one task
-    * per line, so [[clusterLocal]] fills the line's distance matrix and
-    * runs [[Dbscan.fit]]. Same line rows, same [[TrajectoryDistance.totalKm]]
+    * pair count is at most `maxLocalPairs`, the cell and bin shuffles
+    * would orchestrate work that fits in one task per line, so
+    * [[clusterLocal]] fills the line's distance matrix and runs
+    * [[Dbscan.fit]]. Same line rows, same [[TrajectoryDistance.totalKm]]
     * — `PipelineSpec` asserts both paths bit-equal.
     */
   def cluster(patterns: DataFrame, params: Map[String, Params],
               pairSalts: Int = 16,
               maxLocalPairs: Long = 4000000L): DataFrame = {
-    val assembled = assemble(patterns)
-    val spark = assembled.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(params)
-
-    // per-line trajectory counts (one pass over the cached input): drives
-    // the small-input branch AND the DBSCAN-stage bin placement. Collected
-    // set is O(#lines) — per-key aggregate scale, the Balance contract.
-    val lineCounts: Array[(String, Long)] = patterns
-      .select(col("linenumber").cast("string").as("line"),
-        col("id").cast("string").as("id"),
-        col("patternID").cast("string").as("patternID"))
-      .groupBy(col("line"))
-      .agg(countDistinct(col("id"), col("patternID")).as("t"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-      .filter { case (l, _) => params.contains(l) }
-      .sortBy(_._1)
+    val spark = patterns.sparkSession
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(params)
+    val numParts = spark.sessionState.conf.numShufflePartitions
+    val lines = lineRows(patterns, bc, numParts)
+    val lineCounts = lines.map(r => r._1 -> r._2.length.toLong).collect()
     val totalPairs = lineCounts.map { case (_, t) => t * t }.sum
 
-    // not persisted: both branches below read it, and the plan reuses the
-    // line shuffle's exchange. A Dataset-level persist inside a library
-    // operator would pin CacheManager entries the caller can never
-    // release; callers running the stage repeatedly persist the PATTERNS
-    // input (as queries.Pipeline does).
-    val lines = lineRows(assembled, bc)
-    if (totalPairs <= maxLocalPairs) {
+    val labels = if (totalPairs <= maxLocalPairs) {
       lastStats = None
-      return clusterLocal(lines, bc)
+      clusterLocal(lines, bc)
+    } else {
+      val stats = new PairScanStats(sc)
+      lastStats = Some(stats)
+      clusterDistributed(lines, lineCounts, bc, pairSalts, numParts, stats)
     }
-    val stats = new PairScanStats(spark.sparkContext)
-    lastStats = Some(stats)
+    val rows = labels.map { case (line, id, pid, label) =>
+      new GenericInternalRow(Array[Any](UTF8String.fromString(line),
+        UTF8String.fromString(id), UTF8String.fromString(pid), label)): InternalRow
+    }
+    org.apache.spark.sql.graft.Bridge.ofInternalRows(spark, rows, labelSchema)
+  }
 
-    val numParts = spark.sessionState.conf.numShufflePartitions
+  /** The distributed path of [[cluster]], steps 1–3. */
+  private def clusterDistributed(lines: RDD[LineRow],
+      lineCounts: Array[(String, Long)], bc: Broadcast[Map[String, Params]],
+      pairSalts: Int, numParts: Int, stats: PairScanStats)
+      : RDD[(String, String, String, Int)] = {
     val cells = lines
       .flatMap { case (line, ids, _, sums) =>
         stats.summaries.add(ids.length.toLong)
-        (0 until math.min(pairSalts, ids.length)).map(salt => (line, salt, sums))
+        (0 until math.min(pairSalts, ids.length)).map(salt => ((line, salt), sums))
       }
-      .toDF("line", "salt", "sums")
-      .repartition(numParts, col("line"), col("salt"))
-      .as[(String, Int, Array[Double])]
-      .flatMap { case (line, salt, sums) =>
+      .partitionBy(new HashPartitioner(numParts))
+      .setName(CellShuffleName)
+      .flatMap { case ((line, salt), sums) =>
         new CellScan(line, salt, pairSalts, sums, bc.value(line).eps, stats)
       }
 
     // cost-balanced DBSCAN placement: per-line pair cost T² bin-packed
-    // (outlier lines get dedicated bins), bins mapped to hash-distinct
-    // labels so the cogroup's ordinary hash shuffle realizes the exact
-    // placement. AQE may still coalesce byte-SMALL bins' partitions —
-    // acceptable by construction: the cogroup's work is proportional to
-    // the edges it receives, so partitions merged under the advisory size
-    // are cheap ones; bins whose work matters exceed it and keep their
-    // dedicated task.
+    // (outlier lines get dedicated bins), one partition per bin
     val costs = lineCounts.map { case (l, t) => l -> (t.toDouble * t) }
-      .sortBy { case (l, c) => (-c, l) }.toSeq // deterministic plan input
+      .sortBy { case (l, c) => (-c, Option(l)) }.toSeq // deterministic plan input
     // Balance.plan adds dedicated outlier bins ON TOP of targetBins, so
     // a first plan can exceed the partition count; shrink the normal-bin
     // target by the overflow and re-plan (outlier count depends only on
     // the cost distribution, not targetBins, so one correction lands
-    // unless outliers alone exceed the partitions — then label reuse
-    // degrades round-robin, which no placement can avoid).
+    // unless outliers alone exceed the partitions — then there are more
+    // bins than task slots, and bins queue)
     var targetBins = math.max(1, math.min(numParts, costs.size))
     var assignment = Balance.plan(costs, targetBins)
     var nBins = if (assignment.isEmpty) 1 else assignment.values.max + 1
@@ -236,98 +234,132 @@ object TrajectoryClustering {
       assignment = Balance.plan(costs, targetBins)
       nBins = if (assignment.isEmpty) 1 else assignment.values.max + 1
     }
-    val labels = Balance.hashDistinctLabels(nBins, numParts)
-    val labelOf: Map[String, Int] =
-      assignment.map { case (l, b) => l -> labels(b) }
-    val bcLabel = spark.sparkContext.broadcast(labelOf)
+    val bins = new BinPartitioner(assignment, nBins)
+    val rosters = lines.map { case (line, ids, pids, _) => (line, (ids, pids)) }
+      .partitionBy(bins)
+    val edges = cells.map(c => (c._1, c)).partitionBy(bins)
 
-    lines.map { case (line, ids, pids, _) => (line, ids, pids) }
-      .groupByKey(r => bcLabel.value(r._1))
-      .cogroup(cells.groupByKey(c => bcLabel.value(c._1))) { (_, rs, cs) =>
-        // a bin holds whole lines (one, or several small ones packed
-        // together). Adjacency lists are PRIMITIVE (r11): boxed
-        // ArrayBuffer[Int] cost ~20 B/edge-end and OOM'd the 32 g heap at
-        // the 100× probe's ~700 M edge-ends; IntVec keeps 4 B/end.
-        final class LineBuf(val ids: Array[String], val pids: Array[String]) {
-          val adj: Array[graft.core.IntVec] =
-            Array.fill(ids.length)(new graft.core.IntVec(4))
-          val nanPairs = new graft.core.IntVec(8)
-          var maxFinite = 0.0
+    rosters.zipPartitions(edges) { (rs, cs) =>
+      // a bin holds whole lines (one, or several small ones packed
+      // together). Adjacency lists are PRIMITIVE (r11): boxed
+      // ArrayBuffer[Int] cost ~20 B/edge-end and OOM'd the 32 g heap at
+      // the 100× probe's ~700 M edge-ends; IntVec keeps 4 B/end.
+      final class LineBuf(val ids: Array[String], val pids: Array[String]) {
+        val adj: Array[graft.core.IntVec] =
+          Array.fill(ids.length)(new graft.core.IntVec(4))
+        val nanPairs = new graft.core.IntVec(8)
+        var maxFinite = 0.0
+      }
+      val bufs = rs.map { case (line, (ids, pids)) =>
+        line -> new LineBuf(ids, pids) }.toMap
+      cs.foreach { case (_, (line, edges, nans, maxFinite)) =>
+        val b = bufs(line)
+        if (maxFinite > b.maxFinite) b.maxFinite = maxFinite
+        var k = 0
+        while (k < edges.length) {
+          b.adj(edges(k)).add(edges(k + 1)); b.adj(edges(k + 1)).add(edges(k))
+          k += 2
         }
-        val bufs = rs.map { case (line, ids, pids) =>
-          line -> new LineBuf(ids, pids) }.toMap
-        cs.foreach { case (line, edges, nans, maxFinite) =>
-          val b = bufs(line)
-          if (maxFinite > b.maxFinite) b.maxFinite = maxFinite
+        k = 0
+        while (k < nans.length) { b.nanPairs.add(nans(k)); k += 1 }
+      }
+      bufs.iterator.flatMap { case (line, b) =>
+        val p = bc.value(line)
+        // non-finite pairs clamp to 2×max finite (TC-P:298–303):
+        // an edge exactly when the clamped value clears eps
+        if (2 * b.maxFinite <= p.eps) {
           var k = 0
-          while (k < edges.length) {
-            b.adj(edges(k)).add(edges(k + 1)); b.adj(edges(k + 1)).add(edges(k))
+          while (k < b.nanPairs.size) {
+            val i = b.nanPairs(k); val j = b.nanPairs(k + 1)
+            b.adj(i).add(j); b.adj(j).add(i)
             k += 2
           }
-          k = 0
-          while (k < nans.length) { b.nanPairs.add(nans(k)); k += 1 }
         }
-        bufs.toArray.sortBy(_._1).iterator.flatMap { case (line, b) =>
-          val p = bc.value(line)
-          // non-finite pairs clamp to 2×max finite (TC-P:298–303):
-          // an edge exactly when the clamped value clears eps
-          if (2 * b.maxFinite <= p.eps) {
-            var k = 0
-            while (k < b.nanPairs.size) {
-              val i = b.nanPairs(k); val j = b.nanPairs(k + 1)
-              b.adj(i).add(j); b.adj(j).add(i)
-              k += 2
-            }
-          }
-          val labels =
-            try Dbscan.fitNeighborhoods(b.adj, p.minSamples)
-            catch { case _: Exception => Array.fill(b.ids.length)(0) } // TC-P:309–312
-          b.ids.indices.iterator.map(t => (line, b.ids(t), b.pids(t), labels(t)))
-        }
+        val labels =
+          try Dbscan.fitNeighborhoods(b.adj, p.minSamples)
+          catch { case _: Exception => Array.fill(b.ids.length)(0) } // TC-P:309–312
+        b.ids.indices.iterator.map(t => (line, b.ids(t), b.pids(t), labels(t)))
       }
-      .toDF("linenumber", "id", "patternID", "cluster")
+    }
   }
 
-  /** [[LineRow]]s of `assembled`: each trajectory reduced to its summary
-    * map-side, lines without parameters dropped before the shuffle
-    * (TC-S:153), then one group per line sorted into tid order. */
-  private def lineRows(
-      assembled: DataFrame,
-      bc: org.apache.spark.broadcast.Broadcast[Map[String, Params]])
-      : Dataset[LineRow] = {
-    val spark = assembled.sparkSession
-    import spark.implicits._
-    assembled
-      .select(col("linenumber").cast("string"), col("id").cast("string"),
-        col("patternID"),
-        transform(col("points"), p => p.getField("lng")),
-        transform(col("points"), p => p.getField("lat")))
-      .as[(String, String, String, Array[Double], Array[Double])]
-      .filter(r => bc.value.contains(r._1))
-      .map { case (line, id, pid, lngs, lats) =>
-        val pts = lngs.indices.map(k => TrajectoryDistance.P(lngs(k), lats(k)))
-        (line, id, pid, Array(pts.head.lng, pts.head.lat,
-          pts.last.lng, pts.last.lat, TrajectoryDistance.lengthKm(pts)))
-      }
-      .groupByKey(_._1)
-      .mapGroups { (line, it) =>
-        val rows = it.toArray
-        java.util.Arrays.sort(rows, byRoster)
-        (line, rows.map(_._2), rows.map(_._3), rows.flatMap(_._4))
-      }
+  /** Places each line on the partition of its bin ([[Balance.plan]]'s
+    * bin index): the placement is exact, where hashing bin ids could put
+    * two heavy bins on one task. */
+  private final class BinPartitioner(binOf: Map[String, Int], bins: Int)
+      extends Partitioner {
+    def numPartitions: Int = bins
+    def getPartition(key: Any): Int = binOf(key.asInstanceOf[String])
   }
 
-  private type Summary = (String, String, String, Array[Double])
+  /** [[LineRow]]s of `patterns`. Lines without parameters are dropped
+    * before the shuffle (TC-S:153); one shuffle by line (a user-numbered
+    * one, which AQE leaves at `numParts`) and a sort by (line, id,
+    * patternID, t, lng, lat) within each partition put every line's
+    * trajectories in tid order and every trajectory's points in (t,
+    * lng, lat) order (lng/lat are read as doubles first). The sorted
+    * rows stream through [[LineAssembler]], so the points stay in
+    * Tungsten rows until they become summaries. The shuffle runs here,
+    * when the rows are requested; the sort runs with each action. */
+  private[ops] def lineRows(patterns: DataFrame,
+      bc: Broadcast[Map[String, Params]], numParts: Int): RDD[LineRow] = {
+    val line = col("linenumber").cast("string")
+    val known = line.isInCollection(bc.value.keySet.filter(_ != null))
+    val points = patterns
+      .select(line.as("line"), col("id").cast("string").as("id"),
+        col("patternID").cast("string").as("patternID"), col("t"),
+        col("lng").cast("double").as("lng"), col("lat").cast("double").as("lat"))
+      .filter(if (bc.value.contains(null)) known || line.isNull else known)
+      .repartition(numParts, col("line"))
+      .sortWithinPartitions("line", "id", "patternID", "t", "lng", "lat")
+    points.queryExecution.toRdd.mapPartitions(new LineAssembler(_))
+  }
 
-  /** (id, patternID) ascending in Spark's order: UTF-8 binary, nulls first. */
-  private val byRoster = new java.util.Comparator[Summary] {
-    import org.apache.spark.unsafe.types.UTF8String
-    private def utf8(x: String, y: String): Int =
-      if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null)
-      else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-    def compare(a: Summary, b: Summary): Int = {
-      val c = utf8(a._2, b._2)
-      if (c != 0) c else utf8(a._3, b._3)
+  /** Folds rows of (line, id, patternID, t, lng, lat), sorted by all six,
+    * into one [[LineRow]] per line: consecutive rows of one (id,
+    * patternID) are one trajectory, reduced to its summary (head, last,
+    * [[TrajectoryDistance.lengthKm]]) when the next one starts. */
+  private final class LineAssembler(rows: Iterator[InternalRow])
+      extends scala.collection.AbstractIterator[LineRow] {
+    private def str(r: InternalRow, i: Int): UTF8String =
+      if (r.isNullAt(i)) null else r.getUTF8String(i).clone()
+    private def same(r: InternalRow, i: Int, u: UTF8String): Boolean =
+      if (r.isNullAt(i)) u == null else u != null && r.getUTF8String(i) == u
+    private def text(u: UTF8String): String = if (u == null) null else u.toString
+    private var pending: Option[InternalRow] =
+      if (rows.hasNext) Some(rows.next()) else None
+
+    def hasNext: Boolean = pending.isDefined
+
+    def next(): LineRow = {
+      val first = pending.getOrElse(throw new NoSuchElementException("no line"))
+      val line = str(first, 0)
+      val ids, pids = Array.newBuilder[String]
+      val sums = Array.newBuilder[Double]
+      var r = first
+      var sameLine = true
+      while (sameLine) {
+        val (id, pid) = (str(r, 1), str(r, 2))
+        val pts = Vector.newBuilder[TrajectoryDistance.P]
+        var sameTrajectory = true
+        while (sameTrajectory) {
+          if (r.isNullAt(4) || r.isNullAt(5))
+            throw new IllegalArgumentException(
+              s"null coordinate in trajectory ($id, $pid) of line $line")
+          pts += TrajectoryDistance.P(r.getDouble(4), r.getDouble(5))
+          if (rows.hasNext) {
+            r = rows.next()
+            sameLine = same(r, 0, line)
+            sameTrajectory = sameLine && same(r, 1, id) && same(r, 2, pid)
+          } else { r = null; sameLine = false; sameTrajectory = false }
+        }
+        val tr = pts.result()
+        ids += text(id); pids += text(pid)
+        sums ++= Array(tr.head.lng, tr.head.lat, tr.last.lng, tr.last.lat,
+          TrajectoryDistance.lengthKm(tr))
+      }
+      pending = Option(r)
+      (text(line), ids.result(), pids.result(), sums.result())
     }
   }
 
@@ -341,7 +373,7 @@ object TrajectoryClustering {
     * the true maximum; with zero pruned pairs the witness is exactly the
     * true maximum. NaN coordinates make lb NaN, never pruned, so NaN pairs
     * reach the clamp rule unchanged. Finite d ≤ eps is an edge; finite
-    * d > eps is dropped here, which turns the cogroup's O(T²) feed into
+    * d > eps is dropped here, which turns the DBSCAN task's O(T²) feed into
     * an O(edges) one. Counts go to `stats` once, when the cell is done. */
   private final class CellScan(line: String, salt: Int, salts: Int,
       s: Array[Double], eps: Double, stats: PairScanStats)
@@ -396,11 +428,8 @@ object TrajectoryClustering {
     * from the same [[LineRow]] summaries with the same
     * [[TrajectoryDistance.totalKm]] as the distributed path, then runs
     * [[Dbscan.fit]]. */
-  private def clusterLocal(
-      lines: Dataset[LineRow],
-      bc: org.apache.spark.broadcast.Broadcast[Map[String, Params]]): DataFrame = {
-    val spark = lines.sparkSession
-    import spark.implicits._
+  private def clusterLocal(lines: RDD[LineRow],
+      bc: Broadcast[Map[String, Params]]): RDD[(String, String, String, Int)] =
     lines
       .flatMap { case (line, ids, pids, s) =>
         val p = bc.value(line)
@@ -436,8 +465,6 @@ object TrajectoryClustering {
           catch { case _: Exception => Array.fill(n)(0) } // TC-P:309–312
         (0 until n).iterator.map(t => (line, ids(t), pids(t), labels(t)))
       }
-      .toDF("linenumber", "id", "patternID", "cluster")
-  }
 
   /** Join cluster labels back onto the point-level frame (TC-S:201); rows
     * of skipped lines keep a null cluster. */

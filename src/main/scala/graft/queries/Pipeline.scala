@@ -74,65 +74,85 @@ object Pipeline {
     // analysis/planning O(1) per consumer, and the explicit RDD handles
     // release the blocks deterministically below (weak-ref cleaning
     // alone may never run under a large fixed heap — NOTES.md).
-    // no terminus geography in the synthetic feed → qualification off
-    // (the reference's standalone variant uses an allowlist here)
+    //
+    // Stage.materialize is lazy, so each stage's PhaseLog line is stamped
+    // after the first action that computes the stage, and each phase sets
+    // the call site its jobs and stages are named by (under AQE a stage
+    // is otherwise named after a CompletableFuture frame).
+    val sc = s.sparkContext
+    val callSite = "callSite.short" // SparkContext.setCallSite's property
+    val outerSite = sc.getLocalProperty(callSite)
+    def phase(name: String): Unit = sc.setCallSite(s"pipeline $name")
     val logPhase = graft.core.PhaseLog.start("pipeline")
-    val (pats, patsStore) = Stage.materialize(
-      PatternExtraction.run(syntheticFleet(s, dir), busLine = None,
-        cfg = PatternExtraction.Config(qualify = false)))
-    logPhase("stage1 patterns materialized")
-    // one Params row per line, like the reference's per-line parameter
-    // CSV (driver-sized by contract: |lines| rows — the line keyspace
-    // scales with the corpus since r12, so the map is derived from the
-    // data instead of a hardcoded 0-until-8). Read from the materialized
-    // patterns, not a second fleet scan: with qualify = false stage-1
-    // dedup keeps at least one row per vehicle, so every fleet line has
-    // patterns, and a line without trajectories clusters nothing anyway.
-    val params = pats.select(col("linenumber")).distinct().collect()
-      .map(r => r.getString(0) ->
-        TrajectoryClustering.Params(eps = 5.0, minSamples = 2))
-      .toMap
-    val (clustered, clusteredStore) = Stage.materialize(
-      TrajectoryClustering.run(pats, params))
-    logPhase("stage2 clustered materialized")
-    // one agg action: sum of per-row hashes (int hash widened by sum to
-    // long) is invariant to partitioning and row order
-    val s1 = pats.agg(coalesce(sum(hash(
-        col("id"), col("patternID"), col("t"), col("lng"), col("lat"))),
-      lit(0L))).head().getLong(0)
-    logPhase("patterns checksum")
-    val graded = BlindZone.run(clustered)
-      .select(col("linenumber"), col("id"), col("patternID"),
-        col("lng"), col("lat"), col("t"), col("signal"))
-    // join key = full row identity: stage-1 dedup keeps one row per
-    // (id, linenumber, lng, lat), so adding (patternID, t) can't fan out
-    val perRow = clustered
-      .join(graded, Seq("linenumber", "id", "patternID", "lng", "lat", "t"),
-        "left")
-      .select(col("linenumber"), col("id"), col("patternID"),
-        unix_micros(col("t")).as("ts_us"), col("cluster"), col("signal"))
-      .withColumn("row_hash", hash(col("linenumber"), col("id"),
-        col("patternID"), col("ts_us"), col("cluster"), col("signal")))
-      .withColumn("patterns_checksum", lit(s1))
-    // materialize the graded result (the returned frame stays backed by
-    // its own store, like connectedComponents' final round), then release
-    // the upstream stages deterministically. The deterministic ORDER BY
-    // is applied AFTER the barrier (round-4 verdict #6): paying a global
-    // sort inside the materialization charged every consumer for
-    // presentation order — an aggregate consumer (the bench's count)
-    // now gets the sort eliminated by Catalyst, and only a consumer
-    // that actually emits rows (Verify's parquet dump) pays it.
-    val (out, outStore) = Stage.materialize(perRow)
-    outStore.count(): Unit
-    logPhase("signals graded")
-    // prune-hit-rate audit of the distributed pair scan (r9 verdict #1):
-    // read after the action so the accumulators are final; `pairs` above
-    // the ~Σ T²/2 grid floor flags lineage recompute of the pair cells
-    TrajectoryClustering.lastStats.foreach(st =>
-      logPhase(s"pair scan ${st.line}"))
-    patsStore.unpersist(false)
-    clusteredStore.unpersist(false)
-    out.orderBy(col("linenumber"), col("id"), col("patternID"), col("ts_us"))
+    try {
+      phase("stage1")
+      // no terminus geography in the synthetic feed → qualification off
+      // (the reference's standalone variant uses an allowlist here)
+      val (pats, patsStore) = Stage.materialize(
+        PatternExtraction.run(syntheticFleet(s, dir), busLine = None,
+          cfg = PatternExtraction.Config(qualify = false)))
+      // one aggregate over the materialized patterns, the first action on
+      // them: the line set for the params and the patterns checksum (sum
+      // of per-row int hashes widened to long: invariant to partitioning
+      // and row order). One Params row per line, like the reference's
+      // per-line parameter CSV (driver-sized by contract: |lines| rows —
+      // the line keyspace scales with the corpus since r12, so the map is
+      // derived from the data instead of a hardcoded 0-until-8). With
+      // qualify = false stage-1 dedup keeps at least one row per vehicle,
+      // so every fleet line has patterns. collect_set skips a null line,
+      // so the null count keeps it as a params key, as a distinct collect
+      // of the lines would.
+      val summary = pats.agg(collect_set(col("linenumber")),
+        count(when(col("linenumber").isNull, 1)),
+        coalesce(sum(hash(col("id"), col("patternID"), col("t"), col("lng"),
+          col("lat"))), lit(0L))).head()
+      val lineSet = summary.getSeq[String](0) ++
+        (if (summary.getLong(1) > 0) Seq(null) else Nil)
+      val params = lineSet.map(_ ->
+        TrajectoryClustering.Params(eps = 5.0, minSamples = 2)).toMap
+      val s1 = summary.getLong(2)
+      logPhase("stage1 patterns materialized")
+
+      phase("stage2")
+      val (clustered, clusteredStore) = Stage.materialize(
+        TrajectoryClustering.run(pats, params))
+      clusteredStore.count(): Unit
+      logPhase("stage2 clustered materialized")
+
+      phase("stage3")
+      val graded = BlindZone.run(clustered)
+        .select(col("linenumber"), col("id"), col("patternID"),
+          col("lng"), col("lat"), col("t"), col("signal"))
+      // join key = full row identity: stage-1 dedup keeps one row per
+      // (id, linenumber, lng, lat), so adding (patternID, t) can't fan out
+      val perRow = clustered
+        .join(graded, Seq("linenumber", "id", "patternID", "lng", "lat", "t"),
+          "left")
+        .select(col("linenumber"), col("id"), col("patternID"),
+          unix_micros(col("t")).as("ts_us"), col("cluster"), col("signal"))
+        .withColumn("row_hash", hash(col("linenumber"), col("id"),
+          col("patternID"), col("ts_us"), col("cluster"), col("signal")))
+        .withColumn("patterns_checksum", lit(s1))
+      // materialize the graded result (the returned frame stays backed by
+      // its own store, like connectedComponents' final round), then release
+      // the upstream stages deterministically. The deterministic ORDER BY
+      // is applied AFTER the barrier (round-4 verdict #6): paying a global
+      // sort inside the materialization charged every consumer for
+      // presentation order — an aggregate consumer (the bench's count)
+      // now gets the sort eliminated by Catalyst, and only a consumer
+      // that actually emits rows (Verify's parquet dump) pays it.
+      val (out, outStore) = Stage.materialize(perRow)
+      outStore.count(): Unit
+      logPhase("signals graded")
+      // prune-hit-rate audit of the distributed pair scan (r9 verdict #1):
+      // read after the action so the accumulators are final; `pairs` above
+      // the ~Σ T²/2 grid floor flags lineage recompute of the pair cells
+      TrajectoryClustering.lastStats.foreach(st =>
+        logPhase(s"pair scan ${st.line}"))
+      patsStore.unpersist(false)
+      clusteredStore.unpersist(false)
+      out.orderBy(col("linenumber"), col("id"), col("patternID"), col("ts_us"))
+    } finally sc.setLocalProperty(callSite, outerSite)
   }
 
   /** Stage-1 numbering-mode contrast (r3 verdict "missing" #3): the

@@ -41,29 +41,6 @@ class BalanceSpec extends AnyFunSuite {
     assert(byBin.max <= total / 10 * 3.2)
   }
 
-  test("hashDistinctLabels: slots distinct, and the slot formula matches Spark's hash()") {
-    val spark = graft.SparkTestSession.spark
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val P = 32
-    val labels = Balance.hashDistinctLabels(20, P)
-    assert(labels.length == 20 && labels.toSet.size == 20)
-    // SQL hash() is Murmur3 seed 42 — the same function HashPartitioning
-    // applies to an int shuffle key, so distinctness here proves each
-    // label lands on its own shuffle partition
-    val slots = labels.toSeq.toDF("label")
-      .select(pmod(hash(col("label")), lit(P)).as("slot"))
-      .as[Int].collect()
-    assert(slots.toSet.size == 20, s"colliding slots: ${slots.toSeq}")
-  }
-
-  test("hashDistinctLabels: more bins than partitions degrade to round-robin reuse") {
-    val labels = Balance.hashDistinctLabels(40, 32)
-    assert(labels.length == 40)
-    assert(labels.take(32).toSet.size == 32)
-    assert((32 until 40).forall(i => labels(i) == labels(i % 32)))
-  }
-
   test("costBalancedRepartition places each bin on its own partition") {
     val spark = graft.SparkTestSession.spark
     import spark.implicits._

@@ -97,7 +97,7 @@ class PipelineSpec extends SparkSpec {
   test("stage 2: binned-cogroup path equals the local path on a 10x-skewed fleet") {
     // LH carries 10× LS's trajectories (40 vs 4) → its T² cost is an
     // outlier and Balance gives it a dedicated bin; forcing
-    // maxLocalPairs = 0 runs the salted join + binned cogroup, which must
+    // maxLocalPairs = 0 runs the cell scan + binned DBSCAN, which must
     // produce bit-identical labels to the small-input path
     val rows = for {
       (line, nv) <- Seq(("LH", 20), ("LS", 2))
@@ -210,5 +210,52 @@ class PipelineSpec extends SparkSpec {
     val binned = Balance.costBalancedRepartition(pats, "linenumber", costs, targetBins = 2)
     assert(binned.count() == before)
     assert(binned.columns.contains("_bin"))
+  }
+
+  test("stage 2: sorted-shuffle line rows equal the typed assembly's on the sf0.01 fleet") {
+    // the collect_list assembly and typed Dataset line rows that stage 2
+    // used before its sorted line shuffle: roster order and summaries
+    // must be bit-identical
+    val pats = PatternExtraction.run(
+      graft.queries.Pipeline.syntheticFleet(spark, sf001), busLine = None,
+      cfg = PatternExtraction.Config(qualify = false))
+    val lines = (0 until 8).map(i => s"L$i").toSet
+    val reference = pats
+      .groupBy($"linenumber", $"id", $"patternID".cast("string").as("patternID"))
+      .agg(array_sort(collect_list(struct($"t", $"lng", $"lat"))).as("_tpts"))
+      .select($"linenumber".cast("string"), $"id".cast("string"), $"patternID",
+        transform($"_tpts", p => p.getField("lng").cast("double")),
+        transform($"_tpts", p => p.getField("lat").cast("double")))
+      .as[(String, String, String, Array[Double], Array[Double])]
+      .filter(r => lines.contains(r._1))
+      .map { case (line, id, pid, lngs, lats) =>
+        val pts = lngs.indices.map(k => TrajectoryDistance.P(lngs(k), lats(k)))
+        (line, id, pid, Array(pts.head.lng, pts.head.lat,
+          pts.last.lng, pts.last.lat, TrajectoryDistance.lengthKm(pts)))
+      }
+      .groupByKey(_._1)
+      .mapGroups { (line, it) =>
+        import org.apache.spark.unsafe.types.UTF8String
+        def utf8(x: String, y: String): Int =
+          if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null)
+          else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+        val rows = it.toArray.sortWith { (a, b) =>
+          val c = utf8(a._2, b._2)
+          (if (c != 0) c else utf8(a._3, b._3)) < 0
+        }
+        (line, rows.map(_._2), rows.map(_._3), rows.flatMap(_._4))
+      }
+      .collect().sortBy(_._1)
+    val params = lines.map(_ -> TrajectoryClustering.Params(5.0, 2)).toMap
+    val rows = TrajectoryClustering
+      .lineRows(pats, spark.sparkContext.broadcast(params), numParts = 4)
+      .collect().sortBy(_._1)
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    assert(rows.map(_._1).toSeq == reference.map(_._1).toSeq && rows.length == 8)
+    rows.zip(reference).foreach { case (r, ref) =>
+      assert(r._2.toSeq == ref._2.toSeq && r._3.toSeq == ref._3.toSeq,
+        s"${r._1}: roster order differs")
+      assert(bits(r._4) == bits(ref._4), s"${r._1}: summaries differ")
+    }
   }
 }

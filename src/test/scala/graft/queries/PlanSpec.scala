@@ -12,27 +12,40 @@ class PlanSpec extends SparkSpec {
 
   /** Pin for the r12 scale-adaptive scan spread (r12 ADVICE, medium):
     * a blanket RoundRobinPartitioning exemption would also pass a
-    * round-robin that moves SYNTHESIZED payload bytes. Assert every
-    * round-robin exchange in `p` sits directly over the pre-payload
-    * parquet scan: its subtree holds the scan and no payload-synth
-    * MapPartitions/Serialize and no further exchange. */
-  private def assertSpreadIsPrePayload(q: String, p: String): Unit = {
-    val lines = p.linesIterator.toSeq
-    def depth(l: String): Int = {
-      val i = l.indexOf("+- "); val j = l.indexOf(":- ")
-      if (i < 0) j else if (j < 0) i else math.min(i, j)
+    * round-robin that moves SYNTHESIZED payload bytes. On `q`'s physical
+    * plan, assert there is at most one round-robin exchange and that it
+    * is the pre-payload spread: below it the parquet scan and no payload
+    * synth (object mapPartitions / serialize) and no further exchange; no
+    * binary column in the rows it moves; and the payload synth above it,
+    * consuming the spread rows. */
+  private def assertSpreadIsPrePayload(q: String): Unit = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapPartitionsExec,
+      SerializeFromObjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.types.BinaryType
+    object H extends AdaptiveSparkPlanHelper
+    val plan = graft.SparkEntry.queries(q)(spark, sf001).queryExecution.executedPlan
+    def synth(n: SparkPlan) =
+      n.isInstanceOf[MapPartitionsExec] || n.isInstanceOf[SerializeFromObjectExec]
+    val spreads = H.collect(plan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RoundRobinPartitioning] => e
     }
-    lines.zipWithIndex
-      .filter(_._1.contains("RoundRobinPartitioning")).foreach { case (ex, i) =>
-        val d = depth(ex)
-        val sub = lines.drop(i + 1).takeWhile(l => depth(l) > d)
-        assert(sub.exists(_.contains("Scan parquet")),
-          s"$q: round-robin spread has no parquet scan below it:\n$p")
-        assert(!sub.exists(l => l.contains("MapPartitions") ||
-            l.contains("SerializeFromObject") || l.contains("Exchange ")),
-          s"$q: round-robin spread above payload synth — payload bytes " +
-            s"would cross the network:\n$p")
-      }
+    assert(spreads.size <= 1, s"$q: ${spreads.size} round-robin exchanges:\n$plan")
+    spreads.foreach { spread =>
+      val below = H.collect(spread.child) { case n => n }
+      assert(below.exists(_.isInstanceOf[FileSourceScanExec]),
+        s"$q: round-robin spread has no parquet scan below it:\n$plan")
+      assert(!below.exists(n => synth(n) || n.isInstanceOf[Exchange]),
+        s"$q: round-robin spread above payload synth — payload bytes " +
+          s"would cross the network:\n$plan")
+      assert(!spread.output.exists(_.dataType == BinaryType),
+        s"$q: round-robin spread moves a binary column:\n$plan")
+      assert(H.collect(plan) { case n if synth(n) && H.find(n)(_ eq spread).isDefined => n }
+          .nonEmpty,
+        s"$q: no payload synth above the round-robin spread:\n$plan")
+    }
   }
 
   test("proj_filter: predicates and projection reach the parquet scan") {
@@ -577,23 +590,76 @@ class PlanSpec extends SparkSpec {
       cfg = graft.ops.PatternExtraction.Config(qualify = false)),
     (0 until 8).map(i => s"L$i" -> graft.ops.TrajectoryClustering.Params(5.0, 2)).toMap)
 
-  /** The distributed stage-2 plan, forced (the corpus takes the local one). */
-  private lazy val pairScanPlan = graft.ops.TrajectoryClustering
-    .cluster(fleetStage1._1, fleetStage1._2, maxLocalPairs = 0L)
-    .queryExecution.executedPlan.toString
-
-  test("blindzone pair scan: the distributed cluster plan has no join node") {
-    // pairs are scored by a primitive loop inside (line, salt) cells; a
-    // join here would turn every pair back into a Spark row
-    assert(!pairScanPlan.contains("Join"), s"pair scan plans a join:\n$pairScanPlan")
+  test("blindzone pair scan: no encoder, typed-group or join node in the plan") {
+    // past the assembly aggregate stage 2 is RDD code: a typed operator
+    // here brings its encoders and generated classes back, and a join
+    // would turn every pair back into a Spark row
+    val p = graft.ops.TrajectoryClustering
+      .cluster(fleetStage1._1, fleetStage1._2, maxLocalPairs = 0L)
+      .queryExecution.executedPlan.toString
+    for (op <- Seq("DeserializeToObject", "SerializeFromObject", "AppendColumns",
+        "MapGroups", "Join"))
+      assert(!p.contains(op), s"clustered plan has $op:\n$p")
   }
 
-  test("blindzone pair scan: the cell fan-out keeps its REPARTITION_BY_NUM exchange") {
-    // the line rows are byte-tiny and their work quadratic: any other
-    // shuffle origin lets AQE coalesce the cell grid into one task (r9)
-    assert(pairScanPlan.linesIterator.exists(l =>
-        l.contains("Exchange hashpartitioning(line") && l.contains("REPARTITION_BY_NUM")),
-      s"cell exchange lost its user-numbered origin:\n$pairScanPlan")
+  test("blindzone pair scan: the cell shuffle is numShufflePartitions wide") {
+    // the line rows are byte-tiny and their work quadratic: a shuffle AQE
+    // may coalesce would fold the cell grid into one task (r9); an RDD
+    // shuffle keeps the session's width
+    import org.apache.spark.rdd.RDD
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    val labels = try graft.ops.TrajectoryClustering
+        .cluster(fleetStage1._1, fleetStage1._2, maxLocalPairs = 0L)
+        .queryExecution.toRdd
+      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val cells = lineage(labels).distinct
+      .filter(_.name == graft.ops.TrajectoryClustering.CellShuffleName)
+    assert(cells.size == 1, s"${cells.size} cell shuffles")
+    assert(cells.head.dependencies.head.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]])
+    assert(cells.head.partitioner.contains(new org.apache.spark.HashPartitioner(7)),
+      s"cell shuffle partitioner: ${cells.head.partitioner}")
+  }
+
+  test("stage 3: 6 shuffle + 2 broadcast exchanges on the sf0.01 clustered leaf") {
+    // BlindZone.run's executed (final adaptive) plan, reused exchanges not
+    // counted; the step-by-step grading ran 8 and 4
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    object H extends AdaptiveSparkPlanHelper
+    val (clustered, store) = graft.core.Stage.materialize(
+      graft.ops.TrajectoryClustering.run(fleetStage1._1, fleetStage1._2))
+    try {
+      val graded = graft.ops.BlindZone.run(clustered)
+      graded.collect(): Unit // finalizes this frame's adaptive plan
+      val plan = graded.queryExecution.executedPlan
+      val shuffles = H.collect(plan) { case e: ShuffleExchangeExec => e }.size
+      val broadcasts = H.collect(plan) { case e: BroadcastExchangeExec => e }.size
+      assert((shuffles, broadcasts) == ((6, 2)), s"$shuffles shuffle, $broadcasts broadcast:\n$plan")
+    } finally store.unpersist(false)
+  }
+
+  test("pipeline_blindzone: a warm sf0.01 run starts at most 25 jobs") {
+    // counted by a listener over the second of two runs (the first warms
+    // the session); 33 before stage 2 moved to RDD code, stage 3 to the
+    // closed-form grade and the params and checksum into one aggregate
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val query = graft.SparkEntry.queries("pipeline_blindzone")
+    query(spark, sf001).collect(): Unit
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      query(spark, sf001).collect(): Unit
+      org.apache.spark.sql.graft.Bridge.drainListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 25, s"${jobs.get} jobs")
   }
 
   test("stage 1: one parquet scan and one id exchange serve every window") {
@@ -638,7 +704,7 @@ class PlanSpec extends SparkSpec {
       assert(exchanges.forall(l => l.contains("rangepartitioning") ||
           l.contains("RoundRobinPartitioning")),
         s"$q shuffles payloads (non-sort exchange):\n$p")
-      assertSpreadIsPrePayload(q, p)
+      assertSpreadIsPrePayload(q)
       assert(!p.contains("Join"), s"$q must not join:\n$p")
     }
   }
@@ -677,7 +743,7 @@ class PlanSpec extends SparkSpec {
     // multimodal codec pin above); the keyed-exchange census below is
     // what guards payload movement, and the placement pin keeps the
     // round-robin below the synth
-    assertSpreadIsPrePayload("mm_phash_dedup", p)
+    assertSpreadIsPrePayload("mm_phash_dedup")
     val hashEx = exchanges.filterNot(l => l.contains("rangepartitioning") ||
       l.contains("RoundRobinPartitioning"))
     assert(hashEx.size == 1, s"expected one cluster-window exchange:\n$p")
