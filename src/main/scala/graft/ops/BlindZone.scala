@@ -41,8 +41,10 @@ object BlindZone {
 
   case class Config(
       coverageFraction: Double = 0.75, // BZ-S:59
-      upgradeSpeedMps: Double = 10.0,  // BZ-S:116
       lineScoped: Boolean = true)
+
+  /** Step 2's speed threshold in m/s (BZ-S:116). */
+  private[ops] val UpgradeSpeedMps = 10.0
 
   private val byPattern = Window.partitionBy("id", "patternID").orderBy("t")
 
@@ -126,7 +128,7 @@ object BlindZone {
       .withColumn("_rn", row_number().over(group.orderBy(col("speed").desc, col("t"))))
       // step 2: ∀ vehicle ∃ (argmax ping ∧ speed > threshold) per cluster
       .withColumn("_has", Quantifiers.existsFlag(
-        col("_rn") === 1 && col("speed") > cfg.upgradeSpeedMps).over(byVehicle))
+        col("_rn") === 1 && col("speed") > UpgradeSpeedMps).over(byVehicle))
       .withColumn("_all_valid", min(col("_has")).over(Window.partitionBy(keyCols: _*)))
       // steps 1–3 as one grade, then step 4's one-step propagation
       .withColumn("_grade", when(col("_rn") === 1,

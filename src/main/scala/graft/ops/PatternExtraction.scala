@@ -46,14 +46,21 @@ import graft.core.{Geo, TimeOps}
   */
 object PatternExtraction {
 
-  /** @param gapPercentile    per-vehicle quantile of inter-ping gaps used
-    *                         as the signal-loss threshold (Parallel:124)
-    * @param terminusRadiusM  distance to a line terminus that marks a
-    *                         direction/position hit (Parallel:104)
-    * @param guardSpeedMps    distance guard factor: a "gap" whose
-    *                         endpoints moved < guard×(threshold−1) m is a
-    *                         stop, not a blind zone (Standalone:93) */
-  /** @param restoredNumbering true (default) = the gaps-and-islands
+  /** Per-vehicle quantile of inter-ping gaps used as the signal-loss
+    * threshold (Parallel:124). */
+  private val GapPercentile = 0.95
+
+  /** Distance (m) to a line terminus that marks a direction/position hit
+    * (Parallel:104). */
+  private val TerminusRadiusM = 100.0
+
+  /** Distance guard factor: a "gap" whose endpoints moved
+    * < guard×(threshold−1) m is a stop, not a blind zone (Standalone:93). */
+  private val GuardSpeedMps = 11.11
+
+  /** @param qualify          false skips the vehicle qualification gate
+    *                         (see [[extractPatterns]])
+    * @param restoredNumbering true (default) = the gaps-and-islands
     *                           numbering restoring the reference's evident
     *                           intent (class doc); false = bug-compatible
     *                           with the reference AS COMMITTED, whose
@@ -61,9 +68,6 @@ object PatternExtraction {
     *                           the preserve-don't-silently-fix discipline
     *                           of `BlindZone.Config.lineScoped`. */
   case class Config(
-      gapPercentile: Double = 0.95,
-      terminusRadiusM: Double = 100.0,
-      guardSpeedMps: Double = 11.11,
       qualify: Boolean = true,
       restoredNumbering: Boolean = true)
 
@@ -77,8 +81,7 @@ object PatternExtraction {
     * Optional `busLine`: `(existLine_id, direction, position, x=lat,
     * y=lng)` terminus table (broadcast — it is a small dim).
     */
-  def prepare(gps: DataFrame, busLine: Option[DataFrame] = None,
-              cfg: Config = Config()): DataFrame = {
+  def prepare(gps: DataFrame, busLine: Option[DataFrame] = None): DataFrame = {
     val typed = (if (gps.schema("t").dataType.typeName == "string")
       gps.withColumn("t", TimeOps.parseMulti(col("t")))
     else gps)
@@ -130,9 +133,9 @@ object PatternExtraction {
             .withColumn("_d",
               Geo.haversineMeters(col("lat"), col("lng"), col("_tlat"), col("_tlng")))
             .withColumn("direction",
-              when(col("_d") < cfg.terminusRadiusM, mark).otherwise(col("direction")))
+              when(col("_d") < TerminusRadiusM, mark).otherwise(col("direction")))
             .withColumn("position",
-              when(col("_d") < cfg.terminusRadiusM, mark).otherwise(col("position")))
+              when(col("_d") < TerminusRadiusM, mark).otherwise(col("position")))
             .drop("existLine_id", "_tlat", "_tlng", "_d")
         }
         hit(hit(withInit, matched1, 1), term2, 2)
@@ -150,7 +153,7 @@ object PatternExtraction {
     // exchanges differ, so the fleet is scanned and shuffled twice
     // (NOTES.md). A null id gets no threshold, as under such a join.
     filled.withColumn("threshold", when(col("id").isNotNull,
-      expr(s"percentile_approx(time_diff, ${cfg.gapPercentile})")
+      expr(s"percentile_approx(time_diff, $GapPercentile)")
         .over(Window.partitionBy("id"))))
   }
 
@@ -175,7 +178,7 @@ object PatternExtraction {
             col("lat"), col("lng"))))
       .withColumn("gap_flag",
         when(col("_dist").isNotNull &&
-          col("_dist") < (col("threshold") - 1) * cfg.guardSpeedMps, 0)
+          col("_dist") < (col("threshold") - 1) * GuardSpeedMps, 0)
           .otherwise(col("_gap")))
       .drop("_gap", "_dist")
 
@@ -223,6 +226,6 @@ object PatternExtraction {
     * columns (`id, lng, lat, t, patternID, linenumber`). */
   def run(gps: DataFrame, busLine: Option[DataFrame] = None,
           cfg: Config = Config()): DataFrame =
-    extractPatterns(prepare(gps, busLine, cfg), cfg)
+    extractPatterns(prepare(gps, busLine), cfg)
       .select("id", "lng", "lat", "t", "patternID", "linenumber")
 }

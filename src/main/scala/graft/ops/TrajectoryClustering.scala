@@ -35,7 +35,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale: the O(T²) pair work is per line (T = trajectories of ONE bus
   * line on one day — hundreds to thousands, not millions) and is split
-  * over `pairSalts` cells per line; the DBSCAN step places lines by
+  * over [[PairSalts]] cells per line; the DBSCAN step places lines by
   * their T² cost ([[Balance.plan]]), so one heavy line does not queue
   * behind the others.
   */
@@ -112,9 +112,12 @@ object TrajectoryClustering {
     * both packed two ints a pair, and the cell's max-finite witness. */
   private type CellRow = (String, Array[Int], Array[Int], Double)
 
+  /** (line, salt) cells per line on the distributed path. */
+  private val PairSalts = 16
+
   /** A cell starts a new output row once its packed pairs reach this many
     * ints (4 MiB). A row is one contiguous buffer on both sides of the
-    * shuffle, so an uncapped row would grow with T²/`pairSalts` toward
+    * shuffle, so an uncapped row would grow with T²/[[PairSalts]] toward
     * the 2 GiB array limit; at the cap the per-row cost is amortized over
     * half a million pairs. */
   private val CellRowInts = 1 << 20
@@ -148,7 +151,7 @@ object TrajectoryClustering {
     * the rows drive the small-input branch and the DBSCAN bin placement.
     * The distributed path:
     *
-    *  1. The line row fans out to `pairSalts` (line, salt) cells through
+    *  1. The line row fans out to [[PairSalts]] (line, salt) cells through
     *     an RDD `HashPartitioner(numShufflePartitions)`: the line rows
     *     are byte-tiny while the work in them is quadratic, so AQE's
     *     byte-based coalescing would fold the cell grid into one or two
@@ -163,19 +166,20 @@ object TrajectoryClustering {
     *     BIN: per-line pair counts (T²) feed [[Balance.plan]], and the
     *     rosters and the cell rows are both partitioned by bin index (one
     *     partition per bin), so a hot line gets its own task. The zipped
-    *     partitions stream the cell rows into the eps-neighborhood graph,
-    *     never the T×T matrix, and [[Dbscan.fitNeighborhoods]] labels it.
+    *     partitions stream the cell rows into each line's [[LineBuf]]
+    *     (the eps-neighborhood graph, never the T×T matrix), which labels
+    *     the line.
     *
     * Small-input hybrid (same reasoning as
     * `Dedup.connectedComponents`'s union-find branch): when the total
     * pair count is at most `maxLocalPairs`, the cell and bin shuffles
     * would orchestrate work that fits in one task per line, so
-    * [[clusterLocal]] fills the line's distance matrix and runs
-    * [[Dbscan.fit]]. Same line rows, same [[TrajectoryDistance.totalKm]]
-    * — `PipelineSpec` asserts both paths bit-equal.
+    * [[clusterLocal]] scans each line as ONE cell (salt 0 of 1) into a
+    * [[LineBuf]] in the same task. The branches share the kernel and the
+    * buffer and differ only in orchestration; `PipelineSpec` checks both
+    * against a dense-matrix reference that never prunes.
     */
   def cluster(patterns: DataFrame, params: Map[String, Params],
-              pairSalts: Int = 16,
               maxLocalPairs: Long = 4000000L): DataFrame = {
     val spark = patterns.sparkSession
     val sc = spark.sparkContext
@@ -185,14 +189,13 @@ object TrajectoryClustering {
     val lineCounts = lines.map(r => r._1 -> r._2.length.toLong).collect()
     val totalPairs = lineCounts.map { case (_, t) => t * t }.sum
 
-    val labels = if (totalPairs <= maxLocalPairs) {
-      lastStats = None
-      clusterLocal(lines, bc)
-    } else {
-      val stats = new PairScanStats(sc)
-      lastStats = Some(stats)
-      clusterDistributed(lines, lineCounts, bc, pairSalts, numParts, stats)
-    }
+    // the small branch counts into stats it never publishes
+    val stats = new PairScanStats(sc)
+    val local = totalPairs <= maxLocalPairs
+    lastStats = if (local) None else Some(stats)
+    val labels =
+      if (local) clusterLocal(lines, bc, stats)
+      else clusterDistributed(lines, lineCounts, bc, numParts, stats)
     val rows = labels.map { case (line, id, pid, label) =>
       new GenericInternalRow(Array[Any](UTF8String.fromString(line),
         UTF8String.fromString(id), UTF8String.fromString(pid), label)): InternalRow
@@ -203,17 +206,17 @@ object TrajectoryClustering {
   /** The distributed path of [[cluster]], steps 1–3. */
   private def clusterDistributed(lines: RDD[LineRow],
       lineCounts: Array[(String, Long)], bc: Broadcast[Map[String, Params]],
-      pairSalts: Int, numParts: Int, stats: PairScanStats)
+      numParts: Int, stats: PairScanStats)
       : RDD[(String, String, String, Int)] = {
     val cells = lines
       .flatMap { case (line, ids, _, sums) =>
         stats.summaries.add(ids.length.toLong)
-        (0 until math.min(pairSalts, ids.length)).map(salt => ((line, salt), sums))
+        (0 until math.min(PairSalts, ids.length)).map(salt => ((line, salt), sums))
       }
       .partitionBy(new HashPartitioner(numParts))
       .setName(CellShuffleName)
       .flatMap { case ((line, salt), sums) =>
-        new CellScan(line, salt, pairSalts, sums, bc.value(line).eps, stats)
+        new CellScan(line, salt, PairSalts, sums, bc.value(line).eps, stats)
       }
 
     // cost-balanced DBSCAN placement: per-line pair cost T² bin-packed
@@ -240,46 +243,53 @@ object TrajectoryClustering {
     val edges = cells.map(c => (c._1, c)).partitionBy(bins)
 
     rosters.zipPartitions(edges) { (rs, cs) =>
-      // a bin holds whole lines (one, or several small ones packed
-      // together). Adjacency lists are PRIMITIVE (r11): boxed
-      // ArrayBuffer[Int] cost ~20 B/edge-end and OOM'd the 32 g heap at
-      // the 100× probe's ~700 M edge-ends; IntVec keeps 4 B/end.
-      final class LineBuf(val ids: Array[String], val pids: Array[String]) {
-        val adj: Array[graft.core.IntVec] =
-          Array.fill(ids.length)(new graft.core.IntVec(4))
-        val nanPairs = new graft.core.IntVec(8)
-        var maxFinite = 0.0
-      }
+      // a bin holds whole lines (one, or several small ones packed together)
       val bufs = rs.map { case (line, (ids, pids)) =>
         line -> new LineBuf(ids, pids) }.toMap
-      cs.foreach { case (_, (line, edges, nans, maxFinite)) =>
-        val b = bufs(line)
-        if (maxFinite > b.maxFinite) b.maxFinite = maxFinite
+      cs.foreach { case (line, c) => bufs(line).add(c) }
+      bufs.iterator.flatMap { case (line, b) => b.labels(line, bc.value(line)) }
+    }
+  }
+
+  /** One line's eps-neighborhood graph, fed the [[CellRow]]s of its cells:
+    * the one place where pair verdicts become DBSCAN labels, for both
+    * branches of [[cluster]]. Adjacency lists are PRIMITIVE (r11): boxed
+    * ArrayBuffer[Int] cost ~20 B/edge-end and OOM'd the 32 g heap at the
+    * 100× probe's ~700 M edge-ends; IntVec keeps 4 B/end. */
+  private final class LineBuf(ids: Array[String], pids: Array[String]) {
+    private val adj = Array.fill(ids.length)(new graft.core.IntVec(4))
+    private val nanPairs = new graft.core.IntVec(8)
+    private var maxFinite = 0.0
+
+    def add(c: CellRow): Unit = {
+      val (_, edges, nans, cellMax) = c
+      if (cellMax > maxFinite) maxFinite = cellMax
+      var k = 0
+      while (k < edges.length) {
+        adj(edges(k)).add(edges(k + 1)); adj(edges(k + 1)).add(edges(k))
+        k += 2
+      }
+      k = 0
+      while (k < nans.length) { nanPairs.add(nans(k)); k += 1 }
+    }
+
+    /** `(line, id, patternID, label)` per trajectory, once every cell row
+      * of the line has been added; −1 = noise. */
+    def labels(line: String, p: Params): Iterator[(String, String, String, Int)] = {
+      // non-finite pairs clamp to 2×max finite (TC-P:298–303):
+      // an edge exactly when the clamped value clears eps
+      if (2 * maxFinite <= p.eps) {
         var k = 0
-        while (k < edges.length) {
-          b.adj(edges(k)).add(edges(k + 1)); b.adj(edges(k + 1)).add(edges(k))
+        while (k < nanPairs.size) {
+          val i = nanPairs(k); val j = nanPairs(k + 1)
+          adj(i).add(j); adj(j).add(i)
           k += 2
         }
-        k = 0
-        while (k < nans.length) { b.nanPairs.add(nans(k)); k += 1 }
       }
-      bufs.iterator.flatMap { case (line, b) =>
-        val p = bc.value(line)
-        // non-finite pairs clamp to 2×max finite (TC-P:298–303):
-        // an edge exactly when the clamped value clears eps
-        if (2 * b.maxFinite <= p.eps) {
-          var k = 0
-          while (k < b.nanPairs.size) {
-            val i = b.nanPairs(k); val j = b.nanPairs(k + 1)
-            b.adj(i).add(j); b.adj(j).add(i)
-            k += 2
-          }
-        }
-        val labels =
-          try Dbscan.fitNeighborhoods(b.adj, p.minSamples)
-          catch { case _: Exception => Array.fill(b.ids.length)(0) } // TC-P:309–312
-        b.ids.indices.iterator.map(t => (line, b.ids(t), b.pids(t), labels(t)))
-      }
+      val labels =
+        try Dbscan.fitNeighborhoods(adj, p.minSamples)
+        catch { case _: Exception => Array.fill(ids.length)(0) } // TC-P:309–312
+      ids.indices.iterator.map(t => (line, ids(t), pids(t), labels(t)))
     }
   }
 
@@ -424,47 +434,18 @@ object TrajectoryClustering {
     }
   }
 
-  /** Small-input path: one task per line fills the line's distance matrix
-    * from the same [[LineRow]] summaries with the same
-    * [[TrajectoryDistance.totalKm]] as the distributed path, then runs
-    * [[Dbscan.fit]]. */
+  /** Small-input path: each line is one [[CellScan]] cell (salt 0 of 1),
+    * scanned into a [[LineBuf]] and labelled in one task, with no cell or
+    * bin shuffle. */
   private def clusterLocal(lines: RDD[LineRow],
-      bc: Broadcast[Map[String, Params]]): RDD[(String, String, String, Int)] =
-    lines
-      .flatMap { case (line, ids, pids, s) =>
-        val p = bc.value(line)
-        val n = ids.length
-        val dist = Array.ofDim[Double](n, n)
-        var maxFinite = 0.0
-        var i = 0
-        while (i < n) {
-          val a = 5 * i
-          var j = i + 1
-          while (j < n) {
-            val b = 5 * j
-            val d = TrajectoryDistance.totalKm(s(a), s(a + 1), s(a + 2), s(a + 3),
-              s(a + 4), s(b), s(b + 1), s(b + 2), s(b + 3), s(b + 4))
-            val dd = if (java.lang.Double.isFinite(d)) d else Double.NaN
-            dist(i)(j) = dd; dist(j)(i) = dd
-            if (!dd.isNaN && dd > maxFinite) maxFinite = dd
-            j += 1
-          }
-          i += 1
-        }
-        i = 0
-        while (i < n) {
-          var j = 0
-          while (j < n) {
-            if (dist(i)(j).isNaN) dist(i)(j) = 2 * maxFinite
-            j += 1
-          }
-          i += 1
-        }
-        val labels =
-          try Dbscan.fit(dist, p.eps, p.minSamples)
-          catch { case _: Exception => Array.fill(n)(0) } // TC-P:309–312
-        (0 until n).iterator.map(t => (line, ids(t), pids(t), labels(t)))
-      }
+      bc: Broadcast[Map[String, Params]], stats: PairScanStats)
+      : RDD[(String, String, String, Int)] =
+    lines.flatMap { case (line, ids, pids, sums) =>
+      val p = bc.value(line)
+      val buf = new LineBuf(ids, pids)
+      new CellScan(line, 0, 1, sums, p.eps, stats).foreach(buf.add)
+      buf.labels(line, p)
+    }
 
   /** Join cluster labels back onto the point-level frame (TC-S:201); rows
     * of skipped lines keep a null cluster. */

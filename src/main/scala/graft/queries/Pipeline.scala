@@ -67,7 +67,8 @@ object Pipeline {
     import graft.core.Stage
     // Stage boundaries are leaf-materialized (Stage.materialize), not
     // plain persist: each stage's consumers branch several times
-    // (clustering scans patterns 4x, grading scans clusters across ~10
+    // (patterns feed the params/checksum aggregate, stage 2's line
+    // shuffle and its attach join; grading scans clusters across ~10
     // window/agg subtrees), and with persist every branch re-ANALYZES
     // the full upstream lineage — measured ~3 s of driver-side Catalyst
     // work at sf0.1 on top of the cached execution. The leaf plan makes

@@ -1712,21 +1712,16 @@ object Warehouse {
     * ([[graft.functions.BloomMightContainLong]]); the exact join still
     * verifies every survivor, so false positives drop out and the
     * output is bit-identical. Measured 66 → 11 s for the forced
-    * triangle count at 10×. */
-  /** Above this edge count the oriented relation stops being broadcast
-    * (Spark's hard broadcast cap is 8 GiB; the 100× probe's 120 M-edge
-    * relation hashed to 11.2 GiB and failed loudly) and the wedge joins
-    * fall back to sort-merge. The wedge stream then DOES shuffle once —
-    * but only the ~4 % bloom survivors reach the closing exchange, so
-    * the landed relation is edge-scale, not Σ out²-scale. */
-  private val BroadcastEdgeCap =
-    // env-overridable so the SMJ fallback plan can be probed at gate
-    // scale (the default only activates past 40 M edges)
-    sys.env.get("SPARK_GRAFT_EDGE_BCAST_CAP").map(_.toLong)
-      .getOrElse(40000000L)
-
-  private def triangleInstances(s: SparkSession, oriented: DataFrame)
-      : (DataFrame, org.apache.spark.broadcast.Broadcast[_]) = {
+    * triangle count at 10×.
+    *
+    * Above `broadcastEdgeCap` edges the oriented relation stops being
+    * broadcast (Spark's hard broadcast cap is 8 GiB; the 100× probe's
+    * 120 M-edge relation hashed to 11.2 GiB and failed loudly) and the
+    * wedge joins fall back to sort-merge. The wedge stream then DOES
+    * shuffle once — but only the ~4 % bloom survivors reach the closing
+    * exchange, so the landed relation is edge-scale, not Σ out²-scale. */
+  private def triangleInstances(s: SparkSession, oriented: DataFrame,
+      broadcastEdgeCap: Long): (DataFrame, org.apache.spark.broadcast.Broadcast[_]) = {
     import org.apache.spark.sql.graft.Bridge
     val nE = oriented.count() // one |E|-scan action: sizes the filter
     val bf = oriented.select(xxhash64(col("a"), col("b")).as("k"))
@@ -1735,7 +1730,7 @@ object Warehouse {
     def might(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       Bridge.column(graft.functions.BloomMightContainLong(Bridge.expression(c), bfBc))
     def side(df: DataFrame): DataFrame =
-      if (nE > BroadcastEdgeCap) df else broadcast(df)
+      if (nE > broadcastEdgeCap) df else broadcast(df)
     val tri = oriented.as("x")
       .join(side(oriented.as("y")), col("x.b") === col("y.a"))
       .select(col("x.a").as("wa"), col("x.b").as("wb"), col("y.b").as("wc"))
@@ -1770,9 +1765,7 @@ object Warehouse {
     * CSR form is 1.9 GB). Past the cap the build falls back to the
     * sequenced wedge enumeration, whose sort-merge fallback is the
     * honest beyond-one-box path. */
-  private val AdjEdgeCap =
-    sys.env.get("SPARK_GRAFT_TRI_ADJ_CAP").map(_.toLong)
-      .getOrElse(300000000L)
+  private val AdjEdgeCap = 300000000L
 
   /** Per-edge triangle support by BROADCAST-ADJACENCY INTERSECTION —
     * support{u,v} of an edge is |N(u) ∩ N(v)| (each common neighbor is
@@ -1914,11 +1907,13 @@ object Warehouse {
     * than a single box's scratch; the first attempt filled the disk
     * twice), while the sequenced form peaks at ~|T| parquet + one
     * position's spill. Σ of the three position counts ≡ the exploded
-    * count, so values are bit-identical to [[triSupportByAdjacency]]. */
+    * count, so values are bit-identical to [[triSupportByAdjacency]].
+    * `broadcastEdgeCap` is [[triangleInstances]]'s broadcast cap. */
   private[queries] def triSupportByWedges(
-      s: SparkSession, dir: String, edges: DataFrame)
+      s: SparkSession, dir: String, edges: DataFrame,
+      broadcastEdgeCap: Long = 40000000L)
       : (DataFrame, org.apache.spark.broadcast.Broadcast[_]) = {
-    val (tri0, bfBc) = triangleInstances(s, orientEdges(edges))
+    val (tri0, bfBc) = triangleInstances(s, orientEdges(edges), broadcastEdgeCap)
     val tri = Ext.stage("tri_inst", s, dir)(tri0)
     def posAgg(x: String, y: String, name: String): DataFrame =
       Ext.stage(name, s, dir)(

@@ -111,7 +111,7 @@ class BlindZoneSpec extends SparkSpec {
       .drop("_rn")
     val c1 = s1.groupBy((key :+ "id").map(col): _*)
       .agg(Quantifiers.existsFlag(
-        col("signal") === 0.5 && col("speed") > cfg.upgradeSpeedMps).as("_has"))
+        col("signal") === 0.5 && col("speed") > BlindZone.UpgradeSpeedMps).as("_has"))
       .groupBy(keyCols: _*).agg(min(col("_has")).as("_all_valid"))
     val s2 = s1.join(broadcast(c1), key, "left")
       .withColumn("signal",

@@ -108,9 +108,36 @@ class PatternExtractionSpec extends SparkSpec {
     assert(v3.nonEmpty && v3.toSet == Set(1L), s"got ${v3.toSet}")
   }
 
+  /** A small file shaped like the reference's `Sample Data/gps.csv`
+    * (FIXTURES.md §1): header row, zero-padded vehicle ids, `linenumber`
+    * as a per-vehicle 1..N sequence, an `opath` column, and `yy-` and
+    * `yyyy-` stamps mixed in one file. Four vehicles, 30 s cadence with
+    * a 10-minute signal gap, every seventh stamp in the long format. */
+  private def referenceShapedGpsCsv(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("gps_sample")
+    val rows = for {
+      v <- 1 to 4
+      n <- 1 to 30
+    } yield {
+      val sec = n * 30 + (if (n > 15) 600 else 0)
+      val year = if (n % 7 == 0) "2019" else "19"
+      f"$v%05d,$n,${29 + 113 * n * v},${114.30 + v * 0.01 + n * 0.002}%.6f," +
+        f"${22.60 + v * 0.005}%.6f,$year-02-01 ${8 + sec / 3600}%02d:" +
+        f"${sec / 60 % 60}%02d:${sec % 60}%02d"
+    }
+    val path = dir.resolve("gps.csv")
+    java.nio.file.Files.write(path,
+      ("id,linenumber,opath,lng,lat,t" +: rows).mkString("\n").getBytes("UTF-8"))
+    path.toString
+  }
+
   test("reference sample data smoke: mixed formats, runs end to end") {
-    val raw = spark.read.option("header", "true")
-      .csv("/root/reference/Sample Data/gps.csv")
+    val raw = spark.read.option("header", "true").csv(referenceShapedGpsCsv())
+    // both stamp formats are in the input, and every stamp parses
+    val formats = raw.select(graft.core.TimeOps.matchedFormat($"t").as("f"))
+      .groupBy($"f").count().collect().map(r => Option(r.getString(0))).toSet
+    assert(formats == graft.core.TimeOps.GpsFormats.map(Some(_)).toSet,
+      s"formats=$formats")
     val prep = PatternExtraction.prepare(raw, busLine = None)
     assert(prep.filter($"t".isNull).count() == 0, "all timestamps must parse")
     val pats = PatternExtraction.extractPatterns(prep)

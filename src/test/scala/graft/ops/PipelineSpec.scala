@@ -43,6 +43,50 @@ class PipelineSpec extends SparkSpec {
     df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
       r.getInt(3))).sortBy(t => (t._1, t._2, t._3)).toSeq
 
+  /** Stage 2 as a dense distance matrix, the reference that never
+    * prunes: every pair scored with [[TrajectoryDistance.totalKm]]
+    * over [[TrajectoryClustering.lineRows]], non-finite distances clamped
+    * to 2× the true max finite one, [[Dbscan.fit]], all-zeros on a throw.
+    * Sorted like [[sortedRows]]. */
+  private def denseReference(pats: org.apache.spark.sql.DataFrame,
+      prm: Map[String, TrajectoryClustering.Params]) =
+    TrajectoryClustering.lineRows(pats, spark.sparkContext.broadcast(prm), numParts = 4)
+      .collect().toSeq.flatMap { case (line, ids, pids, s) =>
+        val p = prm(line)
+        val n = ids.length
+        val dist = Array.ofDim[Double](n, n)
+        var maxFinite = 0.0
+        for (i <- 0 until n; j <- i + 1 until n) {
+          val (a, b) = (5 * i, 5 * j)
+          val d = TrajectoryDistance.totalKm(s(a), s(a + 1), s(a + 2), s(a + 3),
+            s(a + 4), s(b), s(b + 1), s(b + 2), s(b + 3), s(b + 4))
+          val dd = if (java.lang.Double.isFinite(d)) d else Double.NaN
+          dist(i)(j) = dd; dist(j)(i) = dd
+          if (!dd.isNaN && dd > maxFinite) maxFinite = dd
+        }
+        for (i <- 0 until n; j <- 0 until n if dist(i)(j).isNaN) dist(i)(j) = 2 * maxFinite
+        val labels =
+          try Dbscan.fit(dist, p.eps, p.minSamples)
+          catch { case _: Exception => Array.fill(n)(0) }
+        (0 until n).map(t => (line, ids(t), pids(t), labels(t)))
+      }
+      .sortBy(t => (t._1, t._2, t._3))
+
+  /** Both branches of [[TrajectoryClustering.cluster]] (the default and
+    * the distributed one forced by `maxLocalPairs = 0`) against
+    * [[denseReference]]; returns the labels. */
+  private def bothBranchesMatchReference(pats: org.apache.spark.sql.DataFrame,
+      prm: Map[String, TrajectoryClustering.Params]) = {
+    val want = denseReference(pats, prm)
+    val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
+    assert(TrajectoryClustering.lastStats.isEmpty, "small input took the distributed branch")
+    val dist = sortedRows(TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
+    assert(TrajectoryClustering.lastStats.isDefined)
+    assert(local == want, "small-input branch differs from the dense reference")
+    assert(dist == want, "distributed branch differs from the dense reference")
+    want
+  }
+
   private val params = Map(
     "L1" -> TrajectoryClustering.Params(eps = 2.0, minSamples = 2),
     "L2" -> TrajectoryClustering.Params(eps = 2.0, minSamples = 2))
@@ -97,8 +141,8 @@ class PipelineSpec extends SparkSpec {
   test("stage 2: binned-cogroup path equals the local path on a 10x-skewed fleet") {
     // LH carries 10× LS's trajectories (40 vs 4) → its T² cost is an
     // outlier and Balance gives it a dedicated bin; forcing
-    // maxLocalPairs = 0 runs the cell scan + binned DBSCAN, which must
-    // produce bit-identical labels to the small-input path
+    // maxLocalPairs = 0 runs the salted cell scan + binned DBSCAN, which
+    // must produce bit-identical labels to the small-input path
     val rows = for {
       (line, nv) <- Seq(("LH", 20), ("LS", 2))
       v <- 1 to nv
@@ -113,10 +157,7 @@ class PipelineSpec extends SparkSpec {
     val prm = Map(
       "LH" -> TrajectoryClustering.Params(5.0, 2),
       "LS" -> TrajectoryClustering.Params(5.0, 2))
-    val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
-    val dist = sortedRows(
-      TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
-    assert(local.nonEmpty && local == dist)
+    assert(bothBranchesMatchReference(pats, prm).nonEmpty)
     // and the hot line's cost really is bin-isolated in the plan
     val plan = Balance.plan(Seq("LH" -> 1600.0, "LS" -> 16.0), targetBins = 2)
     assert(plan("LH") != plan("LS"))
@@ -126,7 +167,7 @@ class PipelineSpec extends SparkSpec {
     // two vehicle groups on ONE line ~0.1 deg (~10 km) apart: cross-group
     // pairs have lower bound > eps=5 and take the r9 prune path, while
     // within-group pairs evaluate fully — labels must still be
-    // bit-identical to the no-prune local path (which never prunes)
+    // bit-identical to the dense reference (which never prunes)
     val rows = for {
       (grp, base) <- Seq(("A", 114.00), ("B", 114.10))
       v <- 1 to 6
@@ -139,10 +180,8 @@ class PipelineSpec extends SparkSpec {
     // sanity: the cross-group bound really is above eps (prune active)
     assert(TrajectoryDistance.lowerBoundKm(
       114.0, 22.5, 114.003, 22.5, 114.1, 22.5, 114.103, 22.5) > 5.0)
-    val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
-    val dist = sortedRows(
-      TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
-    assert(local.nonEmpty && local == dist)
+    val local = bothBranchesMatchReference(pats, prm)
+    assert(local.nonEmpty)
     // both groups cluster internally (distinct clusters), so the pruned
     // relation still carried every within-group edge
     assert(local.map(_._4).toSet.size >= 2)
@@ -172,10 +211,37 @@ class PipelineSpec extends SparkSpec {
     val pats = rows.toDF("id", "linenumber", "lng", "lat", "t", "patternID")
       .withColumn("t", to_timestamp($"t", "yy-MM-dd HH:mm:ss"))
     val prm = Map("L1" -> TrajectoryClustering.Params(5.0, 2))
-    val local = sortedRows(TrajectoryClustering.cluster(pats, prm))
-    val dist = sortedRows(
-      TrajectoryClustering.cluster(pats, prm, maxLocalPairs = 0))
-    assert(local.length == 5 && local == dist)
+    assert(bothBranchesMatchReference(pats, prm).length == 5)
+  }
+
+  test("stage 2: a NaN-coordinate trajectory is clamped alike on both branches") {
+    // V0's first point has a NaN latitude, so its pairs are NaN (never
+    // pruned) and reach the clamp rule: with every finite distance ≤ eps/2
+    // they become edges; with a far group on the line the bound prunes the
+    // cross-group pairs and its witness (> eps) turns the clamp off
+    def pats(far: Boolean) = {
+      def group(from: Int, lng0: Double) = for {
+        v <- from until from + 4
+        n <- 0 to 2
+      } yield (s"V$v", lng0 + n * 0.001 + v * 1e-5, 22.5)
+      val nan = Seq(("V0", 114.0, Double.NaN), ("V0", 114.001, 22.5), ("V0", 114.002, 22.5))
+      (group(1, 114.0) ++ (if (far) group(5, 114.10) else Nil) ++ nan).zipWithIndex
+        .map { case ((id, lng, lat), k) =>
+          (id, "LN", lng, lat, f"19-02-01 08:00:$k%02d", 1L) }
+        .toDF("id", "linenumber", "lng", "lat", "t", "patternID")
+        .withColumn("t", to_timestamp($"t", "yy-MM-dd HH:mm:ss"))
+    }
+    val prm = Map("LN" -> TrajectoryClustering.Params(5.0, 2))
+    assert(TrajectoryDistance.lowerBoundKm(
+      114.0, 22.5, 114.003, 22.5, 114.1, 22.5, 114.103, 22.5) > 5.0)
+    def labelOf(rows: Seq[(String, String, String, Int)]) =
+      rows.map(r => r._2 -> r._4).toMap
+    val joined = labelOf(bothBranchesMatchReference(pats(far = false), prm))
+    assert(joined("V0") != -1 && joined("V0") == joined("V1"),
+      s"NaN pairs under eps/2 should be edges: $joined")
+    val pruned = labelOf(bothBranchesMatchReference(pats(far = true), prm))
+    assert(pruned("V0") == -1, s"NaN pairs past the witness should be no edges: $pruned")
+    assert(pruned.values.toSet == Set(-1, 0, 1), s"two clusters plus noise: $pruned")
   }
 
   test("paramsFrom: reference param-table shapes load; null rows dropped") {

@@ -1,8 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-12 optimization pins: implementations swapped for performance
   * must be value-identical to what they replaced.
@@ -10,12 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - [[Warehouse.triSupportByAdjacency]] (broadcast-CSR common-neighbor
   *    counting) vs [[Warehouse.triSupportByWedges]] (the oriented wedge
   *    enumeration it replaced below the cap) on the REAL sf0.001 staged
-  *    edge relation, and vs an in-test brute force on a synthetic graph
-  *    whose triangles are known by construction.
+  *    edge relation, and on sf0.01 through the wedge path's sort-merge
+  *    fallback; and vs an in-test brute force on a synthetic graph whose
+  *    triangles are known by construction.
   */
-class Round12PerfSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = graft.core.Sessions.local("4")
+class Round12PerfSpec extends graft.SparkSpec {
 
   private def supportSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.select(col("u"), col("v"), col("common")).collect()
@@ -47,14 +44,45 @@ class Round12PerfSpec extends AnyFunSuite {
 
   test("adjacency support == wedge-enumeration support on sf0.001") {
     val s = spark
-    val dir = "/root/testdata/sf0.001"
-    val edges = Warehouse.stagedEdges(s, dir)
-    val nSym = edges.count()
-    val fast = supportSet(Warehouse.triSupportByAdjacency(s, edges, nSym))
-    val (wedgeDf, bloom) = Warehouse.triSupportByWedges(s, dir, edges)
-    val slow = supportSet(wedgeDf)
-    bloom.destroy()
-    assert(fast.nonEmpty, "sf0.001 co-purchase graph must contain triangles")
-    assert(fast === slow)
+    // sf0.001 with the default broadcast cap; sf0.01 with cap 0, the
+    // sort-merge fallback (another dir than sf0.001, since the wedge path's
+    // staged tables are cached per (name, dir) in this JVM)
+    for ((dir, cap) <- Seq((sf0001, 40000000L), (sf001, 0L))) {
+      val edges = Warehouse.stagedEdges(s, dir)
+      val nSym = edges.count()
+      val fast = supportSet(Warehouse.triSupportByAdjacency(s, edges, nSym))
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan.toString)
+        def onFailure(f: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+      }
+      // with Spark's size-based broadcast off, any broadcast join left in
+      // the plan comes from the cap
+      val threshold = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      if (cap == 0L) {
+        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        s.listenerManager.register(listener)
+      }
+      val slow = try {
+        val (wedgeDf, bloom) = Warehouse.triSupportByWedges(s, dir, edges, cap)
+        try supportSet(wedgeDf) finally bloom.destroy()
+      } finally {
+        // deliver the queued plans before the listener goes
+        org.apache.spark.sql.graft.Bridge.drainListeners(s.sparkContext)
+        s.listenerManager.unregister(listener)
+        s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      }
+      assert(fast.nonEmpty, s"$dir co-purchase graph must contain triangles")
+      assert(fast === slow, dir)
+      if (cap == 0L) {
+        val all = plans.toArray.mkString("\n")
+        assert(all.contains("SortMergeJoin"), s"no wedge join plan seen:\n$all")
+        assert(!all.contains("BroadcastHashJoin") && !all.contains("BroadcastExchange"),
+          s"cap 0 still broadcasts:\n$all")
+      }
+    }
   }
 }

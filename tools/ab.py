@@ -8,8 +8,13 @@ how many pairs the change won (ties count for neither side) and whether
 the gain rule holds: the change wins at least nine tenths of the pairs,
 the medians differ, in the metric's better direction, by more than the
 parent's interquartile range, and the change has no more incorrect, failed
-or non-zero-exit runs than the parent. Directions and the run length come
-from the change checkout's BENCHMARK.json. Nothing under either checkout's perfbench/ is changed; the
+or non-zero-exit runs than the parent. For each end-to-end metric it also
+prints the no-regression verdict: the relative change of the median against
+the metric's bound, "unresolved" when the parent's interquartile range is
+wider than the bound (unless every change run beats every parent run), and
+never "holds" when the change has more incorrect, failed or non-zero-exit
+runs. Directions, bounds and the run length come from the change checkout's
+BENCHMARK.json. Nothing under either checkout's perfbench/ is changed; the
 benchmark builds into each checkout's own build directory.
 
     python3 tools/ab.py PARENT CHANGE --workload fleet_dense8 --seeds 61-70
@@ -54,7 +59,41 @@ def run_once(checkout, workload, seed, seconds, trace):
             "metrics": {k: v["value"] for k, v in result["metrics"].items()}}
 
 
-def summarize(runs, better):
+def paired(pairs, m):
+    """Parent and change values of metric m over the pairs that have it."""
+    both = [(p["metrics"][m], c["metrics"][m]) for p, c in pairs
+            if m in p["metrics"] and m in c["metrics"]]
+    return [x for x, _ in both], [y for _, y in both]
+
+
+def no_regression(pairs, bounds, better, worse):
+    """Per end-to-end metric: the median's relative change against its
+    bound, unresolved when the parent's own IQR is wider than the bound."""
+    print(f"{'no-regression':28s} {'change':>9s} {'bound':>7s} {'parent IQR':>11s}  verdict")
+    for m, bound in bounds.items():
+        a, b = paired(pairs, m)
+        if not a:
+            continue
+        sign = 1.0 if better[m] == "lower" else -1.0
+        med = quantile(a, 0.5)
+        if med == 0:
+            print(f"{m:28s} {'n/a':>9s} {bound:7.0%} {'n/a':>11s}  unresolved")
+            continue
+        change = (quantile(b, 0.5) - med) / abs(med)
+        spread = (quantile(a, 0.75) - quantile(a, 0.25)) / abs(med)
+        beats_all = all(sign * (x - y) > 0 for x in a for y in b)
+        if worse:
+            verdict = "no (more bad runs)"
+        elif spread > bound and not beats_all:
+            verdict = "unresolved"
+        elif sign * change > bound:
+            verdict = "regressed"
+        else:
+            verdict = "holds"
+        print(f"{m:28s} {change:+9.1%} {bound:7.0%} {spread:11.1%}  {verdict}")
+
+
+def summarize(runs, better, bounds):
     by_seed = {}
     for r in runs:
         by_seed.setdefault(r["seed"], {})[r["side"]] = r
@@ -73,8 +112,7 @@ def summarize(runs, better):
     print(f"{'metric':28s} {'parent med [q1, q3]':>30s} {'change med [q1, q3]':>30s}"
           f" {'wins':>7s} {'gap':>9s} {'IQR':>9s}  rule")
     for m in names:
-        a = [p["metrics"][m] for p, c in pairs if m in p["metrics"] and m in c["metrics"]]
-        b = [c["metrics"][m] for p, c in pairs if m in p["metrics"] and m in c["metrics"]]
+        a, b = paired(pairs, m)
         sign = 1.0 if better[m] == "lower" else -1.0
         wins = sum(1 for x, y in zip(a, b) if sign * (x - y) > 0)
         gap = sign * (quantile(a, 0.5) - quantile(b, 0.5))
@@ -84,6 +122,7 @@ def summarize(runs, better):
                            f"{quantile(xs, .75):.4g}]")
         print(f"{m:28s} {side(a):>30s} {side(b):>30s} {wins:>3d}/{len(a):<3d}"
               f" {gap:9.4g} {iqr:9.4g}  {'holds' if holds else 'no'}")
+    no_regression(pairs, bounds, better, worse)
 
 
 def main():
@@ -99,9 +138,10 @@ def main():
 
     spec = json.load(open(os.path.join(args.change, "BENCHMARK.json")))
     better = {m["name"]: m["better"] for m in spec["end_to_end"] + spec["per_layer"]}
+    bounds = {m["name"]: m["bound"] for m in spec["end_to_end"]}
     if args.src:
         runs = [json.loads(l) for l in open(args.src)]
-        summarize([r for r in runs if r["workload"] == args.workload], better)
+        summarize([r for r in runs if r["workload"] == args.workload], better, bounds)
         return
     if not args.seeds:
         ap.error("--seeds is required unless --from is given")
@@ -119,7 +159,7 @@ def main():
             if args.out:
                 with open(args.out, "a") as f:
                     f.write(json.dumps(r) + "\n")
-    summarize(runs, better)
+    summarize(runs, better, bounds)
 
 
 if __name__ == "__main__":
