@@ -189,13 +189,13 @@ object TrajectoryClustering {
     val lineCounts = lines.map(r => r._1 -> r._2.length.toLong).collect()
     val totalPairs = lineCounts.map { case (_, t) => t * t }.sum
 
-    // the small branch counts into stats it never publishes
-    val stats = new PairScanStats(sc)
-    val local = totalPairs <= maxLocalPairs
-    lastStats = if (local) None else Some(stats)
-    val labels =
-      if (local) clusterLocal(lines, bc, stats)
-      else clusterDistributed(lines, lineCounts, bc, numParts, stats)
+    val stats =
+      if (totalPairs <= maxLocalPairs) None else Some(new PairScanStats(sc))
+    lastStats = stats
+    val labels = stats match {
+      case None => clusterLocal(lines, bc)
+      case Some(st) => clusterDistributed(lines, lineCounts, bc, numParts, st)
+    }
     val rows = labels.map { case (line, id, pid, label) =>
       new GenericInternalRow(Array[Any](UTF8String.fromString(line),
         UTF8String.fromString(id), UTF8String.fromString(pid), label)): InternalRow
@@ -216,7 +216,7 @@ object TrajectoryClustering {
       .partitionBy(new HashPartitioner(numParts))
       .setName(CellShuffleName)
       .flatMap { case ((line, salt), sums) =>
-        new CellScan(line, salt, PairSalts, sums, bc.value(line).eps, stats)
+        new CellScan(line, salt, PairSalts, sums, bc.value(line).eps, Some(stats))
       }
 
     // cost-balanced DBSCAN placement: per-line pair cost T² bin-packed
@@ -381,12 +381,15 @@ object TrajectoryClustering {
     * witness — lb ≤ d, and the only consumer is the `2·maxFinite ≤ eps`
     * clamp test, where ANY witness > eps pins the same (false) outcome as
     * the true maximum; with zero pruned pairs the witness is exactly the
-    * true maximum. NaN coordinates make lb NaN, never pruned, so NaN pairs
-    * reach the clamp rule unchanged. Finite d ≤ eps is an edge; finite
-    * d > eps is dropped here, which turns the DBSCAN task's O(T²) feed into
-    * an O(edges) one. Counts go to `stats` once, when the cell is done. */
+    * true maximum. A pair is pruned only when both polyline lengths are
+    * finite too: lb reads the endpoints alone (NaN endpoints make it NaN),
+    * so a NaN interior point would otherwise prune a pair whose d is NaN
+    * and pin the witness past eps. Non-finite pairs thus reach the clamp
+    * rule unchanged. Finite d ≤ eps is an edge; finite d > eps is dropped
+    * here, which turns the DBSCAN task's O(T²) feed into an O(edges) one.
+    * Counts go to `stats`, if any, once, when the cell is done. */
   private final class CellScan(line: String, salt: Int, salts: Int,
-      s: Array[Double], eps: Double, stats: PairScanStats)
+      s: Array[Double], eps: Double, stats: Option[PairScanStats])
       extends scala.collection.AbstractIterator[CellRow] {
     private val t = s.length / 5
     private var i = salt
@@ -408,7 +411,7 @@ object TrajectoryClustering {
           pairs += 1
           val lb = TrajectoryDistance.lowerBoundKm(
             s(a), s(a + 1), s(a + 2), s(a + 3), s(b), s(b + 1), s(b + 2), s(b + 3))
-          if (lb > eps) {
+          if (lb > eps && java.lang.Double.isFinite(s(a + 4) + s(b + 4))) {
             pruned += 1
             if (lb > maxFinite) maxFinite = lb
           } else {
@@ -426,9 +429,11 @@ object TrajectoryClustering {
       }
       if (i >= t) {
         done = true
-        stats.pairs.add(pairs); stats.pruned.add(pruned)
-        stats.evaluated.add(evaluated); stats.edges.add(edges)
-        stats.nans.add(nans)
+        stats.foreach { st =>
+          st.pairs.add(pairs); st.pruned.add(pruned)
+          st.evaluated.add(evaluated); st.edges.add(edges)
+          st.nans.add(nans)
+        }
       }
       (line, edgeBuf.toArray, nanBuf.toArray, maxFinite)
     }
@@ -436,14 +441,14 @@ object TrajectoryClustering {
 
   /** Small-input path: each line is one [[CellScan]] cell (salt 0 of 1),
     * scanned into a [[LineBuf]] and labelled in one task, with no cell or
-    * bin shuffle. */
+    * bin shuffle and no published stats. */
   private def clusterLocal(lines: RDD[LineRow],
-      bc: Broadcast[Map[String, Params]], stats: PairScanStats)
+      bc: Broadcast[Map[String, Params]])
       : RDD[(String, String, String, Int)] =
     lines.flatMap { case (line, ids, pids, sums) =>
       val p = bc.value(line)
       val buf = new LineBuf(ids, pids)
-      new CellScan(line, 0, 1, sums, p.eps, stats).foreach(buf.add)
+      new CellScan(line, 0, 1, sums, p.eps, None).foreach(buf.add)
       buf.labels(line, p)
     }
 

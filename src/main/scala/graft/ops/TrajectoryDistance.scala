@@ -147,7 +147,9 @@ object TrajectoryDistance {
     *    on [0, π/2].
     *
     * NaN coordinates poison the bound to NaN, and `NaN > eps` is false —
-    * a NaN pair is never pruned (its clamp-rule handling is downstream).
+    * such a pair is never pruned (its clamp-rule handling is downstream).
+    * The bound never reads the polyline lengths, so a NaN interior point
+    * leaves it finite: a caller that prunes on it checks the lengths.
     * Cost: ~15 flops, zero trig/alloc. */
   def lowerBoundKm(
       h1lng: Double, h1lat: Double, l1lng: Double, l1lat: Double,

@@ -219,29 +219,39 @@ class PipelineSpec extends SparkSpec {
     // pruned) and reach the clamp rule: with every finite distance ≤ eps/2
     // they become edges; with a far group on the line the bound prunes the
     // cross-group pairs and its witness (> eps) turns the clamp off
-    def pats(far: Boolean) = {
-      def group(from: Int, lng0: Double) = for {
-        v <- from until from + 4
-        n <- 0 to 2
-      } yield (s"V$v", lng0 + n * 0.001 + v * 1e-5, 22.5)
-      val nan = Seq(("V0", 114.0, Double.NaN), ("V0", 114.001, 22.5), ("V0", 114.002, 22.5))
-      (group(1, 114.0) ++ (if (far) group(5, 114.10) else Nil) ++ nan).zipWithIndex
+    def group(from: Int, lng0: Double) = for {
+      v <- from until from + 4
+      n <- 0 to 2
+    } yield (s"V$v", lng0 + n * 0.001 + v * 1e-5, 22.5)
+    def pats(rows: Seq[(String, Double, Double)]) =
+      rows.zipWithIndex
         .map { case ((id, lng, lat), k) =>
           (id, "LN", lng, lat, f"19-02-01 08:00:$k%02d", 1L) }
         .toDF("id", "linenumber", "lng", "lat", "t", "patternID")
         .withColumn("t", to_timestamp($"t", "yy-MM-dd HH:mm:ss"))
-    }
+    val nanHead = Seq(("V0", 114.0, Double.NaN), ("V0", 114.001, 22.5), ("V0", 114.002, 22.5))
     val prm = Map("LN" -> TrajectoryClustering.Params(5.0, 2))
     assert(TrajectoryDistance.lowerBoundKm(
       114.0, 22.5, 114.003, 22.5, 114.1, 22.5, 114.103, 22.5) > 5.0)
     def labelOf(rows: Seq[(String, String, String, Int)]) =
       rows.map(r => r._2 -> r._4).toMap
-    val joined = labelOf(bothBranchesMatchReference(pats(far = false), prm))
+    val joined = labelOf(bothBranchesMatchReference(pats(group(1, 114.0) ++ nanHead), prm))
     assert(joined("V0") != -1 && joined("V0") == joined("V1"),
       s"NaN pairs under eps/2 should be edges: $joined")
-    val pruned = labelOf(bothBranchesMatchReference(pats(far = true), prm))
+    val pruned = labelOf(bothBranchesMatchReference(
+      pats(group(1, 114.0) ++ group(5, 114.10) ++ nanHead), prm))
     assert(pruned("V0") == -1, s"NaN pairs past the witness should be no edges: $pruned")
     assert(pruned.values.toSet == Set(-1, 0, 1), s"two clusters plus noise: $pruned")
+    // V9 is ~10 km from the group with finite, slanted-chord endpoints and
+    // a NaN interior point: its bound clears eps but its length is NaN, so
+    // its pairs are NaN, not pruned, and every finite distance ≤ eps/2
+    // makes them edges
+    val farNaN = Seq(("V9", 114.10, 22.5), ("V9", 114.101, Double.NaN), ("V9", 114.102, 22.501))
+    assert(TrajectoryDistance.lowerBoundKm(
+      114.0, 22.5, 114.003, 22.5, 114.1, 22.5, 114.102, 22.501) > 5.0)
+    val interior = labelOf(bothBranchesMatchReference(pats(group(1, 114.0) ++ farNaN), prm))
+    assert(interior("V9") != -1 && interior("V9") == interior("V1"),
+      s"NaN-length pairs under eps/2 should be edges: $interior")
   }
 
   test("paramsFrom: reference param-table shapes load; null rows dropped") {
