@@ -2044,14 +2044,7 @@ object Ext {
     val path = Option(stagedPaths.get(key)).getOrElse(stageLock.synchronized {
       Option(stagedPaths.get(key)).getOrElse {
         val p = graft.core.Tmp.jvmScopedDir(s"stage_$what", dir)
-        val df = build
-        // stage builds never surface in a query's explain — this hook
-        // prints their physical plan on demand (r12: used to find the
-        // bloom filter stranded above an exchange in the SMJ wedge path)
-        if (sys.env.contains("SPARK_GRAFT_EXPLAIN_STAGE"))
-          println(s"[stage-plan] $what:\n" +
-            df.queryExecution.executedPlan.toString)
-        df.write.mode("overwrite").parquet(p)
+        build.write.mode("overwrite").parquet(p)
         stagedPaths.put(key, p)
         p
       }
@@ -3332,8 +3325,9 @@ object Ext {
     * Scale: one partitioned write (scratch, stage-guarded per JVM × sf),
     * then a partition-pruned scan + one aggregate. */
   def srcPartitionPrunedRead(s: SparkSession, dir: String): DataFrame = {
+    val log = graft.core.PhaseLog.start("partitioned")
     val out = graft.core.Tmp.jvmScopedDir("part_events", dir)
-    if (!new java.io.File(out, "_SUCCESS").exists()) {
+    stageOnce(log, out) {
       events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts_us"),
           floor(col("value") * 100).cast("long").as("cents"),
@@ -3351,7 +3345,7 @@ object Ext {
   def srcCompactSmallFiles(s: SparkSession, dir: String): DataFrame = {
     val log = graft.core.PhaseLog.start("compact")
     val frag = graft.core.Tmp.jvmScopedDir("compact_frag", dir)
-    if (!new java.io.File(frag, "_SUCCESS").exists()) {
+    stageOnce(log, frag) {
       t(s, dir, "documents").repartition(64)
         .write.mode("overwrite").parquet(frag)
     }
@@ -5000,65 +4994,134 @@ object Ext {
       .orderBy(col("lang"))
   }
 
-  /** Streaming-sink round-trip under the driver oracle: the events table
-    * streamed through the stateful sessionizer
-    * (`streaming.StreamOps.sessionize` — watermark + event-time timeouts)
-    * into a parquet sink via foreachBatch, read back, and hash-compared
-    * to the batch gaps-and-islands oracle. Proves the streaming operator
-    * computes the batch semantics, not just its spec fixtures.
-    *
-    * Harness notes (correctness of the comparison, not the operator):
-    *  - one far-future sentinel row per user closes that user's last
-    *    session inline on arrival — no reliance on a post-input timer
-    *    micro-batch, which `Trigger.AvailableNow` does not guarantee;
-    *    sentinel-started sessions stay open in state and never emit;
-    *  - the staged input is written as ONE file so the run is a single
-    *    micro-batch: across batches the file order would be unspecified,
-    *    and a sentinel processed before its user's real events would
-    *    corrupt the session bounds (and the advanced watermark would
-    *    drop the rest). A production stream has ordered arrival and no
-    *    sentinels — this is test-harness scaffolding, labeled as such.
-    *  - value_sum sums integer-valued doubles (event ids ≪ 2⁵³), so the
-    *    fold order difference between engines cannot produce drift. */
-  /** Shared harness for the three streaming sink queries: scoped conf
-    * overrides (state-partition sizing etc. — restored in a finally),
-    * one AvailableNow run of `plan` into a foreachBatch parquet appender
-    * at `outDir`, per-batch progress in the bench tail, and the
-    * checkpoint dir deleted even when the stream fails (a stale
-    * checkpoint would make the NEXT run resume past its staged input and
-    * emit nothing). Callers own input staging/cleanup — that is where
-    * the three queries genuinely differ. */
-  /** Scale-adaptive shuffle/state partition count for the streaming sink
-    * harnesses (r12, guide §2 — replace a constant tuned to one
-    * environment): ≈ one state partition per 4 MB of the corpus's event
-    * table, floored at 1 and capped at default parallelism. The old
-    * hard-coded "1" was right at bench SF (each extra state partition
-    * adds per-micro-batch delta-file round trips that dominate tiny
-    * inputs — the measured state-store I/O floor) but pushed the 10×
-    * corpus's ~1 M-row first batch through ONE state partition. At
-    * sf0.1 this still evaluates to 1, so driver bench numbers stay
-    * comparable; both inputs to the formula come from the corpus and
-    * the session, not the machine. */
-  private def sinkPartitions(s: SparkSession, dir: String,
-      table: String = "events"): String = {
-    // sized from the table actually feeding the sink (r12 ADVICE: the
-    // document-fed sinks previously sized off events.parquet — wrong
-    // proxy for a corpus with small events but large documents)
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    math.max(1L, math.min(s.sparkContext.defaultParallelism.toLong,
-      bytes / (4L << 20))).toString
+  /** Written into a staged input dir once staging finished; a dir
+    * without it is missing or torn. */
+  private val StagedMarker = "_graft_staged"
+
+  /** Stages a query's scratch input once per (JVM, sf dir): when the
+    * marker in `dirs.head` is absent it clears every dir in `dirs`, runs
+    * `stage`, then writes the marker; otherwise it logs the reuse and
+    * writes nothing. Content is deterministic per sf dir and the paths
+    * are per-JVM, so reruns (bench pass 2, verify reps, a `_tws` twin
+    * sharing its sibling's dir) skip the staging writes (round-4 verdict
+    * #2: the streaming subtotal was dominated by re-staging harness I/O),
+    * and a ladder's mtimes, set at first staging, stay strictly
+    * ascending. Disk stays bounded: one copy per sf dir, never deleted
+    * mid-JVM. */
+  private[queries] def stageOnce(log: String => Unit, dirs: String*)(
+      stage: => Unit): Unit = {
+    val marker = new java.io.File(dirs.head, StagedMarker)
+    if (marker.exists()) log("reusing staged input")
+    else {
+      dirs.foreach { d =>
+        graft.core.Tmp.deleteRecursively(d)
+        new java.io.File(d).mkdirs(): Unit
+      }
+      stage
+      java.nio.file.Files.createFile(marker.toPath): Unit
+      log("staged input")
+    }
   }
 
+  /** Max `ts_us` of `df`: the clock a sink's sentinel rungs are set from. */
+  private def maxTsUs(df: DataFrame): Long =
+    df.agg(max(col("ts_us"))).head().getLong(0)
+
+  /** The mtime-ordered sentinel ladder: stages `real`, then each of
+    * `sentinels`, as ONE parquet file apiece, `f0.parquet`…`fn.parquet`
+    * in `dir`, with strictly ascending mtimes. With no sentinels it is
+    * the one-file, one-micro-batch input of the stateless and inner-join
+    * sinks.
+    *
+    * Why the watermark sinks need it: an Append-mode stateful operator
+    * emits (a window, a finalized probe, an unmatched outer row, a
+    * pending ping) only once the event-time watermark passes it, and the
+    * watermark micro-batch N runs under is computed from batch N−1's max
+    * event time. Under `maxFilesPerTrigger=1` the file source takes the
+    * oldest mtime first, so batch 0 is the real data, batch 1 (the
+    * sentinel at `maxTs + 100·step`) runs under the watermark derived
+    * from the real data, and batch 2 (`maxTs + 200·step`) runs under
+    * batch 1's, which is past every real event: every real emission has
+    * landed by stream end with no reliance on a post-input no-data
+    * micro-batch, which `Trigger.AvailableNow` does not guarantee.
+    * Sentinel rows ride a key no real row carries and are dropped on
+    * read-back; their own state never closes. The choreography is
+    * test-harness scaffolding, labeled as such: a production stream has
+    * real arrival order and a live watermark. */
+  private def stageLadder(dir: String, real: DataFrame,
+      sentinels: DataFrame*): Unit = {
+    val files = real +: sentinels
+    val now = System.currentTimeMillis()
+    files.zipWithIndex.foreach { case (df, i) =>
+      stageMtimeFile(df, dir, s"f$i.parquet",
+        now - 60000L * (files.size - i) / files.size)
+    }
+  }
+
+  /** Stage `df` as ONE parquet file named `name` inside `destDir` with an
+    * explicit modification time, the rung [[stageLadder]] lays. Fails
+    * loudly when the filesystem rejects the mtime: silent order
+    * scrambling would drop every real row as late. */
+  private def stageMtimeFile(
+      df: DataFrame, destDir: String, name: String, mtimeMs: Long): Unit = {
+    // routed through Tmp so the shutdown hook reclaims it if we crash
+    // between the write and the trailing delete (round-4 ADVICE)
+    val stageDir = graft.core.Tmp.jvmScopedDir("mtime_stage", s"$destDir/$name")
+    df.coalesce(1).write.mode("overwrite").parquet(stageDir)
+    val part = Option(new java.io.File(stageDir).listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no parquet part written for $name"))
+    val dest = new java.io.File(destDir, name)
+    java.nio.file.Files.move(part.toPath, dest.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    require(dest.setLastModified(mtimeMs),
+      s"could not set mtime on $dest; file-source batch order would be undefined")
+    graft.core.Tmp.deleteRecursively(stageDir)
+  }
+
+  /** The conf a sink's stream runs under. Its shuffle width is the state
+    * partition count, a DELIBERATE per-stream choice (it freezes into the
+    * checkpoint): a streaming job sizes it to active-key volume, not to
+    * the batch session's shuffle width, since each extra state partition
+    * adds per-micro-batch open/commit and delta-file round trips that
+    * dominate tiny inputs. The width is ≈ one state partition per 4 MB
+    * of `table` (the table actually feeding the sink), floored at 1 and
+    * capped at default parallelism, so the 10× corpus's ~1 M-row first
+    * batch no longer goes through ONE state partition while sf0.1 still
+    * evaluates to 1 (r12, guide §2: both inputs come from the corpus and
+    * the session, not the machine). A missing table sizes to 1; an I/O
+    * error while sizing propagates. The `transformWithState` twins
+    * (`tws`) get the RocksDB state store, the provider that API
+    * requires. */
+  private def sinkConf(s: SparkSession, dir: String,
+      table: String = "events", tws: Boolean = false): Map[String, String] = {
+    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    val partitions = math.max(1L,
+      math.min(s.sparkContext.defaultParallelism.toLong, bytes / (4L << 20)))
+    Map("spark.sql.shuffle.partitions" -> partitions.toString) ++
+      (if (tws) Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Map.empty)
+  }
+
+  /** Runs one sink's stream and returns what it landed: `confs` scoped to
+    * the query start (restored in a finally), one AvailableNow run of
+    * `plan` into a foreachBatch parquet appender at the JVM-scoped
+    * `<tag>_out` dir, per-batch progress in the bench tail, and the
+    * `<tag>_ck` checkpoint deleted even when the stream fails (a stale
+    * checkpoint would make the NEXT run resume past its staged input and
+    * emit nothing). The output outlives the call (the returned frame
+    * reads it lazily) until the next run's clear. */
   private def runStreamToParquet(
-      s: SparkSession, outDir: String, ckDir: String,
+      s: SparkSession, dir: String, tag: String,
       confs: Map[String, String], log: String => Unit)(
-      plan: => DataFrame): Unit = {
+      plan: => DataFrame): DataFrame = {
     import graft.core.Tmp
+    val outDir = Tmp.jvmScopedDir(s"${tag}_out", dir)
+    val ckDir = Tmp.jvmScopedDir(s"${tag}_ck", dir)
     Tmp.deleteRecursively(outDir)
     Tmp.deleteRecursively(ckDir)
     // the post-input no-data micro-batch is OFF by default (caller's
@@ -5091,32 +5154,29 @@ object Ext {
       }
     } finally Tmp.deleteRecursively(ckDir)
     log("stream done")
+    s.read.parquet(outDir)
   }
 
-  /** Stage `df` as ONE parquet file named `name` inside `destDir` with an
-    * explicit modification time — the mtime-ordered sentinel ladder both
-    * watermark-choreographed harnesses ride on (the file source processes
-    * oldest-mtime first under maxFilesPerTrigger=1). Fails loudly when
-    * the filesystem rejects the mtime: silent order scrambling would
-    * drop every real row as late. */
-  private def stageMtimeFile(
-      df: DataFrame, destDir: String, name: String, mtimeMs: Long): Unit = {
-    // routed through Tmp so the shutdown hook reclaims it if we crash
-    // between the write and the trailing delete (round-4 ADVICE)
-    val stageDir = graft.core.Tmp.jvmScopedDir("mtime_stage", s"$destDir/$name")
-    df.coalesce(1).write.mode("overwrite").parquet(stageDir)
-    val part = Option(new java.io.File(stageDir).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part written for $name"))
-    val dest = new java.io.File(destDir, name)
-    java.nio.file.Files.move(part.toPath, dest.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    require(dest.setLastModified(mtimeMs),
-      s"could not set mtime on $dest; file-source batch order would be undefined")
-    graft.core.Tmp.deleteRecursively(stageDir)
-  }
-
+  /** Streaming-sink round-trip under the driver oracle: the events table
+    * streamed through the stateful sessionizer
+    * (`streaming.StreamOps.sessionize` — watermark + event-time timeouts)
+    * into a parquet sink via foreachBatch, read back, and hash-compared
+    * to the batch gaps-and-islands oracle. Proves the streaming operator
+    * computes the batch semantics, not just its spec fixtures.
+    *
+    * Harness notes (correctness of the comparison, not the operator):
+    *  - one far-future sentinel row per user closes that user's last
+    *    session inline on arrival — no reliance on a post-input timer
+    *    micro-batch, which `Trigger.AvailableNow` does not guarantee;
+    *    sentinel-started sessions stay open in state and never emit;
+    *  - the staged input is written as ONE file so the run is a single
+    *    micro-batch: across batches the file order would be unspecified,
+    *    and a sentinel processed before its user's real events would
+    *    corrupt the session bounds (and the advanced watermark would
+    *    drop the rest). A production stream has ordered arrival and no
+    *    sentinels — this is test-harness scaffolding, labeled as such.
+    *  - value_sum sums integer-valued doubles (event ids ≪ 2⁵³), so the
+    *    fold order difference between engines cannot produce drift. */
   def streamSessionizeSink(s: SparkSession, dir: String): DataFrame =
     streamSessionizeSinkImpl(s, dir, tws = false)
 
@@ -5139,39 +5199,16 @@ object Ext {
     val ev = events(s, dir)
       .select(col("user_id"), col("ts_us"),
         col("event_id").cast("double").as("value"))
-    // JVM-scoped stable dirs keep disk bounded across invocations (a
-    // fresh temp dir per call leaked a full events copy per bench rep);
-    // checkpoint lifecycle is the harness's job; only the small session
-    // output outlives the call (the returned DataFrame reads it lazily)
-    // until the next run's clear.
-    import graft.core.Tmp
-    val tag = if (tws) "stream_tws" else "stream"
-    // BOTH sessionize variants stream the identical staged input — one
-    // JVM-stable copy (tag "stream_in") is staged by whichever runs
-    // first, sentinels and all, and reused by the other (content is
-    // deterministic per sf dir; _SUCCESS guards against a torn earlier
-    // write). Disk stays bounded: one events copy per sf, overwritten,
-    // never deleted mid-JVM.
-    val inDir = Tmp.jvmScopedDir("stream_in", dir)
-    val outDir = Tmp.jvmScopedDir(s"${tag}_out", dir)
-    val ckDir = Tmp.jvmScopedDir(s"${tag}_ck", dir)
-    if (!new java.io.File(inDir, "_SUCCESS").exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
+    // BOTH sessionize variants stream the identical staged input, staged
+    // by whichever runs first, sentinels and all
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_in", dir)
+    stageOnce(log, inDir) {
       val sentinels = ev.groupBy(col("user_id"))
-        .agg(lit(maxTs + 10 * gapUs).as("ts_us"), lit(0.0).as("value"))
-      ev.unionByName(sentinels).coalesce(1).write.mode("overwrite").parquet(inDir)
-      log("staged input")
-    } else log("reusing staged input")
-
-    // state partition count is a DELIBERATE per-stream choice (it freezes
-    // into the checkpoint): a streaming job sizes it to active-key volume,
-    // not to the batch session's shuffle width — 32 state stores for this
-    // feed is pure per-partition overhead (open/commit per micro-batch).
-    val confs = Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)) ++
-      (if (tws) Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Map.empty)
-    runStreamToParquet(s, outDir, ckDir, confs, log) {
+        .agg(lit(maxTsUs(ev) + 10 * gapUs).as("ts_us"), lit(0.0).as("value"))
+      stageLadder(inDir, ev.unionByName(sentinels))
+    }
+    runStreamToParquet(s, dir, if (tws) "stream_tws" else "stream",
+        sinkConf(s, dir, tws = tws), log) {
       val stream = s.readStream
         .schema("user_id BIGINT, ts_us BIGINT, value DOUBLE")
         .parquet(inDir)
@@ -5181,7 +5218,6 @@ object Ext {
       if (tws) StreamOps.sessionizeTws(stream, gapUs).toDF()
       else StreamOps.sessionize(stream, gapUs).toDF()
     }
-    s.read.parquet(outDir)
       .select(col("user_id"), col("session_id"), col("n_events"),
         col("start_us"), col("end_us"), round(col("value_sum"), 2).as("value_sum"))
       .orderBy(col("user_id"), col("session_id"))
@@ -5253,41 +5289,26 @@ object Ext {
           col("event_id").as(s"${prefix}_id"))
     val lDir = Tmp.jvmScopedDir("stream_ij_l", dir)
     val rDir = Tmp.jvmScopedDir("stream_ij_r", dir)
-    val outDir = Tmp.jvmScopedDir("stream_ij_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_ij_ck", dir)
-    // staged once per (JVM, sf dir) and REUSED across invocations —
-    // content is deterministic per dir, paths are per-JVM, and the
-    // checkpoint/out dirs are cleared per run, so reruns (bench pass 2,
-    // verify reps) skip the coalesce(1) writes (round-4 verdict #2:
-    // the streaming subtotal was dominated by re-staging harness I/O)
-    if (!new java.io.File(lDir, "_SUCCESS").exists() ||
-        !new java.io.File(rDir, "_SUCCESS").exists()) {
-      side("click", "l").coalesce(1).write.mode("overwrite").parquet(lDir)
-      side("error", "r").coalesce(1).write.mode("overwrite").parquet(rDir)
-      log("staged inputs")
-    } else log("reusing staged inputs")
+    stageOnce(log, lDir, rDir) {
+      stageLadder(lDir, side("click", "l"))
+      stageLadder(rDir, side("error", "r"))
+    }
     def rd(path: String, prefix: String) = s.readStream
       .schema(s"${prefix}_user BIGINT, ${prefix}_t TIMESTAMP, ${prefix}_id BIGINT")
       .parquet(path)
-    // state sizing: a stream-stream join runs FOUR state stores per
-    // partition per side, so partition count is an 8× store-instance
-    // multiplier — ONE partition fits this test stream's key volume
-    // (r10 verdict stretch #9: per-batch wall is state-commit latency
-    // × store instances, measured ~2× on the sentinel batches going
-    // 4 → 1; a production deployment sizes this to its key cardinality).
-    // The post-input no-data micro-batch is disabled: it exists to
-    // advance the watermark for eviction/outer-null emission, neither of
-    // which an inner join draining a finite input needs — measured, it
-    // was half the stream's wall time (state commit across all stores).
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir),
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"), log) {
+    // a stream-stream join runs FOUR state stores per partition per
+    // side, so partition count is an 8× store-instance multiplier (r10
+    // verdict stretch #9: per-batch wall is state-commit latency × store
+    // instances). The runner's default keeps the post-input no-data
+    // micro-batch off: it only advances the watermark for eviction and
+    // outer-null emission, neither of which an inner join draining a
+    // finite input needs — measured, it was half the stream's wall time.
+    runStreamToParquet(s, dir, "stream_ij", sinkConf(s, dir), log) {
       StreamOps.intervalJoin(rd(lDir, "l"), rd(rDir, "r"), "10 minutes")
         .select(col("l_id").as("click_id"), col("l_user").as("user_id"),
           col("r_id").as("err_id"),
           (unix_micros(col("r_t")) - unix_micros(col("l_t"))).as("dt_us"))
-    }
-    s.read.parquet(outDir).orderBy(col("click_id"), col("err_id"))
+    }.orderBy(col("click_id"), col("err_id"))
   }
 
   /** LEFT-OUTER STREAM-STREAM interval join under the driver's DuckDB
@@ -5300,17 +5321,14 @@ object Ext {
     * [[joinRangeBucketed]]'s `"left"` join semantics.
     *
     * Watermark choreography: outer-null emission happens on state
-    * eviction, and the watermark of micro-batch N derives from batch
-    * N−1's max event time — so BOTH sides stage the mtime-ordered
-    * sentinel ladder ([[streamTumblingSink]]'s trick; a stream-stream
+    * eviction, so BOTH sides stage the [[stageLadder]] (a stream-stream
     * join's watermark is the MIN over its two inputs, so each side needs
-    * its own drivers) under `maxFilesPerTrigger=1`. Batch 0 joins the
-    * real feeds and emits every matched pair; sentinel batches 1–2 walk
-    * the global watermark past every click's `l_t + window`, evicting
-    * unmatched clicks as null-padded rows. Sentinels ride user −1/−2
-    * (never joinable, dropped on read-back); nulls are coalesced to
-    * sentinels on BOTH sides of the oracle compare, the
-    * `join_left_outer` convention. */
+    * its own drivers). Batch 0 joins the real feeds and emits every
+    * matched pair; sentinel batches 1–2 walk the global watermark past
+    * every click's `l_t + window`, evicting unmatched clicks as
+    * null-padded rows. Sentinels ride user −1/−2 (never joinable, dropped
+    * on read-back); nulls are coalesced to sentinels on BOTH sides of the
+    * oracle compare, the `join_left_outer` convention. */
   def streamIntervalOuterSink(s: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamOps
     import graft.core.Tmp
@@ -5323,44 +5341,29 @@ object Ext {
           timestamp_micros(col("ts_us")).as(s"${prefix}_t"),
           col("event_id").as(s"${prefix}_id"))
     def sentinel(prefix: String, user: Long, tsUs: Long): DataFrame =
-      ev.sparkSession.range(1).select(lit(user).as(s"${prefix}_user"),
+      s.range(1).select(lit(user).as(s"${prefix}_user"),
         timestamp_micros(lit(tsUs)).as(s"${prefix}_t"),
         lit(-1L).as(s"${prefix}_id"))
     val lDir = Tmp.jvmScopedDir("stream_ijo_l", dir)
     val rDir = Tmp.jvmScopedDir("stream_ijo_r", dir)
-    val outDir = Tmp.jvmScopedDir("stream_ijo_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_ijo_ck", dir)
-    // staged once per (JVM, sf dir), reused on reruns: the sentinel
-    // mtime ladder stays strictly ascending forever (see the as-of sink)
-    val stagedMarker = new java.io.File(lDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Seq(lDir, rDir).foreach { d =>
-        Tmp.deleteRecursively(d); new java.io.File(d).mkdirs(): Unit
-      }
-      val now = System.currentTimeMillis()
-      stageMtimeFile(side("click", "l"), lDir, "l0.parquet", now - 60000L)
-      stageMtimeFile(sentinel("l", -1L, maxTs + 100L * W), lDir, "l1.parquet", now - 40000L)
-      stageMtimeFile(sentinel("l", -1L, maxTs + 200L * W), lDir, "l2.parquet", now - 20000L)
-      stageMtimeFile(side("error", "r"), rDir, "r0.parquet", now - 60000L)
-      stageMtimeFile(sentinel("r", -2L, maxTs + 100L * W), rDir, "r1.parquet", now - 40000L)
-      stageMtimeFile(sentinel("r", -2L, maxTs + 200L * W), rDir, "r2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged inputs")
-    } else log("reusing staged inputs")
+    stageOnce(log, lDir, rDir) {
+      val top = maxTsUs(ev)
+      stageLadder(lDir, side("click", "l"),
+        sentinel("l", -1L, top + 100L * W), sentinel("l", -1L, top + 200L * W))
+      stageLadder(rDir, side("error", "r"),
+        sentinel("r", -2L, top + 100L * W), sentinel("r", -2L, top + 200L * W))
+    }
     def rd(path: String, prefix: String) = s.readStream
       .schema(s"${prefix}_user BIGINT, ${prefix}_t TIMESTAMP, ${prefix}_id BIGINT")
       .option("maxFilesPerTrigger", "1")
       .parquet(path)
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    runStreamToParquet(s, dir, "stream_ijo", sinkConf(s, dir), log) {
       StreamOps.intervalJoin(rd(lDir, "l"), rd(rDir, "r"),
           "10 minutes", joinType = "leftOuter")
         .select(col("l_id").as("click_id"), col("l_user").as("user_id"),
           col("r_id"),
           (unix_micros(col("r_t")) - unix_micros(col("l_t"))).as("dt"))
     }
-    s.read.parquet(outDir)
       .filter(col("user_id") >= 0) // drop watermark-driver sentinels
       .select(col("click_id"), col("user_id"),
         coalesce(col("r_id"), lit(-1L)).as("err_id"),
@@ -5377,10 +5380,8 @@ object Ext {
     * the batch as-of semantics on a real feed.
     *
     * Watermark choreography: a probe emits only once the watermark
-    * passes its event time, and the watermark of micro-batch N comes
-    * from batch N−1's max event time — so the BUILD side stages the
-    * mtime-ordered sentinel ladder ([[streamTumblingSink]]'s trick;
-    * the watermark is computed over the tagged UNION of both inputs, so
+    * passes its event time, so the BUILD side stages the [[stageLadder]]
+    * (the watermark is computed over the tagged UNION of both inputs, so
     * one side's sentinels advance it for all keys). Batch 0 buffers all
     * real probes+builds and registers per-key event-time timers;
     * sentinel batches 1–2 walk the watermark past every probe, and the
@@ -5399,46 +5400,31 @@ object Ext {
     val pur = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("t"),
         col("ts_us"), col("event_id").as("ref_id"))
+    val wmUs = 600000000L // 10 min watermark delay
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(lit(-1L).as("user_id"),
+        timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
+        lit(-1L).as("ref_id"))
     val pDir = Tmp.jvmScopedDir("stream_asof_p", dir)
     val bDir = Tmp.jvmScopedDir("stream_asof_b", dir)
-    val outDir = Tmp.jvmScopedDir("stream_asof_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_asof_ck", dir)
-    val wmUs = 600000000L // 10 min watermark delay
-    // staged once per (JVM, sf dir), reused on reruns: the sentinel
-    // mtime ladder stays strictly ascending forever (absolute times set
-    // at first staging), which is all the oldest-first file source needs
-    val stagedMarker = new java.io.File(bDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(pDir)
-      Tmp.deleteRecursively(bDir)
-      new java.io.File(bDir).mkdirs()
-      pur.coalesce(1).write.mode("overwrite").parquet(pDir)
-      def sentinel(tsUs: Long): DataFrame =
-        ev.sparkSession.range(1).select(lit(-1L).as("user_id"),
-          timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
-          lit(-1L).as("ref_id"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(sgn, bDir, "b0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * wmUs), bDir, "b1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * wmUs), bDir, "b2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged inputs")
-    } else log("reusing staged inputs")
+    stageOnce(log, pDir, bDir) {
+      val top = maxTsUs(ev)
+      stageLadder(pDir, pur)
+      stageLadder(bDir, sgn,
+        sentinel(top + 100L * wmUs), sentinel(top + 200L * wmUs))
+    }
     def rd(path: String) = s.readStream
       .schema("user_id BIGINT, t TIMESTAMP, ts_us BIGINT, ref_id BIGINT")
       .option("maxFilesPerTrigger", "1")
       .parquet(path)
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    runStreamToParquet(s, dir, "stream_asof", sinkConf(s, dir), log) {
       graft.streaming.StreamOps
         .asofJoinStream(rd(pDir), rd(bDir), "10 minutes")
         .toDF()
         .select(col("probe_id").as("p_event"), col("user_id"),
           col("probe_us").as("p_ts"), col("build_us").as("s_ts"),
           col("build_id").as("s_event"))
-    }
-    s.read.parquet(outDir).orderBy(col("p_event"))
+    }.orderBy(col("p_event"))
   }
 
   /** STREAMING FUNNEL under the driver's DuckDB gate — the ordered
@@ -5447,10 +5433,9 @@ object Ext {
     * the oracle is the BATCH funnel (`events_funnel`'s chained
     * conditional minimums) unpivoted to one row per reached stage —
     * equal hashes prove the incremental machine computes the batch
-    * semantics under micro-batched, watermark-bounded delivery. Harness
-    * contract as [[streamAsofSink]]: one real file + two sentinel files
-    * with ascending mtimes, `maxFilesPerTrigger=1`, so the watermark
-    * provably passes every real event before the query stops. */
+    * semantics under micro-batched, watermark-bounded delivery. Input is
+    * the [[stageLadder]]: one real file + two sentinel files, so the
+    * watermark provably passes every real event before the query stops. */
   def streamFunnelSink(s: SparkSession, dir: String): DataFrame =
     streamFunnelSinkImpl(s, dir, tws = false)
 
@@ -5465,51 +5450,35 @@ object Ext {
 
   private def streamFunnelSinkImpl(
       s: SparkSession, dir: String, tws: Boolean): DataFrame = {
-    import graft.core.Tmp
-    val log = graft.core.PhaseLog.start(
-      if (tws) "stream_funnel_tws" else "stream_funnel")
+    val tag = if (tws) "stream_funnel_tws" else "stream_funnel"
+    val log = graft.core.PhaseLog.start(tag)
     val ev = events(s, dir)
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("user_id"), timestamp_micros(col("ts_us")).as("t"),
         col("ts_us"), col("event_id"),
         when(col("event_type") === "view", 1)
           .when(col("event_type") === "click", 2).otherwise(3).as("kind"))
-    val tag = if (tws) "stream_funnel_tws" else "stream_funnel"
-    val inDir = Tmp.jvmScopedDir("stream_funnel_in", dir) // shared by both APIs
-    val outDir = Tmp.jvmScopedDir(s"${tag}_out", dir)
-    val ckDir = Tmp.jvmScopedDir(s"${tag}_ck", dir)
     val wmUs = 600000000L // 10 min watermark delay
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        s.range(1).select(lit(-1L).as("user_id"),
-          timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
-          lit(-1L).as("event_id"), lit(0).as("kind"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * wmUs), inDir, "f1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * wmUs), inDir, "f2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged inputs")
-    } else log("reusing staged inputs")
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(lit(-1L).as("user_id"),
+        timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
+        lit(-1L).as("event_id"), lit(0).as("kind"))
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_funnel_in", dir) // shared by both APIs
+    stageOnce(log, inDir) {
+      val top = maxTsUs(ev)
+      stageLadder(inDir, ev,
+        sentinel(top + 100L * wmUs), sentinel(top + 200L * wmUs))
+    }
     import s.implicits._
     val in = s.readStream
       .schema("user_id BIGINT, t TIMESTAMP, ts_us BIGINT, event_id BIGINT, kind INT")
       .option("maxFilesPerTrigger", "1")
       .parquet(inDir)
       .as[graft.streaming.StreamOps.FunnelEvent]
-    val confs = Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)) ++
-      (if (tws) Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Map.empty)
-    runStreamToParquet(s, outDir, ckDir, confs, log) {
+    runStreamToParquet(s, dir, tag, sinkConf(s, dir, tws = tws), log) {
       if (tws) graft.streaming.StreamOps.funnelStreamTws(in, "10 minutes").toDF()
       else graft.streaming.StreamOps.funnelStream(in, "10 minutes").toDF()
     }
-    s.read.parquet(outDir)
       .filter(col("user_id") >= 0)
       .orderBy(col("user_id"), col("stage"))
   }
@@ -5523,30 +5492,21 @@ object Ext {
     * harness. The dim here is a per-user rollup of the same feed, so
     * the oracle is a plain SQL join+group. */
   def streamEnrichSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_en")
     val ev = events(s, dir)
       .select(col("user_id"), col("ts_us"), col("event_id"))
     val dim = ev.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_user_events"), min(col("ts_us")).as("first_ts"))
-    val inDir = Tmp.jvmScopedDir("stream_en_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_en_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_en_ck", dir)
-    // staged once per (JVM, sf dir), reused on reruns (see interval join)
-    if (!new java.io.File(inDir, "_SUCCESS").exists()) {
-      ev.coalesce(1).write.mode("overwrite").parquet(inDir)
-      log("staged input")
-    } else log("reusing staged input")
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_en_in", dir)
+    stageOnce(log, inDir)(stageLadder(inDir, ev))
+    runStreamToParquet(s, dir, "stream_en", sinkConf(s, dir), log) {
       val stream = s.readStream
         .schema("user_id BIGINT, ts_us BIGINT, event_id BIGINT")
         .parquet(inDir)
       graft.streaming.StreamOps.enrichStream(stream, dim, Seq("user_id"))
         .select(col("event_id"), col("user_id"),
           col("n_user_events"), col("first_ts"))
-    }
-    s.read.parquet(outDir).orderBy(col("event_id"))
+    }.orderBy(col("event_id"))
   }
 
   /** STREAMING MODEL SCORING under the driver's DuckDB gate — the
@@ -5560,18 +5520,11 @@ object Ext {
     * SAME DuckDB oracle as `text_quality_model`: the stream lifecycle
     * must reproduce the batch scores byte-for-byte. */
   def streamQualityModelSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_qm")
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-    val inDir = Tmp.jvmScopedDir("stream_qm_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_qm_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_qm_ck", dir)
-    if (!new java.io.File(inDir, "_SUCCESS").exists()) {
-      docs.coalesce(1).write.mode("overwrite").parquet(inDir)
-      log("staged input")
-    } else log("reusing staged input")
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir, "documents")), log) {
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_qm_in", dir)
+    stageOnce(log, inDir)(stageLadder(inDir, docs))
+    runStreamToParquet(s, dir, "stream_qm", sinkConf(s, dir, "documents"), log) {
       s.readStream
         .schema("doc_id BIGINT, text STRING")
         .parquet(inDir)
@@ -5581,8 +5534,7 @@ object Ext {
           qualityModelScore(col("toks")).as("score"))
         .withColumn("model_keep",
           col("score") > graft.ext.QualityModel.Threshold)
-    }
-    s.read.parquet(outDir).orderBy(col("doc_id"))
+    }.orderBy(col("doc_id"))
   }
 
   /** STREAMING MULTIMODAL DECODE under the driver's DuckDB gate — the
@@ -5598,18 +5550,11 @@ object Ext {
     * decoded dimension and lossless pixel checksum byte-for-byte
     * (jpg pix_sum canonicalized to −1 in both engines, as in batch). */
   def streamDecodeSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_mm")
-    val inDir = Tmp.jvmScopedDir("stream_mm_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_mm_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_mm_ck", dir)
-    if (!new java.io.File(inDir, "_SUCCESS").exists()) {
-      Multimodal.synthImages(docsSpread(s, dir))
-        .coalesce(1).write.mode("overwrite").parquet(inDir)
-      log("staged payloads")
-    } else log("reusing staged input")
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir, "documents")), log) {
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_mm_in", dir)
+    stageOnce(log, inDir)(
+      stageLadder(inDir, Multimodal.synthImages(docsSpread(s, dir))))
+    runStreamToParquet(s, dir, "stream_mm", sinkConf(s, dir, "documents"), log) {
       Multimodal.decodeImages(
         s.readStream
           .schema("doc_id BIGINT, payload BINARY")
@@ -5617,8 +5562,7 @@ object Ext {
         .toDF()
         .withColumn("pix_sum",
           when(col("fmt") === "jpg", lit(-1L)).otherwise(col("pix_sum")))
-    }
-    s.read.parquet(outDir).orderBy(col("doc_id"))
+    }.orderBy(col("doc_id"))
   }
 
   /** STREAMING EXACT DEDUP under the driver's DuckDB gate: the events
@@ -5631,20 +5575,13 @@ object Ext {
     * same shape as the interval join. Oracle: the distinct rows of the
     * original feed. */
   def streamDedupSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_dd")
     val ev = events(s, dir)
       .select(col("user_id"), col("ts_us"), col("event_id"))
-    val inDir = Tmp.jvmScopedDir("stream_dd_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_dd_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_dd_ck", dir)
     // every row twice in one staged file: the dedup must collapse the
-    // re-sends and nothing else (event_id is unique in the feed).
-    // Staged once per (JVM, sf dir), reused on reruns (see interval join)
-    if (!new java.io.File(inDir, "_SUCCESS").exists()) {
-      ev.unionByName(ev).coalesce(1).write.mode("overwrite").parquet(inDir)
-      log("staged doubled input")
-    } else log("reusing staged input")
+    // re-sends and nothing else (event_id is unique in the feed)
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_dd_in", dir)
+    stageOnce(log, inDir)(stageLadder(inDir, ev.unionByName(ev)))
     // r13 probe (verdict Next #4): warm breakdown is addBatch ~630 ms of
     // an ~870 ms trigger (the honest 200 k-row stateful pass through one
     // state partition; commit+WAL ~75 ms, planning ~110 ms). The RocksDB
@@ -5652,70 +5589,43 @@ object Ext {
     // (~2.5x) - JNI + memtable overhead dwarfs the in-heap map at this
     // key volume. The driver's 8.6 s pass-1 was input staging (one-time
     // 4.7 s doubled-feed parquet write) + cold planning, not the operator.
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir),
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"), log) {
+    runStreamToParquet(s, dir, "stream_dd", sinkConf(s, dir), log) {
       val stream = s.readStream
         .schema("user_id BIGINT, ts_us BIGINT, event_id BIGINT")
         .parquet(inDir)
         .withColumn("t", timestamp_micros(col("ts_us")))
       graft.streaming.StreamOps.dedupStream(stream, Seq("event_id"))
         .select(col("user_id"), col("ts_us"), col("event_id"))
-    }
-    s.read.parquet(outDir).orderBy(col("event_id"))
+    }.orderBy(col("event_id"))
   }
 
   /** Third Structured Streaming job under the driver's DuckDB gate: a
     * watermarked TUMBLING-WINDOW aggregation (per-user hourly counts/sums
     * — the most common streaming op of all) through the stage→run→
-    * read-back harness.
-    *
-    * Unlike the inner interval join, an Append-mode window aggregate
-    * emits a window only when the event-time watermark passes its END —
-    * and the watermark used by micro-batch N is computed from batch
-    * N−1's max event time. So the harness stages THREE files with
-    * strictly increasing modification times under
-    * `maxFilesPerTrigger=1` (the file source processes oldest-first by
-    * default): the real events, then two far-future watermark-driver
-    * sentinels. Batch 1 (sentinel A) runs under the watermark derived
-    * from the real data; batch 2 (sentinel B) runs under sentinel A's
-    * watermark, which is past every real window's end — so every real
-    * window has emitted by stream end with no reliance on a post-input
-    * no-data micro-batch (not guaranteed under AvailableNow). Sentinel
-    * rows carry `user_id = -1` and are dropped on read-back; their own
-    * windows never close. The mtime choreography is test-harness
-    * scaffolding, labeled as such — a production stream has real arrival
-    * order and a live watermark. */
+    * read-back harness. Unlike the inner interval join, an Append-mode
+    * window aggregate emits a window only when the event-time watermark
+    * passes its END, so the input is the [[stageLadder]]: the real
+    * events, then two far-future sentinels 100 and 200 windows past the
+    * last event, which close every real window by stream end. Sentinel
+    * rows carry
+    * `user_id = -1` and are dropped on read-back; their own windows never
+    * close. */
   def streamTumblingSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_tw")
     val winUs = 3600000000L // 1 hour tumble
     val ev = events(s, dir)
       .select(col("user_id"), col("ts_us"),
         col("event_id").cast("double").as("value"))
-    val inDir = Tmp.jvmScopedDir("stream_tw_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_tw_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_tw_ck", dir)
-    // staged once per (JVM, sf dir), reused on reruns: the sentinel
-    // mtime ladder stays strictly ascending forever (see the as-of sink)
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        ev.sparkSession.range(1).select(lit(-1L).as("user_id"),
-          lit(tsUs).as("ts_us"), lit(0.0).as("value"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * winUs), inDir, "f1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * winUs), inDir, "f2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged input")
-    } else log("reusing staged input")
-
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(lit(-1L).as("user_id"),
+        lit(tsUs).as("ts_us"), lit(0.0).as("value"))
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_tw_in", dir)
+    stageOnce(log, inDir) {
+      val top = maxTsUs(ev)
+      stageLadder(inDir, ev,
+        sentinel(top + 100L * winUs), sentinel(top + 200L * winUs))
+    }
+    runStreamToParquet(s, dir, "stream_tw", sinkConf(s, dir), log) {
       val stream = s.readStream
         .schema("user_id BIGINT, ts_us BIGINT, value DOUBLE")
         .option("maxFilesPerTrigger", "1")
@@ -5723,7 +5633,6 @@ object Ext {
         .withColumn("t", timestamp_micros(col("ts_us")))
       graft.streaming.StreamOps.tumblingCounts(stream, "1 hour")
     }
-    s.read.parquet(outDir)
       .filter(col("user_id") >= 0) // drop watermark-driver sentinels
       .select(col("user_id"), col("window_start_us"), col("n_events"),
         round(col("value_sum"), 2).as("value_sum"))
@@ -5743,33 +5652,21 @@ object Ext {
     * (sentinel rows carry event_type '_sentinel', dropped on
     * read-back; their own windows never close). */
   def streamOhlcSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_ohlc")
     val winUs = 3600000000L // 1 hour tumble
     val ev = events(s, dir)
       .select(col("event_type"), col("ts_us"), col("event_id"), col("value"))
-    val inDir = Tmp.jvmScopedDir("stream_ohlc_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_ohlc_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_ohlc_ck", dir)
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        ev.sparkSession.range(1).select(
-          lit("_sentinel").as("event_type"), lit(tsUs).as("ts_us"),
-          lit(0L).as("event_id"), lit(0.0).as("value"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * winUs), inDir, "f1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * winUs), inDir, "f2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged input")
-    } else log("reusing staged input")
-
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(
+        lit("_sentinel").as("event_type"), lit(tsUs).as("ts_us"),
+        lit(0L).as("event_id"), lit(0.0).as("value"))
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_ohlc_in", dir)
+    stageOnce(log, inDir) {
+      val top = maxTsUs(ev)
+      stageLadder(inDir, ev,
+        sentinel(top + 100L * winUs), sentinel(top + 200L * winUs))
+    }
+    runStreamToParquet(s, dir, "stream_ohlc", sinkConf(s, dir), log) {
       val stream = s.readStream
         .schema("event_type STRING, ts_us BIGINT, event_id BIGINT, value DOUBLE")
         .option("maxFilesPerTrigger", "1")
@@ -5777,7 +5674,6 @@ object Ext {
         .withColumn("t", timestamp_micros(col("ts_us")))
       graft.streaming.StreamOps.tumblingOhlc(stream, "1 hour")
     }
-    s.read.parquet(outDir)
       .filter(col("event_type") =!= "_sentinel")
       .select(col("event_type"), col("window_start_us"), col("open"),
         col("high"), col("low"), col("close"), col("n"), col("volume_cents"))
@@ -5799,33 +5695,21 @@ object Ext {
     * partitions by window start (bounded groups — |types| rows each),
     * never a global sort. */
   def streamTopkSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     val log = graft.core.PhaseLog.start("stream_topk")
     val winUs = 3600000000L // 1 hour tumble
     val ev = events(s, dir).select(col("event_type"), col("ts_us"))
-    val inDir = Tmp.jvmScopedDir("stream_topk_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_topk_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_topk_ck", dir)
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        ev.sparkSession.range(1).select(
-          lit("_sentinel").as("event_type"), lit(tsUs).as("ts_us"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * winUs), inDir, "f1.parquet",
-        now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * winUs), inDir, "f2.parquet",
-        now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged input")
-    } else log("reusing staged input")
-
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(
+        lit("_sentinel").as("event_type"), lit(tsUs).as("ts_us"))
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_topk_in", dir)
+    stageOnce(log, inDir) {
+      val top = maxTsUs(ev)
+      stageLadder(inDir, ev,
+        sentinel(top + 100L * winUs), sentinel(top + 200L * winUs))
+    }
+    val w = Window.partitionBy(col("window_start_us"))
+      .orderBy(col("n_events").desc, col("event_type"))
+    runStreamToParquet(s, dir, "stream_topk", sinkConf(s, dir), log) {
       val stream = s.readStream
         .schema("event_type STRING, ts_us BIGINT")
         .option("maxFilesPerTrigger", "1")
@@ -5833,9 +5717,6 @@ object Ext {
         .withColumn("t", timestamp_micros(col("ts_us")))
       graft.streaming.StreamOps.tumblingTypeCounts(stream, "1 hour")
     }
-    val w = Window.partitionBy(col("window_start_us"))
-      .orderBy(col("n_events").desc, col("event_type"))
-    s.read.parquet(outDir)
       .filter(col("event_type") =!= "_sentinel")
       .withColumn("rank", row_number().over(w).cast("long"))
       .filter(col("rank") <= 3)
@@ -5857,39 +5738,25 @@ object Ext {
     * converge to the same table — hash-equal to DuckDB's batch
     * last-row-per-key recompute. Deleted keys emit nothing. */
   def streamCdcSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     import graft.streaming.StreamOps
     import s.implicits._
     val log = graft.core.PhaseLog.start("stream_cdc")
     val ev = events(s, dir).select(col("user_id"), col("ts_us"),
       col("event_id"), col("value"),
       when(col("event_type") === "purchase", "d").otherwise("u").as("op"))
-    val inDir = Tmp.jvmScopedDir("stream_cdc_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_cdc_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_cdc_ck", dir)
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      val sentinels = ev.groupBy(col("user_id")).agg(
-        lit(maxTs + 3600000000L * 100).as("ts_us"),
-        lit(0L).as("event_id"), lit(0.0).as("value"), lit("x").as("op"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinels, inDir, "f1.parquet", now - 30000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged input")
-    } else log("reusing staged input")
-
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_cdc_in", dir)
+    stageOnce(log, inDir) {
+      stageLadder(inDir, ev, ev.groupBy(col("user_id")).agg(
+        lit(maxTsUs(ev) + 3600000000L * 100).as("ts_us"),
+        lit(0L).as("event_id"), lit(0.0).as("value"), lit("x").as("op")))
+    }
     // this harness's ladder is TWO rungs (data, per-key sentinels): the
     // close timers ARM on the sentinel batch and fire only on the next
     // one — which is the post-input no-data batch, so it stays ENABLED
     // here (the sole sink that needs it; measured: with it off the sink
     // emits nothing)
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir),
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true"), log) {
+    runStreamToParquet(s, dir, "stream_cdc", sinkConf(s, dir) +
+        ("spark.sql.streaming.noDataMicroBatches.enabled" -> "true"), log) {
       val stream = s.readStream
         .schema("user_id BIGINT, ts_us BIGINT, event_id BIGINT, " +
           "value DOUBLE, op STRING")
@@ -5901,7 +5768,6 @@ object Ext {
         .as[StreamOps.CdcOp]
       StreamOps.cdcStream(stream).toDF()
     }
-    s.read.parquet(outDir)
       .select(col("user_id"), col("last_ts_us"), col("last_event_id"),
         col("last_value"), col("n_ops"))
       .orderBy(col("user_id"))
@@ -5933,38 +5799,24 @@ object Ext {
 
   private def streamGeofenceSinkImpl(
       s: SparkSession, dir: String, tws: Boolean): DataFrame = {
-    import graft.core.Tmp
     import graft.streaming.StreamOps
     import s.implicits._
     val tag = if (tws) "stream_geofence_tws" else "stream_geofence"
     val log = graft.core.PhaseLog.start(tag)
     val ev = events(s, dir).select(col("user_id"),
       timestamp_micros(col("ts_us")).as("t"), col("ts_us"), col("event_id"))
-    val inDir = Tmp.jvmScopedDir("stream_geofence_in", dir) // shared by both APIs
-    val outDir = Tmp.jvmScopedDir(s"${tag}_out", dir)
-    val ckDir = Tmp.jvmScopedDir(s"${tag}_ck", dir)
     val wmUs = 600000000L // 10 min watermark delay
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        s.range(1).select(lit(-1L).as("user_id"),
-          timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
-          lit(-1L).as("event_id"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * wmUs), inDir, "f1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * wmUs), inDir, "f2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged inputs")
-    } else log("reusing staged inputs")
-    val confs = Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)) ++
-      (if (tws) Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      else Map.empty)
-    runStreamToParquet(s, outDir, ckDir, confs, log) {
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(lit(-1L).as("user_id"),
+        timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
+        lit(-1L).as("event_id"))
+    val inDir = graft.core.Tmp.jvmScopedDir("stream_geofence_in", dir) // shared by both APIs
+    stageOnce(log, inDir) {
+      val top = maxTsUs(ev)
+      stageLadder(inDir, ev,
+        sentinel(top + 100L * wmUs), sentinel(top + 200L * wmUs))
+    }
+    runStreamToParquet(s, dir, tag, sinkConf(s, dir, tws = tws), log) {
       val pings = s.readStream
         .schema("user_id BIGINT, t TIMESTAMP, ts_us BIGINT, event_id BIGINT")
         .option("maxFilesPerTrigger", "1")
@@ -5979,11 +5831,31 @@ object Ext {
       if (tws) StreamOps.geofenceStreamTws(pings, "10 minutes").toDF()
       else StreamOps.geofenceStream(pings, "10 minutes").toDF()
     }
-    s.read.parquet(outDir)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("ts_us"), col("event_id"), col("f"),
         col("direction"))
       .orderBy(col("user_id"), col("ts_us"), col("event_id"), col("f"))
+  }
+
+  /** Input of the EWMA and CUSUM sinks: the events feed as integer-cent
+    * pings on the [[stageLadder]], sentinel pings on user −1. */
+  private def stageCentPings(s: SparkSession, dir: String, tag: String,
+      log: String => Unit): String = {
+    val ev = events(s, dir).select(col("user_id"),
+      timestamp_micros(col("ts_us")).as("t"), col("ts_us"), col("event_id"),
+      floor(col("value") * 100).cast("long").as("cents"))
+    val wmUs = 600000000L
+    def sentinel(tsUs: Long): DataFrame =
+      s.range(1).select(lit(-1L).as("user_id"),
+        timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
+        lit(-1L).as("event_id"), lit(0L).as("cents"))
+    val inDir = graft.core.Tmp.jvmScopedDir(s"${tag}_in", dir)
+    stageOnce(log, inDir) {
+      val top = maxTsUs(ev)
+      stageLadder(inDir, ev,
+        sentinel(top + 100L * wmUs), sentinel(top + 200L * wmUs))
+    }
+    inDir
   }
 
   /** STREAMING EWMA SINK — the FIFTEENTH Structured Streaming job
@@ -5996,35 +5868,11 @@ object Ext {
     * frame tail; ordering under scrambled delivery follows the
     * watermark-gating argument shared by all the sinks here. */
   def streamEwmaSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     import graft.streaming.StreamOps
     import s.implicits._
     val log = graft.core.PhaseLog.start("stream_ewma")
-    val ev = events(s, dir).select(col("user_id"),
-      timestamp_micros(col("ts_us")).as("t"), col("ts_us"), col("event_id"),
-      floor(col("value") * 100).cast("long").as("cents"))
-    val inDir = Tmp.jvmScopedDir("stream_ewma_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_ewma_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_ewma_ck", dir)
-    val wmUs = 600000000L
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        s.range(1).select(lit(-1L).as("user_id"),
-          timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
-          lit(-1L).as("event_id"), lit(0L).as("cents"))
-      val now = System.currentTimeMillis()
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * wmUs), inDir, "f1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * wmUs), inDir, "f2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged inputs")
-    } else log("reusing staged inputs")
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    val inDir = stageCentPings(s, dir, "stream_ewma", log)
+    runStreamToParquet(s, dir, "stream_ewma", sinkConf(s, dir), log) {
       val pings = s.readStream
         .schema("user_id BIGINT, t TIMESTAMP, ts_us BIGINT, " +
           "event_id BIGINT, cents BIGINT")
@@ -6033,7 +5881,6 @@ object Ext {
         .as[StreamOps.EwmaPing]
       StreamOps.ewmaStream(pings, "10 minutes").toDF()
     }
-    s.read.parquet(outDir)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("ts_us"), col("event_id"), col("cents"),
         col("num"), col("den"), col("ewma"))
@@ -6049,45 +5896,22 @@ object Ext {
     * median). Every ping emits its running S = max(0, S + (cents − k))
     * and the S > h alarm; state per user is O(1) past the funnel-style
     * watermark buffer, ordering under scrambled delivery follows the
-    * shared watermark-gating argument. */
+    * shared watermark-gating argument.
+    *
+    * STAGING INVARIANT (ADVICE r11): every real event rides in the
+    * SINGLE first file — `cusumStep` drops arrivals below the current
+    * watermark (exactly-once semantics for honest late data) while the
+    * batch oracle replays every event, so the two agree only because all
+    * real rows land in one micro-batch BEFORE the sentinel files advance
+    * the watermark. Splitting the real input across files would make
+    * post-watermark drops diverge from the oracle; keep f0 as the one
+    * real-event file. */
   def streamCusumSink(s: SparkSession, dir: String): DataFrame = {
-    import graft.core.Tmp
     import graft.streaming.StreamOps
     import s.implicits._
     val log = graft.core.PhaseLog.start("stream_cusum")
-    val ev = events(s, dir).select(col("user_id"),
-      timestamp_micros(col("ts_us")).as("t"), col("ts_us"), col("event_id"),
-      floor(col("value") * 100).cast("long").as("cents"))
-    val inDir = Tmp.jvmScopedDir("stream_cusum_in", dir)
-    val outDir = Tmp.jvmScopedDir("stream_cusum_out", dir)
-    val ckDir = Tmp.jvmScopedDir("stream_cusum_ck", dir)
-    val wmUs = 600000000L
-    val stagedMarker = new java.io.File(inDir, "_graft_staged")
-    if (!stagedMarker.exists()) {
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Tmp.deleteRecursively(inDir)
-      new java.io.File(inDir).mkdirs()
-      def sentinel(tsUs: Long): DataFrame =
-        s.range(1).select(lit(-1L).as("user_id"),
-          timestamp_micros(lit(tsUs)).as("t"), lit(tsUs).as("ts_us"),
-          lit(-1L).as("event_id"), lit(0L).as("cents"))
-      val now = System.currentTimeMillis()
-      // STAGING INVARIANT (ADVICE r11): every real event rides in the
-      // SINGLE first file — `cusumStep` drops arrivals below the
-      // current watermark (exactly-once semantics for honest late data)
-      // while the batch oracle replays every event, so the two agree
-      // only because all real rows land in one micro-batch BEFORE the
-      // sentinel files advance the watermark. Splitting the real input
-      // across files would make post-watermark drops diverge from the
-      // oracle; keep f0 as the one real-event file.
-      stageMtimeFile(ev, inDir, "f0.parquet", now - 60000L)
-      stageMtimeFile(sentinel(maxTs + 100L * wmUs), inDir, "f1.parquet", now - 40000L)
-      stageMtimeFile(sentinel(maxTs + 200L * wmUs), inDir, "f2.parquet", now - 20000L)
-      java.nio.file.Files.createFile(stagedMarker.toPath): Unit
-      log("staged inputs")
-    } else log("reusing staged inputs")
-    runStreamToParquet(s, outDir, ckDir,
-      Map("spark.sql.shuffle.partitions" -> sinkPartitions(s, dir)), log) {
+    val inDir = stageCentPings(s, dir, "stream_cusum", log)
+    runStreamToParquet(s, dir, "stream_cusum", sinkConf(s, dir), log) {
       val pings = s.readStream
         .schema("user_id BIGINT, t TIMESTAMP, ts_us BIGINT, " +
           "event_id BIGINT, cents BIGINT")
@@ -6096,7 +5920,6 @@ object Ext {
         .as[StreamOps.EwmaPing]
       StreamOps.cusumStream(pings, CusumK, CusumH, "10 minutes").toDF()
     }
-    s.read.parquet(outDir)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("ts_us"), col("event_id"), col("cents"),
         col("cusum"), col("alarm"))

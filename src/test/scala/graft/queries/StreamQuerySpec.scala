@@ -44,6 +44,84 @@ class StreamQuerySpec extends SparkSpec {
     q.awaitTermination()
   }
 
+  /** Name → mtime of every file in a sink's staged input dir (marker
+    * included), failing if the dir is empty or absent. */
+  private def stagedFiles(tag: String): Map[String, Long] = {
+    val dir = new java.io.File(graft.core.Tmp.jvmScopedDir(tag, sf0001))
+    val files = Option(dir.listFiles()).toSeq.flatten
+    assert(files.nonEmpty, s"no staged input at $dir")
+    files.map(f => f.getName -> f.lastModified).toMap
+  }
+
+  private def rows(name: String): Seq[String] =
+    Ext.all(name)(spark, sf0001).collect().map(_.toString).toSeq
+
+  test("a ladder sink and a plain sink rerun in one JVM: same rows, staged files untouched") {
+    for ((name, inTag, rungs) <- Seq(
+        ("stream_tumbling_sink", "stream_tw_in", 3),
+        ("stream_enrich_sink", "stream_en_in", 1))) {
+      val first = rows(name)
+      val staged = stagedFiles(inTag)
+      val ladder = (0 until rungs).map(i => staged(s"f$i.parquet"))
+      assert(ladder.zip(ladder.tail).forall { case (a, b) => a < b },
+        s"$name: rung mtimes not strictly ascending: $ladder")
+      assert(staged.keySet.filterNot(_.startsWith("_")) ==
+        (0 until rungs).map(i => s"f$i.parquet").toSet, s"$name: $staged")
+      val second = rows(name)
+      assert(first.nonEmpty && first == second,
+        s"$name: rerun gave ${second.size} rows, first run ${first.size}")
+      assert(stagedFiles(inTag) == staged, s"$name: rerun re-staged its input")
+    }
+  }
+
+  test("the _tws twin reuses its sibling's staged input without touching it") {
+    val fmgws = rows("stream_geofence_sink")
+    val staged = stagedFiles("stream_geofence_in")
+    val tws = rows("stream_geofence_tws_sink")
+    assert(stagedFiles("stream_geofence_in") == staged)
+    assert(fmgws.nonEmpty && tws == fmgws)
+  }
+
+  test("stageOnce clears a torn dir, stages once, then reuses") {
+    import graft.core.Tmp
+    val dirs = Seq("a", "b").map(k => Tmp.jvmScopedDir("spec_stage_once", k))
+    dirs.foreach(Tmp.deleteRecursively)
+    new java.io.File(dirs(1)).mkdirs()
+    val stray = new java.io.File(dirs(1), "stray.parquet")
+    java.nio.file.Files.createFile(stray.toPath)
+    val logged = scala.collection.mutable.Buffer.empty[String]
+    var runs = 0
+    def stage(): Unit = Ext.stageOnce(logged += _, dirs: _*) {
+      runs += 1
+      dirs.foreach(d => assert(Option(new java.io.File(d).list()).exists(_.isEmpty)))
+      java.nio.file.Files.createFile(new java.io.File(dirs(1), "f0.parquet").toPath)
+    }
+    stage()
+    stage()
+    assert(runs == 1 && !stray.exists())
+    assert(new java.io.File(dirs(1), "f0.parquet").exists())
+    assert(logged == Seq("staged input", "reusing staged input"))
+    dirs.foreach(Tmp.deleteRecursively)
+  }
+
+  test("stream writes and mtime staging live only in the sink harness") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val defDecl = """(?m)^\s*(?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+    val sources = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).map(Files.readString).toSeq
+    def enclosingDefs(word: String): Set[String] = sources.flatMap { src =>
+      word.r.findAllMatchIn(src).map { m =>
+        defDecl.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("<top level>")
+      }
+    }.toSet
+    assert(enclosingDefs("writeStream") == Set("runStreamToParquet"))
+    assert(enclosingDefs("setLastModified") == Set("stageMtimeFile"))
+    assert(sources.map("_graft_staged".r.findAllMatchIn(_).size).sum == 1)
+    assert(sources.forall(!_.contains("_SUCCESS")))
+  }
+
   test("stream_interval_join_sink reproduces the batch interval join") {
     val got = Ext.all("stream_interval_join_sink")(spark, sf0001)
       .collect().map(_.toString).toSeq
