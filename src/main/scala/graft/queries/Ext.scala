@@ -5181,11 +5181,12 @@ object Ext {
     streamSessionizeSinkImpl(s, dir, tws = false)
 
   /** [[streamSessionizeSink]] on the `transformWithState` API
-    * (`StreamOps.sessionizeTws` — explicit ValueState + event-time
-    * timers in the RocksDB state store, the provider that API requires;
-    * the conf is scoped to this query by the harness). Same staged
-    * input, same sentinel close, same DuckDB oracle — the gate proves
-    * BOTH stateful-processing APIs compute the batch gaps-and-islands
+    * ([[graft.streaming.StreamOps.sessionizeTws]] — the same
+    * `sessionStep` over explicit ValueState + event-time timers in the
+    * RocksDB state store, the provider that API requires; the conf is
+    * scoped to this query by the harness). Same staged input, same
+    * sentinel close, same DuckDB oracle — the gate proves BOTH
+    * stateful-processing APIs compute the batch gaps-and-islands
     * semantics, not just the flatMapGroupsWithState form. */
   def streamSessionizeTwsSink(s: SparkSession, dir: String): DataFrame =
     streamSessionizeSinkImpl(s, dir, tws = true)
@@ -5440,7 +5441,7 @@ object Ext {
     streamFunnelSinkImpl(s, dir, tws = false)
 
   /** [[streamFunnelSink]] on the `transformWithState` API
-    * ([[graft.streaming.StreamOps.FunnelProcessor]]) — the dual-API
+    * ([[graft.streaming.StreamOps.funnelStreamTws]]) — the dual-API
     * proof the sessionize pair established, now for the funnel: both
     * APIs route through the ONE pure `funnelStep`, and both sinks hash
     * against the SAME batch oracle. Input staging is shared with the
@@ -5790,7 +5791,7 @@ object Ext {
     streamGeofenceSinkImpl(s, dir, tws = false)
 
   /** [[streamGeofenceSink]] on the `transformWithState` API
-    * ([[graft.streaming.StreamOps.GeofenceProcessor]]) — the THIRD
+    * ([[graft.streaming.StreamOps.geofenceStreamTws]]) — the THIRD
     * dual-API pair (after sessionize and funnel): both APIs route
     * through the ONE pure `geoStep`, both sinks hash against the SAME
     * batch oracle, and the staged input is shared. */

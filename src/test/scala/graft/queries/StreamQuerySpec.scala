@@ -120,6 +120,11 @@ class StreamQuerySpec extends SparkSpec {
     assert(enclosingDefs("setLastModified") == Set("stageMtimeFile"))
     assert(sources.map("_graft_staged".r.findAllMatchIn(_).size).sum == 1)
     assert(sources.forall(!_.contains("_SUCCESS")))
+    // keyed state machines run only through StreamOps' two drivers
+    def count(pattern: String) = sources.map(pattern.r.findAllMatchIn(_).size).sum
+    assert(count("""\.flatMapGroupsWithState\b""") == 1)
+    assert(count("""\.transformWithState\b""") == 1)
+    assert(count("""extends\s+StatefulProcessor\b""") == 1)
   }
 
   test("stream_interval_join_sink reproduces the batch interval join") {

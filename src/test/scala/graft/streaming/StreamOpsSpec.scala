@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -43,6 +44,26 @@ class StreamOpsSpec extends SparkSpec {
 
   // gap = 10 min; watermark 1 min
   private val gapUs = 10L * 60L * 1000000L
+
+  /** Runs `body` on an operator's flatMapGroupsWithState form, then on its
+    * transformWithState twin under the RocksDB state store provider that
+    * API requires (restoring the session's provider after). */
+  private def onBothApis[F](viaGroupState: F, viaProcessor: F)(body: F => Unit): Unit = {
+    body(viaGroupState)
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try withClue("[transformWithState] ")(body(viaProcessor))
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private val sessionizeApis =
+    onBothApis[(Dataset[KeyedEvent], Long, String) => Dataset[Session]](
+      StreamOps.sessionize, StreamOps.sessionizeTws) _
 
   test("streaming sessionize matches batch sessionize on closed sessions") {
     val batch1 = Seq(ev(1, 0, 1.0), ev(1, 5, 2.0), ev(2, 0, 5.0))
@@ -284,39 +305,43 @@ class StreamOpsSpec extends SparkSpec {
     // session [30,35] open; a late-but-in-watermark event at minute 0 is
     // gap-disjoint (10 min gap) from its start — absorbing it would
     // corrupt the session span; it must emit as an out-of-band island
-    val rows = runBatches(
-      Seq(
-        Seq(ev(1, 30, 1.0), ev(1, 35, 2.0)),
-        Seq(ev(1, 0, 9.0)), // late island, 30 min before the session start
-        Seq(ev(1, 120, 4.0))), // flushes everything
-      ds => StreamOps.sessionize(ds, gapUs, "40 minutes").toDF())
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(5)))
-      .toSet
-    // island: id 0, single event at minute 0; main session intact [30,35]
-    val base = BaseUs
-    assert(rows.contains((0L, 1L, base, 9.0)), s"island missing in $rows")
-    assert(rows.exists { case (id, n, start, sum) =>
-      id >= 1L && n == 2L && start == base + 30L * 60L * 1000000L && sum == 3.0
-    }, s"main session corrupted: $rows")
+    sessionizeApis { sessionize =>
+      val rows = runBatches(
+        Seq(
+          Seq(ev(1, 30, 1.0), ev(1, 35, 2.0)),
+          Seq(ev(1, 0, 9.0)), // late island, 30 min before the session start
+          Seq(ev(1, 120, 4.0))), // flushes everything
+        ds => sessionize(ds, gapUs, "40 minutes").toDF())
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(5)))
+        .toSet
+      // island: id 0, single event at minute 0; main session intact [30,35]
+      val base = BaseUs
+      assert(rows.contains((0L, 1L, base, 9.0)), s"island missing in $rows")
+      assert(rows.exists { case (id, n, start, sum) =>
+        id >= 1L && n == 2L && start == base + 30L * 60L * 1000000L && sum == 3.0
+      }, s"main session corrupted: $rows")
+    }
   }
 
   test("late events that transitively bridge into the session extend it, not island") {
     // session opens [30,35]; lates at minutes 14 and 22 arrive together:
     // 22 is within gap of 30, 14 within gap of 22 — the descending walk
     // must chain BOTH in (a naive ascending check would island 14)
-    val rows = runBatches(
-      Seq(
-        Seq(ev(1, 30, 1.0), ev(1, 35, 2.0)),
-        Seq(ev(1, 14, 4.0), ev(1, 22, 8.0)),
-        Seq(ev(1, 120, 0.5))), // flush
-      ds => StreamOps.sessionize(ds, gapUs, "40 minutes").toDF())
-      .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(5)))
-      .toSet
-    val base14 = BaseUs + 14L * 60L * 1000000L
-    assert(rows.exists { case (id, n, start, sum) =>
-      id >= 1L && n == 4L && start == base14 && sum == 15.0
-    }, s"bridged session wrong: $rows")
-    assert(!rows.exists(_._1 == 0L), s"spurious island: $rows")
+    sessionizeApis { sessionize =>
+      val rows = runBatches(
+        Seq(
+          Seq(ev(1, 30, 1.0), ev(1, 35, 2.0)),
+          Seq(ev(1, 14, 4.0), ev(1, 22, 8.0)),
+          Seq(ev(1, 120, 0.5))), // flush
+        ds => sessionize(ds, gapUs, "40 minutes").toDF())
+        .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(5)))
+        .toSet
+      val base14 = BaseUs + 14L * 60L * 1000000L
+      assert(rows.exists { case (id, n, start, sum) =>
+        id >= 1L && n == 4L && start == base14 && sum == 15.0
+      }, s"bridged session wrong: $rows")
+      assert(!rows.exists(_._1 == 0L), s"spurious island: $rows")
+    }
   }
 
   test("late in-watermark event extending an elapsed-gap session does not kill the query") {
@@ -324,15 +349,17 @@ class StreamOpsSpec extends SparkSpec {
     // watermark after a late event extends it; the timeout must clamp to
     // watermark+1 instead of throwing (gap < watermark delay)
     val shortGapUs = 60L * 1000000L // 1 min gap, 10 min watermark delay
-    val rows = runBatches(
-      Seq(
-        Seq(ev(1, 0, 1.0), ev(1, 30, 2.0)), // watermark → minute 20
-        Seq(ev(1, 21, 9.0)), // late but in-watermark; gap already elapsed
-        Seq(ev(1, 60, 4.0))), // advances watermark, flushes
-      ds => StreamOps.sessionize(ds, shortGapUs, "10 minutes").toDF())
-    // the query surviving + emitting sessions is the assertion; exact
-    // session shapes are covered by the batch-parity test
-    assert(rows.nonEmpty)
+    sessionizeApis { sessionize =>
+      val rows = runBatches(
+        Seq(
+          Seq(ev(1, 0, 1.0), ev(1, 30, 2.0)), // watermark → minute 20
+          Seq(ev(1, 21, 9.0)), // late but in-watermark; gap already elapsed
+          Seq(ev(1, 60, 4.0))), // advances watermark, flushes
+        ds => sessionize(ds, shortGapUs, "10 minutes").toDF())
+      // the query surviving + emitting sessions is the assertion; exact
+      // session shapes are covered by the batch-parity test
+      assert(rows.nonEmpty)
+    }
   }
 
   test("as-of state shrinks to the one-build floor as the watermark advances past an idle key") {
@@ -523,6 +550,91 @@ class StreamOpsSpec extends SparkSpec {
     assert(h2 == Seq(FunnelHit(1L, 2L, us(35))))
   }
 
+  test("sessionStep: a timer call closes only once the gap has elapsed; chunking closes the one-shot sessions") {
+    import StreamOps.SessState
+    def us(minute: Long) = BaseUs + minute * 60L * 1000000L
+    val zero = SessState(0L, 0L, 0L, 0L, 0.0)
+    val (o0, Some(st1), Some(t1)) = StreamOps.sessionStep(1L,
+      Seq(ev(1, 5, 2.0), ev(1, 0, 1.0)), zero, 0L, gapUs): @unchecked
+    assert(o0.isEmpty && st1 == SessState(1L, 2L, us(0), us(5), 3.0))
+    // the timer: first ms at which the watermark is past lastUs + gap
+    assert(t1 == (us(5) + gapUs) / 1000L + 1L)
+    // a timer call with the gap not yet elapsed (the watermark exactly at
+    // lastUs + gap) emits nothing, keeps the session and re-arms
+    assert(StreamOps.sessionStep(1L, Nil, st1, us(15), gapUs) ==
+      ((Nil, Some(st1), Some(t1))))
+    // once elapsed, the session emits once and the state is removed
+    assert(StreamOps.sessionStep(1L, Nil, st1, us(15) + 1000L, gapUs) ==
+      ((Seq(Session(1L, 1L, 2L, us(0), us(5), 3.0)), None, None)))
+    assert(StreamOps.sessionStep(1L, Nil, zero, us(100), gapUs) == ((Nil, None, None)))
+
+    // an in-order feed delivered in random chunks under the engine's
+    // watermark (1 min behind the rows already delivered, with timer
+    // calls on idle batches) closes the same sessions as one shot; ids
+    // may differ, as a timer close restarts them at 1
+    val rnd = new scala.util.Random(11)
+    def shape(s: Seq[Session]) = s.map(x => (x.start_us, x.end_us, x.n_events, x.value_sum))
+    (1 to 50).foreach { trial =>
+      val feed = Seq.fill(5 + rnd.nextInt(20))(rnd.nextInt(200).toLong).sorted
+        .zipWithIndex.map { case (m, i) => ev(1, m, i.toDouble) }
+      val oneShot = {
+        val (h0, Some(st), _) = StreamOps.sessionStep(1L, feed, zero, 0L, gapUs): @unchecked
+        h0 ++ StreamOps.sessionStep(1L, Nil, st, us(1000), gapUs)._1
+      }
+      val cuts = Seq.fill(rnd.nextInt(6))(rnd.nextInt(feed.size + 1))
+      val chunks = (Seq(0) ++ cuts ++ Seq(feed.size)).sorted.sliding(2)
+        .map { case Seq(a, b) => feed.slice(a, b) }.toSeq
+      var st = zero
+      var timer = Option.empty[Long]
+      var wmUs = 0L
+      val got = scala.collection.mutable.ArrayBuffer.empty[Session]
+      def call(rows: Seq[KeyedEvent]): Unit = {
+        val (out, next, t) = StreamOps.sessionStep(1L, rows, st, wmUs, gapUs)
+        got ++= out; st = next.getOrElse(zero); timer = t
+      }
+      chunks.foreach { chunk =>
+        if (chunk.nonEmpty) call(chunk)
+        else if (timer.exists(_ < wmUs / 1000L)) call(Nil)
+        if (chunk.nonEmpty) wmUs = math.max(wmUs, chunk.last.ts_us - 60L * 1000000L)
+      }
+      wmUs = us(1000)
+      call(Nil)
+      assert(shape(got.toSeq) == shape(oneShot), s"trial $trial: chunked=$got oneShot=$oneShot")
+    }
+  }
+
+  test("cdcStep: every delivery order of a key's records, then the sentinel, ends in the same row") {
+    import StreamOps.{CdcOp, CdcRow, CdcState}
+    def us(minute: Long) = BaseUs + minute * 60L * 1000000L
+    def op(minute: Long, id: Long, v: Double, o: String) =
+      CdcOp(1L, new Timestamp(us(minute) / 1000L), us(minute), id, v, o)
+    val zero = CdcState(0L, 0L, 0.0, "", 0L)
+    def deliver(order: Seq[CdcOp]): Seq[CdcRow] = {
+      val st = order.foldLeft(zero) { (s, r) =>
+        val (out, Some(next), timer) = StreamOps.cdcStep(1L, Seq(r), s, 0L): @unchecked
+        assert(out.isEmpty && timer.isEmpty, "only the sentinel arms the close")
+        next
+      }
+      val (out, Some(armed), Some(_)) =
+        StreamOps.cdcStep(1L, Seq(op(2000, 0, 0.0, "x")), st, 0L): @unchecked
+      assert(out.isEmpty)
+      val (row, next, timer) = StreamOps.cdcStep(1L, Nil, armed, us(3000))
+      assert(next.isEmpty && timer.isEmpty)
+      row
+    }
+    // an upsert, a delete, and two records tied on ts (the higher
+    // event_id wins the tie)
+    val records = Seq(op(10, 1, 1.0, "u"), op(15, 2, 0.0, "d"),
+      op(20, 4, 4.0, "u"), op(20, 3, 3.0, "u"))
+    records.permutations.foreach { order =>
+      assert(deliver(order) == Seq(CdcRow(1L, us(20), 4L, 4.0, 4L)), s"order $order")
+    }
+    // the latest record a delete: no row, whatever the order
+    (records :+ op(30, 5, 0.0, "d")).permutations.foreach { order =>
+      assert(deliver(order).isEmpty, s"order $order")
+    }
+  }
+
   test("cdcStream: reordered delivery converges to the same last-writer-wins table; deletes erase; sentinel arms the close") {
     import StreamOps.{CdcOp, CdcRow}
     def us(minute: Long) = BaseUs + minute * 60L * 1000000L
@@ -573,36 +685,39 @@ class StreamOpsSpec extends SparkSpec {
     def fev(user: Long, minute: Long, id: Long, kind: Int) =
       FunnelEvent(user, new Timestamp(us(minute) / 1000L), us(minute), id, kind)
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[FunnelEvent]
-    val out = StreamOps.funnelStream(mem.toDS(), "1 minute")
-    val qname = s"q${System.nanoTime()}"
-    val query = out.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    try {
-      // "file 1": user 1's view+click, plus a far-future row that will
-      // push the watermark to minute 499
-      mem.addData(Seq(fev(1, 10, 1, 1), fev(1, 20, 2, 2), fev(2, 500, 3, 1)))
-      query.processAllAvailable()
-      // "file 0" delivered SECOND (the scrambled ladder): user 1's
-      // purchase@30 arrives with the watermark already at 499 — late by
-      // contract, must be dropped, not consumed in arrival order
-      mem.addData(Seq(fev(1, 30, 4, 3)))
-      query.processAllAvailable()
-      // "file 2": an on-time purchase plus a watermark pusher
-      mem.addData(Seq(fev(1, 505, 5, 3), fev(2, 600, 6, 2)))
-      query.processAllAvailable()
-      mem.addData(Seq.empty[FunnelEvent])
-      query.processAllAvailable()
-    } finally query.stop()
-    val hits = spark.table(qname).as[FunnelHit].collect().toSet
-    // on-time path emitted; the late purchase@30 NEVER became stage 3
-    assert(hits.contains(FunnelHit(1L, 1L, us(10))), s"got $hits")
-    assert(hits.contains(FunnelHit(1L, 2L, us(20))), s"got $hits")
-    assert(!hits.exists(h => h.user_id == 1L && h.stage == 3L && h.ts_us == us(30)),
-      s"late purchase consumed out of order: $hits")
-    assert(hits.contains(FunnelHit(1L, 3L, us(505))),
-      s"on-time purchase after the dropped one must still fire: $hits")
-    assert(hits.contains(FunnelHit(2L, 1L, us(500))), s"got $hits")
+    onBothApis[(Dataset[FunnelEvent], String) => Dataset[FunnelHit]](
+      StreamOps.funnelStream, StreamOps.funnelStreamTws) { funnelStream =>
+      val mem = MemoryStream[FunnelEvent]
+      val out = funnelStream(mem.toDS(), "1 minute")
+      val qname = s"q${System.nanoTime()}"
+      val query = out.writeStream.format("memory").queryName(qname)
+        .outputMode("append").start()
+      try {
+        // "file 1": user 1's view+click, plus a far-future row that will
+        // push the watermark to minute 499
+        mem.addData(Seq(fev(1, 10, 1, 1), fev(1, 20, 2, 2), fev(2, 500, 3, 1)))
+        query.processAllAvailable()
+        // "file 0" delivered SECOND (the scrambled ladder): user 1's
+        // purchase@30 arrives with the watermark already at 499 — late by
+        // contract, must be dropped, not consumed in arrival order
+        mem.addData(Seq(fev(1, 30, 4, 3)))
+        query.processAllAvailable()
+        // "file 2": an on-time purchase plus a watermark pusher
+        mem.addData(Seq(fev(1, 505, 5, 3), fev(2, 600, 6, 2)))
+        query.processAllAvailable()
+        mem.addData(Seq.empty[FunnelEvent])
+        query.processAllAvailable()
+      } finally query.stop()
+      val hits = spark.table(qname).as[FunnelHit].collect().toSet
+      // on-time path emitted; the late purchase@30 NEVER became stage 3
+      assert(hits.contains(FunnelHit(1L, 1L, us(10))), s"got $hits")
+      assert(hits.contains(FunnelHit(1L, 2L, us(20))), s"got $hits")
+      assert(!hits.exists(h => h.user_id == 1L && h.stage == 3L && h.ts_us == us(30)),
+        s"late purchase consumed out of order: $hits")
+      assert(hits.contains(FunnelHit(1L, 3L, us(505))),
+        s"on-time purchase after the dropped one must still fire: $hits")
+      assert(hits.contains(FunnelHit(2L, 1L, us(500))), s"got $hits")
+    }
   }
 
   test("geofenceStream: scrambled delivery yields the event-time transition sequence; late pings drop") {
@@ -611,34 +726,37 @@ class StreamOpsSpec extends SparkSpec {
     def ping(user: Long, minute: Long, id: Long, mask: Int) =
       GeoPing(user, new Timestamp(us(minute) / 1000L), us(minute), id, mask)
     implicit val sq = spark.sqlContext
-    val mem = MemoryStream[GeoPing]
-    val out = StreamOps.geofenceStream(mem.toDS(), "30 minutes")
-    val qname = s"q${System.nanoTime()}"
-    val query = out.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    try {
-      // user 1's ladder in event time: m10 mask=001 → m20 mask=011
-      // (enter f1) → m30 mask=010 (exit f0) → m40 mask=010 (no change);
-      // delivered SCRAMBLED across two batches
-      mem.addData(Seq(ping(1, 30, 3, 2), ping(1, 10, 1, 1)))
-      query.processAllAvailable()
-      mem.addData(Seq(ping(1, 40, 4, 2), ping(1, 20, 2, 3)))
-      query.processAllAvailable()
-      // watermark pusher: all of user 1's pings become ready at once and
-      // must be processed in (ts, event_id) order, not arrival order
-      mem.addData(Seq(ping(2, 2000, 9, 0)))
-      query.processAllAvailable()
-      // a genuinely late ping (m15, watermark long past) must be DROPPED
-      // — were it consumed, mask 111 vs the last mask 010 would emit
-      mem.addData(Seq(ping(1, 15, 5, 7)))
-      query.processAllAvailable()
-      mem.addData(Seq.empty[GeoPing])
-      query.processAllAvailable()
-    } finally query.stop()
-    val rows = spark.table(qname).as[GeoTransition].collect().toSet
-    assert(rows == Set(
-      GeoTransition(1L, us(20), 2L, 1L, "enter"),
-      GeoTransition(1L, us(30), 3L, 0L, "exit")), s"got $rows")
+    onBothApis[(Dataset[GeoPing], String) => Dataset[GeoTransition]](
+      StreamOps.geofenceStream, StreamOps.geofenceStreamTws) { geofenceStream =>
+      val mem = MemoryStream[GeoPing]
+      val out = geofenceStream(mem.toDS(), "30 minutes")
+      val qname = s"q${System.nanoTime()}"
+      val query = out.writeStream.format("memory").queryName(qname)
+        .outputMode("append").start()
+      try {
+        // user 1's ladder in event time: m10 mask=001 → m20 mask=011
+        // (enter f1) → m30 mask=010 (exit f0) → m40 mask=010 (no change);
+        // delivered SCRAMBLED across two batches
+        mem.addData(Seq(ping(1, 30, 3, 2), ping(1, 10, 1, 1)))
+        query.processAllAvailable()
+        mem.addData(Seq(ping(1, 40, 4, 2), ping(1, 20, 2, 3)))
+        query.processAllAvailable()
+        // watermark pusher: all of user 1's pings become ready at once and
+        // must be processed in (ts, event_id) order, not arrival order
+        mem.addData(Seq(ping(2, 2000, 9, 0)))
+        query.processAllAvailable()
+        // a genuinely late ping (m15, watermark long past) must be DROPPED
+        // — were it consumed, mask 111 vs the last mask 010 would emit
+        mem.addData(Seq(ping(1, 15, 5, 7)))
+        query.processAllAvailable()
+        mem.addData(Seq.empty[GeoPing])
+        query.processAllAvailable()
+      } finally query.stop()
+      val rows = spark.table(qname).as[GeoTransition].collect().toSet
+      assert(rows == Set(
+        GeoTransition(1L, us(20), 2L, 1L, "enter"),
+        GeoTransition(1L, us(30), 3L, 0L, "exit")), s"got $rows")
+    }
   }
 
   test("ewmaStream: scrambled delivery still emits event-time frames; late pings drop") {
