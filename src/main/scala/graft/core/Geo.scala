@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Geospatial scalar math.
@@ -8,12 +8,17 @@ import org.apache.spark.sql.functions._
   * The reference ships three divergent haversine copies
   * (`Parallel/Pattern Extraction.scala:56`, `Standalone/Blind Zone
   * Detection.scala:33`, `Standalone/Trajectory Clustering.py:58`) — all as
-  * UDFs, which are opaque to Catalyst codegen. Here the primary form is a
-  * *Column composition* of built-in functions, so it inlines into
-  * whole-stage codegen with zero serialization cost; a plain-Scala overload
-  * serves the row-at-a-time clustering path, and a registered SQL UDF keeps
-  * `expr("haversine_m(...)")` strings working (reference parity for
-  * `Parallel/Pattern Extraction.scala:103`).
+  * UDFs, which are opaque to Catalyst codegen. Here haversine has two
+  * forms, one formula:
+  *  - [[haversineMeters]], a Column composition of built-in functions, for
+  *    DataFrame plans: it inlines into whole-stage codegen with no boxing
+  *    and no serialization, where a UDF would do both per row;
+  *  - [[haversineM]], plain Scala on doubles, for the row-at-a-time paths
+  *    (trajectory distance, DBSCAN neighbourhoods) and as the scalar
+  *    reference the tests hold the Column form to.
+  *
+  * Plans call the Column form directly; nothing is registered for SQL
+  * text.
   */
 object Geo {
 
@@ -39,17 +44,5 @@ object Geo {
       math.cos(math.toRadians(lat1)) * math.cos(math.toRadians(lat2)) *
         math.pow(math.sin(dLng / 2), 2)
     2 * EarthRadiusM * math.asin(math.min(1.0, math.sqrt(a)))
-  }
-
-  /** Register `haversine_m` for use inside SQL/`expr` strings. */
-  def register(spark: SparkSession): Unit =
-    spark.udf.register("haversine_m", haversineM _)
-
-  /** Equirectangular approximation in meters — cheap prefilter for
-    * neighborhood queries at city scale (exact enough under ~50 km). */
-  def equirectM(lat1: Double, lng1: Double, lat2: Double, lng2: Double): Double = {
-    val x = math.toRadians(lng2 - lng1) * math.cos(math.toRadians((lat1 + lat2) / 2))
-    val y = math.toRadians(lat2 - lat1)
-    EarthRadiusM * math.sqrt(x * x + y * y)
   }
 }

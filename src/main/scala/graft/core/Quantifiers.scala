@@ -20,8 +20,4 @@ object Quantifiers {
 
   /** 1 if every row in the group satisfies `cond`, else 0. */
   def forallFlag(cond: Column): Column = min(when(cond, 1).otherwise(0))
-
-  /** Boolean forms (Spark ≥3 `any`/`every`). */
-  def existsAgg(cond: Column): Column = max(cond)
-  def forallAgg(cond: Column): Column = min(cond)
 }

@@ -195,16 +195,6 @@ object Dedup {
 
   // --- MinHash + LSH -----------------------------------------------------
 
-  /** MinHash signature: element i = min over shingles of xxhash64(i, s).
-    * Seeding by position gives `numHashes` independent-enough permutations
-    * from one pass over the shingle array (no per-hash shuffle).
-    * (Array/HOF convenience form — [[minhashSignatures]] is the codegen
-    * path used by the candidate miner.) */
-  def minhashSignature(shingles: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(shingles, s => xxhash64(lit(i), s)))
-    }: _*)
-
   /** MinHash signatures relationally: `numHashes` codegen'd
     * `min(xxhash64(i, s))` aggregates over shingle rows — one hash-agg
     * shuffle on id, no interpreted HOFs. Docs with no shingles are simply

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -18,36 +18,19 @@ import org.apache.spark.util.sketch.BloomFilter
   * safe document. The filter rides the broadcast store (one copy per
   * executor); the probe is a pure bit test, so the corpus side stays in
   * whole-stage codegen and never shuffles. */
-@ExpressionDescription(
-  usage = "bloom_might_contain_long(h) - membership of a long key in a broadcast Bloom filter")
 case class BloomMightContainLong(child: Expression, filter: Broadcast[BloomFilter])
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bloom_might_contain_long needs a bigint input, got ${other.sql}")
-    }
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "bloom_might_contain_long"
+  override protected def accepts = Seq(Seq(LongType))
+  override protected def shared = Some(filter -> classOf[BloomFilter])
 
-  override protected def nullSafeEval(h: Any): Any =
-    filter.value.mightContainLong(h.asInstanceOf[Long])
+  override protected def kernel(a: Seq[Any]): Any =
+    filter.value.mightContainLong(a(0).asInstanceOf[Long])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bloomBc", filter)
-    nullSafeCodeGen(ctx, ev, h => {
-      s"""
-         |${ev.value} = ((org.apache.spark.util.sketch.BloomFilter)
-         |  (((org.apache.spark.broadcast.Broadcast) $bcRef).value()))
-         |  .mightContainLong($h);
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"(${a(1)}).mightContainLong(${a(0)})"
 
   override protected def withNewChildInternal(newChild: Expression): BloomMightContainLong =
     copy(child = newChild)

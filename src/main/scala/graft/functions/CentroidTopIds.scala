@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+
+import KernelCall.{floatElems, FloatArrays}
 
 /** A trained coarse-quantizer model: centroid ids, vectors, and their
   * precomputed L2 norms, positionally aligned. Broadcast once and shared
@@ -94,49 +96,24 @@ object CentroidMath {
   * column regardless of nlist — plan size and codegen are O(1) in the
   * centroid count, so the same plan shape serves nlist=8 and nlist=65536.
   */
-@ExpressionDescription(
-  usage = "centroid_top_ids(vec) - top-n centroid ids by cosine against a broadcast model")
 case class CentroidTopIds(
     child: Expression,
     model: Broadcast[CentroidModel],
-    topn: Int) extends UnaryExpression {
+    topn: Int) extends KernelCall with UnaryLike[Expression] {
 
   require(topn >= 1, "topn >= 1")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"centroid_top_ids needs array<float|double> input, got ${other.sql}")
-    }
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "centroid_top_ids"
+  override protected def accepts = Seq(FloatArrays)
+  override protected def mayReturnNull = true
+  override protected def shared = Some(model -> classOf[CentroidModel])
 
-  private def floatElems: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override protected def kernel(a: Seq[Any]): Any =
+    CentroidMath.topCids(a(0).asInstanceOf[ArrayData], model.value, floatElems(child), topn)
 
-  override protected def nullSafeEval(vec: Any): Any =
-    CentroidMath.topCids(vec.asInstanceOf[ArrayData], model.value, floatElems, topn)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("centroidModelBc", model)
-    val fe = floatElems
-    nullSafeCodeGen(ctx, ev, v => {
-      val tmp = ctx.freshName("topCids")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-         |  graft.functions.CentroidMath.topCids($v,
-         |    (graft.functions.CentroidModel)
-         |      (((org.apache.spark.broadcast.Broadcast) $bcRef).value()),
-         |    $fe, $topn);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.CentroidMath.topCids(${a(0)}, ${a(1)}, ${floatElems(child)}, $topn)"
 
   override protected def withNewChildInternal(newChild: Expression): CentroidTopIds =
     copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -18,36 +18,19 @@ import org.apache.spark.util.sketch.CountMinSketch
   * `exact ≤ est ≤ exact + ε·N` (the upper bound with the configured
   * confidence) — never an undercount. Probing is a per-row counter-array
   * read against the broadcast copy; the corpus side stays in codegen. */
-@ExpressionDescription(
-  usage = "cms_estimate_long(h) - count-min-sketch frequency estimate of a long key")
 case class CmsEstimateLong(child: Expression, sketch: Broadcast[CountMinSketch])
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case LongType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"cms_estimate_long needs a bigint input, got ${other.sql}")
-    }
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "cms_estimate_long"
+  override protected def accepts = Seq(Seq(LongType))
+  override protected def shared = Some(sketch -> classOf[CountMinSketch])
 
-  override protected def nullSafeEval(h: Any): Any =
-    sketch.value.estimateCount(h.asInstanceOf[Long])
+  override protected def kernel(a: Seq[Any]): Any =
+    sketch.value.estimateCount(a(0).asInstanceOf[Long])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("cmsBc", sketch)
-    nullSafeCodeGen(ctx, ev, h => {
-      s"""
-         |${ev.value} = ((org.apache.spark.util.sketch.CountMinSketch)
-         |  (((org.apache.spark.broadcast.Broadcast) $bcRef).value()))
-         |  .estimateCount(java.lang.Long.valueOf($h));
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"(${a(1)}).estimateCount(java.lang.Long.valueOf(${a(0)}))"
 
   override protected def withNewChildInternal(newChild: Expression): CmsEstimateLong =
     copy(child = newChild)

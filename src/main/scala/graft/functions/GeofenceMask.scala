@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
 
 /** Native point-in-polygons bitmask: bit f of the result is set iff
@@ -15,34 +15,28 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * dispatch per edge — fine for a 6-row rollup input, wrong for the
   * per-ping hot path of the dwell query and the streaming detector.
   * This expression is one static call on primitive doubles, fused into
-  * whole-stage codegen like [[Haversine]]; the edge table is a static
-  * primitive array built with the SAME operation order as the Column
-  * arithmetic (Java double ops ≡ Column double ops ≡ the DuckDB
-  * oracle's — all IEEE +,−,×,÷ — so the mask is bit-identical across
-  * all three paths).
+  * whole-stage codegen; the edge table is a static primitive array built
+  * with the SAME operation order as the Column arithmetic (Java double
+  * ops ≡ Column double ops ≡ the DuckDB oracle's — all IEEE +,−,×,÷ — so
+  * the mask is bit-identical across all three paths).
   */
-@ExpressionDescription(
-  usage = "geofence_mask(px, py) - 6-bit fence-membership bitmask")
 case class GeofenceMask(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
+    extends KernelCall with BinaryLike[Expression] with ImplicitCastInputTypes {
 
   override def dataType: DataType = IntegerType
-
   override def prettyName: String = "geofence_mask"
+  override protected def accepts = Seq(Seq(DoubleType), Seq(DoubleType))
 
-  override protected def nullSafeEval(px: Any, py: Any): Any =
-    GeofenceMask.mask(px.asInstanceOf[Double], py.asInstanceOf[Double])
+  override protected def kernel(a: Seq[Any]): Any =
+    GeofenceMask.mask(a(0).asInstanceOf[Double], a(1).asInstanceOf[Double])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, q) => s"graft.functions.GeofenceMask.mask($p, $q)")
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.GeofenceMask.mask(${a(0)}, ${a(1)})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GeofenceMask =
     copy(left = newLeft, right = newRight)
 }
-
 object GeofenceMask {
   val Fences = 6
   private val Verts = 8

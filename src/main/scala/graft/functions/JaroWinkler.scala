@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, ImplicitCastInputTypes}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Jaro-Winkler similarity — the graded cousin of the
   * levenshtein entity-resolution join (`join_fuzzy_names`): a REAL
@@ -18,27 +17,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * arithmetic step is a division/add of small integers, so the score is
   * hash-exact cross-engine. Operates per Java char; the contract is
   * ASCII name columns (the DuckDB twin is byte-based — identical on
-  * ASCII). Codegen: one static call on two UTF8Strings, fused like
-  * [[Haversine]].
+  * ASCII). Codegen: one static call on two UTF8Strings, fused into
+  * whole-stage codegen.
   */
-@ExpressionDescription(
-  usage = "jaro_winkler(s1, s2) - Jaro-Winkler similarity in [0, 1]")
 case class JaroWinkler(left: Expression, right: Expression)
-  extends BinaryExpression with ImplicitCastInputTypes {
-
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
+    extends KernelCall with BinaryLike[Expression] with ImplicitCastInputTypes {
 
   override def dataType: DataType = DoubleType
-
   override def prettyName: String = "jaro_winkler"
+  override protected def accepts = Seq(Seq(StringType), Seq(StringType))
 
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    JaroWinkler.sim(a.asInstanceOf[UTF8String].toString,
-      b.asInstanceOf[UTF8String].toString)
+  override protected def kernel(a: Seq[Any]): Any =
+    JaroWinkler.sim(a(0).toString, a(1).toString)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.JaroWinkler.sim($a.toString(), $b.toString())")
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.JaroWinkler.sim(${a(0)}.toString(), ${a(1)}.toString())"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaroWinkler =
@@ -90,8 +83,7 @@ object JaroWinkler {
     // Winkler prefix bonus ONLY above the 0.7 boost threshold — this is
     // rapidfuzz's (and therefore DuckDB's) exact behavior; applying it
     // unconditionally diverged from the oracle for jaro <= 0.7 scores
-    // (masked by join_fuzzy_jw's 0.93 gate, but any unguarded consumer
-    // of the SQL function would have silently hash-mismatched)
+    // (masked by join_fuzzy_jw's 0.93 gate)
     if (jaro > 0.7) jaro + l * 0.1 * (1 - jaro) else jaro
   }
 }

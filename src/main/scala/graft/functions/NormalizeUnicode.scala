@@ -2,9 +2,8 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * compose walk.
   */
 object NormalizeOps {
-  private def norm(str: UTF8String, form: Normalizer.Form): UTF8String = {
+  def norm(str: UTF8String, form: Normalizer.Form): UTF8String = {
     val s = str.toString
     if (Normalizer.isNormalized(s, form)) str
     else UTF8String.fromString(Normalizer.normalize(s, form))
@@ -44,42 +43,23 @@ object NormalizeOps {
   * DuckDB's `nfc_normalize` produces byte-identical output — which is what
   * lets the `text_normalize_nfc` driver gate hash-compare the two engines.
   */
-@ExpressionDescription(
-  usage = "normalize_unicode(text, 'NFC'|'NFD'|'NFKC'|'NFKD') - Unicode-normalize a string")
 case class NormalizeUnicode(child: Expression, form: String)
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
 
   private val formUpper = form.toUpperCase
   require(
     Set("NFC", "NFD", "NFKC", "NFKD").contains(formUpper),
     s"unsupported normalization form: $form")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"normalize_unicode needs a string input, got ${other.sql}")
-    }
   override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "normalize_unicode"
+  override protected def accepts = Seq(Seq(StringType))
 
-  private def method: String = formUpper.toLowerCase
+  override protected def kernel(a: Seq[Any]): Any =
+    NormalizeOps.norm(a(0).asInstanceOf[UTF8String], Normalizer.Form.valueOf(formUpper))
 
-  override protected def nullSafeEval(text: Any): Any = {
-    val s = text.asInstanceOf[UTF8String]
-    formUpper match {
-      case "NFC"  => NormalizeOps.nfc(s)
-      case "NFD"  => NormalizeOps.nfd(s)
-      case "NFKC" => NormalizeOps.nfkc(s)
-      case "NFKD" => NormalizeOps.nfkd(s)
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.NormalizeOps.$method($t);")
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.NormalizeOps.${formUpper.toLowerCase}(${a(0)})"
 
   override protected def withNewChildInternal(newChild: Expression): NormalizeUnicode =
     copy(child = newChild)

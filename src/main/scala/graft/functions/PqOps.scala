@@ -1,10 +1,12 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
+
+import KernelCall.{floatElems, FloatArrays, IntArrays}
 
 /** A trained product-quantization codebook (Jégou et al., "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011): the embedding
@@ -160,45 +162,20 @@ object PqMath {
   * emits all `m` codes in a single pass over the vector — plan size and
   * codegen are O(1) in both the block count and the per-block centroid
   * count. Null on a null/mis-sized vector or null elements. */
-@ExpressionDescription(
-  usage = "pq_codes(vec) - per-block L2-nearest centroid codes against a broadcast PQ model")
 case class PqCodes(child: Expression, model: Broadcast[PqModel])
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(FloatType | DoubleType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_codes needs array<float|double> input, got ${other.sql}")
-    }
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullable: Boolean = true
   override def prettyName: String = "pq_codes"
+  override protected def accepts = Seq(FloatArrays)
+  override protected def mayReturnNull = true
+  override protected def shared = Some(model -> classOf[PqModel])
 
-  private def floatElems: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  override protected def kernel(a: Seq[Any]): Any =
+    PqMath.encode(a(0).asInstanceOf[ArrayData], model.value, floatElems(child))
 
-  override protected def nullSafeEval(vec: Any): Any =
-    PqMath.encode(vec.asInstanceOf[ArrayData], model.value, floatElems)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("pqModelBc", model)
-    val fe = floatElems
-    nullSafeCodeGen(ctx, ev, v => {
-      val tmp = ctx.freshName("pqCodes")
-      s"""
-         |org.apache.spark.sql.catalyst.util.ArrayData $tmp =
-         |  graft.functions.PqMath.encode($v,
-         |    (graft.functions.PqModel)
-         |      (((org.apache.spark.broadcast.Broadcast) $bcRef).value()),
-         |    $fe);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp; }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.PqMath.encode(${a(0)}, ${a(1)}, ${floatElems(child)})"
 
   override protected def withNewChildInternal(newChild: Expression): PqCodes =
     copy(child = newChild)
@@ -206,46 +183,21 @@ case class PqCodes(child: Expression, model: Broadcast[PqModel])
 
 /** ADC score: exact dot of a raw query vector (left) against the
   * reconstruction of a PQ code array (right), via the broadcast model. */
-@ExpressionDescription(
-  usage = "pq_adc(qvec, codes) - asymmetric dot product of a raw query against PQ codes")
 case class PqAdc(left: Expression, right: Expression, model: Broadcast[PqModel])
-    extends BinaryExpression {
+    extends KernelCall with BinaryLike[Expression] {
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "pq_adc"
+  override protected def accepts = Seq(FloatArrays, IntArrays)
+  override protected def mayReturnNull = true
+  override protected def shared = Some(model -> classOf[PqModel])
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_adc needs (array<float|double>, array<int>), got ${l.sql} / ${r.sql}")
-    }
+  override protected def kernel(a: Seq[Any]): Any =
+    PqMath.adcDot(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData],
+      model.value, floatElems(left))
 
-  private def floatElems: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(q: Any, c: Any): Any =
-    PqMath.adcDot(q.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
-      model.value, floatElems)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("pqModelBc", model)
-    val fe = floatElems
-    nullSafeCodeGen(ctx, ev, (q, c) => {
-      val tmp = ctx.freshName("adc")
-      s"""
-         |java.lang.Double $tmp = graft.functions.PqMath.adcDot($q, $c,
-         |  (graft.functions.PqModel)
-         |    (((org.apache.spark.broadcast.Broadcast) $bcRef).value()),
-         |  $fe);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.PqMath.adcDot(${a(0)}, ${a(1)}, ${a(2)}, ${floatElems(left)})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =
@@ -254,46 +206,21 @@ case class PqAdc(left: Expression, right: Expression, model: Broadcast[PqModel])
 
 /** IVF-PQ reconstruction norm: `‖base + decode(codes)‖` where `base` is
   * the coarse centroid column and the codes encode the residual. */
-@ExpressionDescription(
-  usage = "pq_recon_norm_plus(base, codes) - L2 norm of base + PQ-decoded residual")
 case class PqReconNormPlus(left: Expression, right: Expression,
-    model: Broadcast[PqModel]) extends BinaryExpression {
+    model: Broadcast[PqModel]) extends KernelCall with BinaryLike[Expression] {
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "pq_recon_norm_plus"
+  override protected def accepts = Seq(FloatArrays, IntArrays)
+  override protected def mayReturnNull = true
+  override protected def shared = Some(model -> classOf[PqModel])
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType | DoubleType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_recon_norm_plus needs (array<float|double>, array<int>), got ${l.sql} / ${r.sql}")
-    }
+  override protected def kernel(a: Seq[Any]): Any =
+    PqMath.reconNormPlus(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData],
+      model.value, floatElems(left))
 
-  private def baseFloat: Boolean =
-    left.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(b: Any, c: Any): Any =
-    PqMath.reconNormPlus(b.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData],
-      model.value, baseFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("pqModelBc", model)
-    val bf = baseFloat
-    nullSafeCodeGen(ctx, ev, (b, c) => {
-      val tmp = ctx.freshName("rnormp")
-      s"""
-         |java.lang.Double $tmp = graft.functions.PqMath.reconNormPlus($b, $c,
-         |  (graft.functions.PqModel)
-         |    (((org.apache.spark.broadcast.Broadcast) $bcRef).value()),
-         |  $bf);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.PqMath.reconNormPlus(${a(0)}, ${a(1)}, ${a(2)}, ${floatElems(left)})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqReconNormPlus =
@@ -301,40 +228,20 @@ case class PqReconNormPlus(left: Expression, right: Expression,
 }
 
 /** Reconstruction norm of a PQ code array via the broadcast model. */
-@ExpressionDescription(
-  usage = "pq_recon_norm(codes) - L2 norm of the PQ reconstruction")
 case class PqReconNorm(child: Expression, model: Broadcast[PqModel])
-    extends UnaryExpression {
+    extends KernelCall with UnaryLike[Expression] {
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "pq_recon_norm"
+  override protected def accepts = Seq(IntArrays)
+  override protected def mayReturnNull = true
+  override protected def shared = Some(model -> classOf[PqModel])
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(IntegerType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"pq_recon_norm needs array<int> input, got ${other.sql}")
-    }
+  override protected def kernel(a: Seq[Any]): Any =
+    PqMath.reconNorm(a(0).asInstanceOf[ArrayData], model.value)
 
-  override protected def nullSafeEval(c: Any): Any =
-    PqMath.reconNorm(c.asInstanceOf[ArrayData], model.value)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("pqModelBc", model)
-    nullSafeCodeGen(ctx, ev, c => {
-      val tmp = ctx.freshName("rnorm")
-      s"""
-         |java.lang.Double $tmp = graft.functions.PqMath.reconNorm($c,
-         |  (graft.functions.PqModel)
-         |    (((org.apache.spark.broadcast.Broadcast) $bcRef).value()));
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.PqMath.reconNorm(${a(0)}, ${a(1)})"
 
   override protected def withNewChildInternal(newChild: Expression): PqReconNorm =
     copy(child = newChild)

@@ -1,9 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType, ShortType}
+
+import KernelCall.{elemType, IntegralArrays, NumericArrays}
+import VectorMath.typeCode
 
 /** Static loops behind [[SeqDot]] — sequential left-fold accumulation,
   * bit-identical to `aggregate(zip_with(a, b, (x,y) => x*y), 0.0, _+_)`
@@ -66,6 +69,7 @@ object VectorMath {
     case ShortType => 4
     case _ => 5 // ByteType
   }
+  def typeCode(arg: Expression): Int = typeCode(elemType(arg))
 
   @inline private def elemD(arr: ArrayData, i: Int, c: Int): Double = c match {
     case 0 => arr.getFloat(i).toDouble
@@ -134,7 +138,7 @@ object VectorMath {
     while (i < n) {
       if (a.isNullAt(i) || b.isNullAt(i)) return null
       val d = elemL(a, i, ac) - elemL(b, i, bc)
-      // checkInputDataTypes admits ANY array<bigint>, so a non-quantized
+      // the type check admits ANY array<bigint>, so a non-quantized
       // long vector must fail loudly instead of wrapping silently — the
       // scaladoc's exactness claim is a contract (ADVICE r8). The exact
       // intrinsics stay a primitive loop (no boxing, codegen-inlinable).
@@ -155,66 +159,32 @@ object VectorMath {
   * keeping the exact left-fold accumulation order, so every
   * oracle-verified cosine/dot score stays bit-identical.
   */
-@ExpressionDescription(
-  usage = "seq_dot(a, b) - sequential-fold dot product of two numeric arrays")
-case class SeqDot(left: Expression, right: Expression) extends BinaryExpression {
+case class SeqDot(left: Expression, right: Expression)
+    extends KernelCall with BinaryLike[Expression] {
 
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
   override def prettyName: String = "seq_dot"
+  override protected def accepts = Seq(NumericArrays, NumericArrays)
+  override protected def mayReturnNull = true
 
-  private def elemType(dt: DataType): DataType =
-    dt.asInstanceOf[ArrayType].elementType
-
-  // fast-path call for the four float/double combinations; widening
-  // generic call (with element-type codes) for every other numeric pair
-  private lazy val callSuffix: String =
-    (elemType(left.dataType), elemType(right.dataType)) match {
-      case (FloatType, FloatType) => "seqDotFF(%s, %s)"
-      case (DoubleType, DoubleType) => "seqDotDD(%s, %s)"
-      case (FloatType, DoubleType) => "seqDotFD(%s, %s)"
-      case (DoubleType, FloatType) => "seqDotDF(%s, %s)"
-      case (lt, rt) =>
-        s"seqDotGen(%s, %s, ${VectorMath.typeCode(lt)}, ${VectorMath.typeCode(rt)})"
+  // (method, trailing Java arguments, loop): a fast path for the four
+  // float/double pairs, the widening generic loop for every other pair
+  @transient private lazy val loop: (String, String, (ArrayData, ArrayData) => Any) =
+    (elemType(left), elemType(right)) match {
+      case (FloatType, FloatType) => ("seqDotFF", "", VectorMath.seqDotFF)
+      case (DoubleType, DoubleType) => ("seqDotDD", "", VectorMath.seqDotDD)
+      case (FloatType, DoubleType) => ("seqDotFD", "", VectorMath.seqDotFD)
+      case (DoubleType, FloatType) => ("seqDotDF", "", VectorMath.seqDotDF)
+      case _ =>
+        val (lc, rc) = (typeCode(left), typeCode(right))
+        ("seqDotGen", s", $lc, $rc", VectorMath.seqDotGen(_, _, lc, rc))
     }
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(FloatType | DoubleType | IntegerType | LongType |
-                     ShortType | ByteType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"seq_dot needs numeric array inputs, " +
-          s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
+  override protected def kernel(a: Seq[Any]): Any =
+    loop._3(a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData])
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (ad, bd) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    (elemType(left.dataType), elemType(right.dataType)) match {
-      case (FloatType, FloatType) => VectorMath.seqDotFF(ad, bd)
-      case (DoubleType, DoubleType) => VectorMath.seqDotDD(ad, bd)
-      case (FloatType, DoubleType) => VectorMath.seqDotFD(ad, bd)
-      case (DoubleType, FloatType) => VectorMath.seqDotDF(ad, bd)
-      case (lt, rt) => VectorMath.seqDotGen(ad, bd,
-        VectorMath.typeCode(lt), VectorMath.typeCode(rt))
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val call = callSuffix
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("dot")
-      s"""
-         |java.lang.Double $tmp = graft.functions.VectorMath.${call.format(a, b)};
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.doubleValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.VectorMath.${loop._1}(${a(0)}, ${a(1)}${loop._2})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SeqDot =
@@ -227,45 +197,19 @@ case class SeqDot(left: Expression, right: Expression) extends BinaryExpression 
   * so the result is bit-exact in any engine, and the fused loop replaces
   * the interpreted `aggregate(zip_with(...))` HOF that dominated the
   * O(pairs) quantized ranking. Null on length mismatch / null elements. */
-@ExpressionDescription(
-  usage = "seq_dot_long(a, b) - exact integer dot product of two integral arrays")
-case class SeqDotLong(left: Expression, right: Expression) extends BinaryExpression {
+case class SeqDotLong(left: Expression, right: Expression)
+    extends KernelCall with BinaryLike[Expression] {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "seq_dot_long"
+  override protected def accepts = Seq(IntegralArrays, IntegralArrays)
+  override protected def mayReturnNull = true
 
-  private def code(e: Expression): Int =
-    VectorMath.typeCode(e.dataType.asInstanceOf[ArrayType].elementType)
+  override protected def kernel(a: Seq[Any]): Any = VectorMath.seqDotLong(
+    a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], typeCode(left), typeCode(right))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(IntegerType | LongType | ShortType | ByteType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"seq_dot_long needs integral array inputs, " +
-          s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorMath.seqDotLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      code(left), code(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (ac, bc) = (code(left), code(right))
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("idot")
-      s"""
-         |java.lang.Long $tmp = graft.functions.VectorMath.seqDotLong($a, $b, $ac, $bc);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.longValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.VectorMath.seqDotLong(${a(0)}, ${a(1)}, ${typeCode(left)}, ${typeCode(right)})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SeqDotLong =
@@ -279,45 +223,19 @@ case class SeqDotLong(left: Expression, right: Expression) extends BinaryExpress
   * `aggregate(zip_with(a, b, (x,y) => (x−y)²))` HOF, with the same
   * null-propagation contract. Integer adds are order-insensitive, so
   * the distance is bit-exact in any engine. */
-@ExpressionDescription(
-  usage = "seq_l2_long(a, b) - exact integer squared L2 distance of two integral arrays")
-case class SeqL2Long(left: Expression, right: Expression) extends BinaryExpression {
+case class SeqL2Long(left: Expression, right: Expression)
+    extends KernelCall with BinaryLike[Expression] {
 
   override def dataType: DataType = LongType
-  override def nullable: Boolean = true
   override def prettyName: String = "seq_l2_long"
+  override protected def accepts = Seq(IntegralArrays, IntegralArrays)
+  override protected def mayReturnNull = true
 
-  private def code(e: Expression): Int =
-    VectorMath.typeCode(e.dataType.asInstanceOf[ArrayType].elementType)
+  override protected def kernel(a: Seq[Any]): Any = VectorMath.seqL2Long(
+    a(0).asInstanceOf[ArrayData], a(1).asInstanceOf[ArrayData], typeCode(left), typeCode(right))
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(IntegerType | LongType | ShortType | ByteType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"seq_l2_long needs integral array inputs, " +
-          s"got ${left.dataType.sql} / ${right.dataType.sql}")
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorMath.seqL2Long(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      code(left), code(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val (ac, bc) = (code(left), code(right))
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("il2")
-      s"""
-         |java.lang.Long $tmp = graft.functions.VectorMath.seqL2Long($a, $b, $ac, $bc);
-         |if ($tmp == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = $tmp.longValue(); }
-       """.stripMargin
-    })
-  }
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.VectorMath.seqL2Long(${a(0)}, ${a(1)}, ${typeCode(left)}, ${typeCode(right)})"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SeqL2Long =

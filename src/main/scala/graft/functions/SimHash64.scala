@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -61,28 +61,17 @@ object SimHashOps {
   * round-trip. As an expression the sketch stays inside whole-stage
   * codegen and the surrounding frame keeps its columns untouched.
   */
-@ExpressionDescription(
-  usage = "sim_hash64(text) - 64-bit SimHash of the space-separated token multiset")
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression) extends KernelCall with UnaryLike[Expression] {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sim_hash64 needs a string input, got ${other.sql}")
-    }
   override def dataType: DataType = LongType
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "sim_hash64"
+  override protected def accepts = Seq(Seq(StringType))
 
-  override protected def nullSafeEval(text: Any): Any =
-    SimHashOps.ofText(text.asInstanceOf[UTF8String])
+  override protected def kernel(a: Seq[Any]): Any =
+    SimHashOps.ofText(a(0).asInstanceOf[UTF8String])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.SimHashOps.ofText($t);")
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.SimHashOps.ofText(${a(0)})"
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)

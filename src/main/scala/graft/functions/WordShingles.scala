@@ -1,7 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -55,30 +55,20 @@ object ShingleOps {
   * scan-local; the first shuffle in the ladder is the inverted-index
   * join itself.
   */
-@ExpressionDescription(
-  usage = "word_shingles(toks, k) - distinct k-word shingles (space-joined) of a token array")
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
+case class WordShingles(child: Expression, k: Int)
+    extends KernelCall with UnaryLike[Expression] {
 
   require(k >= 2, "k >= 2 (use tokens directly for k = 1)")
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_shingles needs array<string> input, got ${other.sql}")
-    }
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "word_shingles"
+  override protected def accepts = Seq(Seq(ArrayType(StringType)))
 
-  override protected def nullSafeEval(toks: Any): Any =
-    ShingleOps.distinctShingles(toks.asInstanceOf[ArrayData], k)
+  override protected def kernel(a: Seq[Any]): Any =
+    ShingleOps.distinctShingles(a(0).asInstanceOf[ArrayData], k)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.ShingleOps.distinctShingles($t, $k);")
+  override protected def javaCall(a: Seq[String]): String =
+    s"graft.functions.ShingleOps.distinctShingles(${a(0)}, $k)"
 
   override protected def withNewChildInternal(newChild: Expression): WordShingles =
     copy(child = newChild)

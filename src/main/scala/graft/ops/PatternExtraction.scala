@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Geo, TimeOps}
+import graft.core.{Geo, Quantifiers, TimeOps}
 
 /** Stage 1 — GPS signal-loss pattern extraction, re-expressed Spark-first.
   *
@@ -191,10 +191,10 @@ object PatternExtraction {
     // Standalone variant substitutes a hardcoded vehicle allowlist here,
     // Standalone:11–16).
     val byId = Window.partitionBy("id")
-    def seen(dir: Int, pos: Int): Column = max(when(
+    def seen(dir: Int, pos: Int): Column = Quantifiers.existsFlag(
       (col("direction") === dir && col("position") === pos) ||
-        (col("direction") === dir && col("position") === 0 && col("gap_flag") === 1),
-      1).otherwise(0)).over(byId)
+        (col("direction") === dir && col("position") === 0 && col("gap_flag") === 1)
+    ).over(byId)
     val qualified = if (!cfg.qualify) guarded else guarded
       .withColumn("_c1", seen(1, 1)).withColumn("_c2", seen(2, 2))
       .filter(col("id").isNotNull && col("_c1") === 1 && col("_c2") === 1)

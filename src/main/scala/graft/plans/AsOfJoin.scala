@@ -137,7 +137,7 @@ object AsOfJoinApi {
   /** Dataset-level entry: as-of join `probe` with `build` on equal key,
     * latest `build.timeCol <= probe.timeCol` (long/µs columns), optionally
     * within `tolerance` time units. Requires [[AsOfStrategy]] injected
-    * (see [[GraftExtensions]]). */
+    * (see [[GraftExtensions.ensureStrategies]]). */
   def asofJoin(
       probe: DataFrame, build: DataFrame,
       probeKey: String, buildKey: String,

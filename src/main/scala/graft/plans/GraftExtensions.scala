@@ -1,123 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ScalaUDF}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-
-import graft.functions.Haversine
-
-/** Optimizer rule: promote the SQL-registered haversine Scala UDF
-  * (`Geo.register` installs it as `haversine_m`, mirroring the reference's
-  * `fastHaversine`, `Parallel/Pattern Extraction.scala:56`) to the native
-  * codegen'd [[Haversine]] expression. Plans written against the UDF —
-  * including `expr("CASE WHEN haversine_m(...)")` SQL fragments — execute
-  * with fused code and no boxing. */
-object NativeHaversineRule extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case u: ScalaUDF if u.udfName.contains("haversine_m") && u.children.size == 4 =>
-        Haversine(u.children(0), u.children(1), u.children(2), u.children(3))
-    }
-}
-
-/** Session extension installer:
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. Registers the
-  * native function and the UDF-promotion rule. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("haversine_native"),
-      new ExpressionInfo(classOf[Haversine].getName, "haversine_native"),
-      (args: Seq[Expression]) => {
-        require(args.size == 4, "haversine_native(lat1, lng1, lat2, lng2)")
-        Haversine(args(0), args(1), args(2), args(3))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("seq_dot"),
-      new ExpressionInfo(classOf[graft.functions.SeqDot].getName, "seq_dot"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "seq_dot(array, array)")
-        graft.functions.SeqDot(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("seq_dot_long"),
-      new ExpressionInfo(classOf[graft.functions.SeqDotLong].getName, "seq_dot_long"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "seq_dot_long(array, array)")
-        graft.functions.SeqDotLong(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("seq_l2_long"),
-      new ExpressionInfo(classOf[graft.functions.SeqL2Long].getName, "seq_l2_long"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "seq_l2_long(array, array)")
-        graft.functions.SeqL2Long(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(
-        classOf[graft.functions.JaroWinkler].getName, "jaro_winkler"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "jaro_winkler(s1, s2)")
-        graft.functions.JaroWinkler(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("geofence_mask"),
-      new ExpressionInfo(
-        classOf[graft.functions.GeofenceMask].getName, "geofence_mask"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "geofence_mask(px, py)")
-        graft.functions.GeofenceMask(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[graft.functions.WordShingles].getName, "word_shingles"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, "word_shingles(toks, k) — k a literal int")
-        val k = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"word_shingles k must be a literal int, got $other")
-        }
-        graft.functions.WordShingles(args(0), k)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("sim_hash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "sim_hash64"),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, "sim_hash64(text)")
-        graft.functions.SimHash64(args(0))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("normalize_unicode"),
-      new ExpressionInfo(
-        classOf[graft.functions.NormalizeUnicode].getName, "normalize_unicode"),
-      (args: Seq[Expression]) => {
-        require(args.size == 2,
-          "normalize_unicode(text, form) — form a literal string")
-        val form = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) if v != null =>
-            v.toString
-          case other => throw new IllegalArgumentException(
-            s"normalize_unicode form must be a literal string, got $other")
-        }
-        graft.functions.NormalizeUnicode(args(0), form)
-      }))
-    ext.injectOptimizerRule(_ => NativeHaversineRule)
-    ext.injectPlannerStrategy(_ => AsOfStrategy)
-    ext.injectPlannerStrategy(_ => IntervalStrategy)
-  }
-}
+import org.apache.spark.sql.SparkSession
 
 object GraftExtensions {
-  /** Install the custom-operator strategies on an already-built session —
-    * for hosts that construct a plain `SparkSession` (the driver's
-    * Verify/Bench harness) where builder-time `withExtensions` isn't
-    * reachable. Idempotent. */
-  def ensureStrategies(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Install the custom-operator strategies ([[AsOfStrategy]],
+    * [[IntervalStrategy]]) on an already-built session — the one way this
+    * project plans its custom joins, for any host that constructs a plain
+    * `SparkSession`. Idempotent. */
+  def ensureStrategies(spark: SparkSession): Unit =
     spark.synchronized {
       val cur = spark.experimental.extraStrategies
       val add = Seq(AsOfStrategy, IntervalStrategy).filterNot(cur.contains)

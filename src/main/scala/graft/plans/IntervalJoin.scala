@@ -137,7 +137,7 @@ object IntervalJoinApi {
   /** Interval join on equal `key` and `|probeTime − buildTime| ≤
     * windowMicros` (long/µs time columns); `leftOuter = true` keeps
     * unmatched probe rows with nulls. Requires [[IntervalStrategy]]
-    * injected (see [[GraftExtensions]]). */
+    * injected (see [[GraftExtensions.ensureStrategies]]). */
   def intervalJoin(
       probe: DataFrame, build: DataFrame,
       probeKey: String, buildKey: String,

@@ -704,18 +704,4 @@ object StreamOps {
       dim: DataFrame, // static side (batch DataFrame)
       keys: Seq[String]): DataFrame =
     events.join(broadcast(dim), keys, "left")
-
-  /** Native streaming session_window agg — the built-in twin of
-    * [[sessionize]] for when per-session custom state isn't needed. */
-  def sessionWindowCounts(
-      events: DataFrame, // needs (t: timestamp, user_id)
-      gap: String,
-      watermarkDelay: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("t", watermarkDelay)
-      .groupBy(col("user_id"), session_window(col("t"), gap))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"),
-        unix_micros(col("session_window.start")).as("session_start_us"),
-        col("n_events"))
 }

@@ -50,15 +50,4 @@ class GeoSpec extends SparkSpec {
       assert(math.abs(Geo.haversineM(a, b, c, d) - g) < 1e-6)
     }
   }
-
-  test("equirect approximation close to haversine at city scale") {
-    (1 to 200).foreach { _ =>
-      val la = 22.0 + rnd.nextDouble()
-      val lo = 113.0 + rnd.nextDouble()
-      val (dla, dlo) = (rnd.nextDouble() * 0.04 - 0.02, rnd.nextDouble() * 0.04 - 0.02)
-      val h = Geo.haversineM(la, lo, la + dla, lo + dlo)
-      val e = Geo.equirectM(la, lo, la + dla, lo + dlo)
-      assert(math.abs(h - e) < math.max(1.0, h * 0.005))
-    }
-  }
 }

@@ -37,16 +37,6 @@ class TrajectoryPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("equirect ≈ haversine at city scale (500 samples)") {
-    (1 to 500).foreach { _ =>
-      val p = (22.4 + rnd.nextDouble() * 0.4, 113.8 + rnd.nextDouble() * 0.6)
-      val q = (22.4 + rnd.nextDouble() * 0.4, 113.8 + rnd.nextDouble() * 0.6)
-      val h = Geo.haversineM(p._1, p._2, q._1, q._2)
-      val e = Geo.equirectM(p._1, p._2, q._1, q._2)
-      assert(math.abs(h - e) <= math.max(1.0, h * 0.01), s"drift: h=$h e=$e")
-    }
-  }
-
   private def cityTraj(): IndexedSeq[P] = {
     val n = 2 + rnd.nextInt(6)
     IndexedSeq.fill(n)(P(113.8 + rnd.nextDouble() * 0.6, 22.4 + rnd.nextDouble() * 0.4))

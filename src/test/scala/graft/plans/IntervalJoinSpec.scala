@@ -14,12 +14,12 @@ class IntervalJoinSpec extends AnyFunSuite {
     SparkSession.clearDefaultSession()
     val s = SparkSession.builder()
       .master("local[4]")
-      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     SparkSession.setDefaultSession(SparkTestSession.spark)
     SparkSession.setActiveSession(SparkTestSession.spark)
+    GraftExtensions.ensureStrategies(s)
     s
   }
 

@@ -209,17 +209,6 @@ class StreamOpsSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("streaming session_window agrees with batch session_window") {
-    val rows = runBatches(
-      Seq(Seq(ev(1, 0, 1.0), ev(1, 5, 1.0), ev(1, 40, 1.0)),
-        Seq(ev(1, 120, 1.0))),
-      ds => StreamOps.sessionWindowCounts(ds.toDF(), "10 minutes", "1 minute"))
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rows == Set(
-      (1L, BaseUs, 2L), // minutes 0+5 merge (gap 5 < 10)
-      (1L, BaseUs + 40L * 60L * 1000000L, 1L)))
-  }
-
   test("stream-static enrichment join matches the batch broadcast join") {
     val dim = Seq((1L, "gold"), (2L, "basic")).toDF("user_id", "tier")
     val rows = runBatches(
